@@ -97,7 +97,10 @@ def cosine_sql(vec_sql: str, query_vec) -> F.Column:
 
 
 def srp_bucket_sql_col(vec_sql: str, table_planes: list[list[float]]) -> F.Column:
-    """``srp_bucket_col`` built via one F.expr (identical bucket values)."""
+    """``srp_bucket_col`` built via one F.expr (identical bucket values).
+    With no planes every vector lands in bucket 0, as in srp_bucket_col."""
+    if not table_planes:
+        return F.lit(0)
     terms = " + ".join(
         f"(CASE WHEN {_dot_sql(vec_sql, vector_sql(p))} > 0 "
         f"THEN {2 ** i} ELSE 0 END)"

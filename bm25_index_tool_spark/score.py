@@ -1,4 +1,4 @@
-"""Top-k BM25 scoring — DataFrame-join plan (SURVEY.md §2.4 plan 1).
+"""Top-k BM25 scoring — one SQL statement per query (SURVEY.md §2.4 plan 1).
 
 Replaces the reference's single SQL statement
 (reference ``storage/sqlite_storage.py:663-671``)::
@@ -8,14 +8,16 @@ Replaces the reference's single SQL statement
     WHERE documents_fts MATCH ?      -- implicit AND of query tokens
     ORDER BY bm25(documents_fts) LIMIT ?
 
-with a declarative Spark plan whose physical shape Catalyst compiles to:
+with one parameterised ``spark.sql`` statement over the live index frames
+(``_score_statement``) whose physical shape Catalyst compiles to:
 
     bucket-pruned parquet scan of postings (only the term-hash buckets the
-    query touches — explicit IN predicate, see murmur.py)
-      → broadcast semi-join with the tiny query-terms DataFrame
-      → per-(term,doc) partial BM25 (pure Column expressions, whole-stage
+    query touches — explicit IN predicate, see murmur.py) with the query
+    terms as a pushed filter
+      → broadcast join with the ≤|terms|-row termstats slice
+      → per-(term,doc) partial BM25 (pure expressions, whole-stage
         codegen; dl is denormalized in postings so no N-row join)
-      → hash-agg by doc_id: sum(partial), count(distinct term)
+      → hash-agg by doc_id: sum(partial), count(*)
       → conjunctive filter  count == |distinct query terms|
       → TakeOrderedAndProject(score DESC, doc_id ASC, limit k)
       → broadcast join of the ≤k winners back to the docs table
@@ -238,17 +240,49 @@ class LoadedIndex:
         self._cached = None
 
 
-def idf_column(df_col: F.Column, n_docs: int) -> F.Column:
-    """FTS5 idf with the 1e-6 clamp for non-positive values."""
-    raw = F.log((F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5))
-    return F.when(raw <= 0.0, F.lit(IDF_EPSILON)).otherwise(raw)
+def _dbl(x: float) -> str:
+    """Exact SQL double literal: ``repr`` round-trips every float, so the
+    SQL text carries bit-for-bit the constant a ``F.lit`` would."""
+    return f"{float(x)!r}D"
 
 
-def bm25_partial(tf: F.Column, dl: F.Column, idf: F.Column, k1: float, b: float, avgdl: float) -> F.Column:
-    """Per-(term, doc) BM25 contribution — a pure Column expression that
-    stays inside whole-stage codegen."""
-    denom = tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
-    return idf * tf * F.lit(k1 + 1.0) / denom
+def idf_sql(df: str, n_docs: int) -> str:
+    """FTS5 idf with the 1e-6 clamp for non-positive values, as SQL text
+    over the df expression ``df``."""
+    raw = f"ln(({_dbl(n_docs)} - {df} + 0.5D) / ({df} + 0.5D))"
+    return f"CASE WHEN {raw} <= 0.0D THEN {_dbl(IDF_EPSILON)} ELSE {raw} END"
+
+
+def bm25_partial_sql(
+    tf: str, dl: str, idf: str, k1: float, b: float, avgdl: float
+) -> str:
+    """THE BM25 formula: per-(term, doc) contribution as SQL text,
+    ((idf*tf)*(k1+1))/(tf + k1*((1-b) + b*dl/avgdl)).  Every scorer builds
+    from this one text (the single-query statement directly, the batch
+    scorer through bm25_partial), and wand._partial mirrors its float
+    association."""
+    denom = f"{tf} + {_dbl(k1)} * ({_dbl(1.0 - b)} + {_dbl(b)} * {dl} / {_dbl(avgdl)})"
+    return f"({idf}) * {tf} * {_dbl(k1 + 1.0)} / ({denom})"
+
+
+def idf_column(df_col: str, n_docs: int) -> F.Column:
+    """idf_sql over the column named ``df_col``."""
+    return F.expr(idf_sql(df_col, n_docs))
+
+
+def bm25_partial(
+    tf: str, dl: str, idf: str, k1: float, b: float, avgdl: float
+) -> F.Column:
+    """bm25_partial_sql over the named columns — a pure Column expression
+    that stays inside whole-stage codegen."""
+    return F.expr(bm25_partial_sql(tf, dl, idf, k1, b, avgdl))
+
+
+def doc_pt_sql(doc_id: str, num_buckets: int, type_name: str) -> str:
+    """The docs table's partition key of ``doc_id`` — the build-side twin
+    of build.py's doc_pt assignment (pmod(doc_id, num_buckets)); a
+    mismatch would silently drop winners."""
+    return f"CAST(pmod({doc_id}, {int(num_buckets)}) AS {type_name})"
 
 
 def score_query(
@@ -259,7 +293,7 @@ def score_query(
     include_content: bool = True,
 ) -> DataFrame:
     """Top-k BM25 over one query string; result columns
-    (doc_id, path, filename, score[, content, content_sha256]).
+    (doc_id, path, filename, content_sha256, score[, content]).
 
     Raises ValueError for a query with no searchable tokens (reference
     ``core/searcher.py:63-68`` behavior).
@@ -275,18 +309,14 @@ def with_winner_doc_pt(
     return (winners, join_keys): joining the broadcast winners on
     (doc_id, doc_pt) makes Catalyst emit DynamicPartitionPruning on the
     docs scan — the content fetch reads ≤k partitions instead of the whole
-    table (VERDICT r04 #5).  ONE owner for the formula, which must stay
-    the build-side twin of build.py's doc_pt assignment
-    (pmod(doc_id, num_buckets)); a mismatch would silently drop winners.
-    Legacy pre-doc_pt bases join on doc_id alone."""
+    table (VERDICT r04 #5).  The formula is doc_pt_sql's.  Legacy
+    pre-doc_pt bases join on doc_id alone."""
     if "doc_pt" not in docs.columns:
         return topk, ["doc_id"]
+    pt_type = docs.schema["doc_pt"].dataType.simpleString()
     return (
         topk.withColumn(
-            "doc_pt",
-            F.pmod(F.col("doc_id"), F.lit(num_buckets)).cast(
-                docs.schema["doc_pt"].dataType
-            ),
+            "doc_pt", F.expr(doc_pt_sql("doc_id", num_buckets, pt_type))
         ),
         ["doc_id", "doc_pt"],
     )
@@ -295,11 +325,13 @@ def with_winner_doc_pt(
 def fetch_winner_docs(
     index: LoadedIndex, winners: DataFrame, doc_cols: list[str]
 ) -> DataFrame:
-    """THE winners→docs fetch, shared by every scorer (code-review r05:
-    four hand-rolled copies had already started diverging): broadcast the
-    ≤k-row winners frame into the docs table, joined on (doc_id, doc_pt)
-    so the scan is DynamicPartitionPruning-pruned to ≤k partitions.
-    Returns winners' columns + ``doc_cols`` from the docs side."""
+    """THE winners→docs fetch of the DataFrame scorers (batch, WAND;
+    code-review r05: four hand-rolled copies had already started
+    diverging): broadcast the ≤k-row winners frame into the docs table,
+    joined on (doc_id, doc_pt) so the scan is DynamicPartitionPruning-
+    pruned to ≤k partitions.  The single-query statement states the same
+    join in SQL.  Returns winners' columns + ``doc_cols`` from the docs
+    side."""
     docs = index.docs()
     w, keys = with_winner_doc_pt(winners, docs, index.manifest.num_buckets)
     sel = ["doc_id", *doc_cols] + (["doc_pt"] if "doc_pt" in keys else [])
@@ -310,18 +342,20 @@ def score_stage_frames(
     index: LoadedIndex, query: str, top_k: int = 10
 ) -> dict[str, DataFrame]:
     """Diagnostic sub-plans of the scorer for stage attribution (bench.py
-    query_stage_*; VERDICT r04 #5).  Each frame re-runs its upstream when
-    actioned, so interpret timings as deltas: ``scored_count`` ≈ postings
-    scan + broadcast joins + conjunctive agg over ALL matches; ``topk`` −
-    that ≈ global top-k; ``full`` − ``topk`` ≈ the winners/docs fetch."""
+    query_stage_*; VERDICT r04 #5), cut from the same statement text.
+    Each frame re-runs its upstream when actioned, so interpret timings as
+    deltas: ``scored_count`` ≈ postings scan + broadcast join +
+    conjunctive agg over ALL matches; ``topk`` − that ≈ global top-k;
+    ``full`` − ``topk`` ≈ the winners/docs fetch."""
     tokens = tokenize_fts5_query(query)
-    plan = _score_plan(index, tokens, top_k, include_content=False)
+
+    def stage(name: str) -> DataFrame:
+        return _score_statement(index, tokens, top_k, False, stage=name)
+
     return {
-        "scored_count": plan["scored"].agg(
-            F.count("*").alias("n_matches")
-        ),
-        "topk": plan["topk"],
-        "full": plan["full"],
+        "scored_count": stage("scored").agg(F.count("*").alias("n_matches")),
+        "topk": stage("topk"),
+        "full": stage("result"),
     }
 
 
@@ -332,78 +366,94 @@ def score_tokens(
     *,
     include_content: bool = True,
 ) -> DataFrame:
-    return _score_plan(index, tokens, top_k, include_content)["full"]
+    return _score_statement(index, tokens, top_k, include_content)
 
 
-def _score_plan(
+def _score_statement(
     index: LoadedIndex,
     tokens: list[str],
     top_k: int,
     include_content: bool,
-) -> dict[str, DataFrame]:
+    *,
+    stage: str = "result",
+) -> DataFrame:
+    """The single-query scorer as ONE parameterised ``spark.sql``
+    statement, whose physical shape Catalyst compiles to the plan in the
+    module docstring.  The live index frames (segments and tombstones
+    included) go in as DataFrame arguments and every query term as a
+    ``:tN`` parameter marker — never formatted into the text.  Building it
+    costs a handful of py4j round trips instead of one per Column
+    operator.  ``stage`` cuts the statement after its ``scored`` or
+    ``topk`` step (score_stage_frames)."""
+    if not tokens:
+        raise ValueError("Query produced no searchable tokens")
     m = index.manifest
     k1, b = m.params.k1, m.params.b
 
     from collections import Counter
 
+    # duplicate-token multiplicity: FTS5 'apple apple' sums the term's
+    # partial twice
     tok_counts = Counter(tokens)
-    n_distinct = len(tok_counts)
-    buckets = sorted({term_bucket(t, m.num_buckets) for t in tok_counts})
-
-    # Explicit bucket-pruning predicate (Catalyst can't infer it, SURVEY §4.3)
-    post = index.postings().where(F.col("bucket").isin(buckets))
-    stats = index.termstats().where(F.col("bucket").isin(buckets))
-
-    # The query terms are DRIVER literals: an isin pushdown-able filter +
-    # a literal map for q_mult (duplicate-token multiplicity — FTS5 'apple
-    # apple' sums the term's partial twice) replaces the former 2-3-row
-    # DataFrame broadcast join — one less broadcast exchange (and its
-    # build job) per query, and the term predicate now reaches the parquet
-    # scan as a pushed filter instead of a join.
     terms = sorted(tok_counts)
-    q_mult_map = F.create_map(
-        *[F.lit(x) for t in terms for x in (t, int(tok_counts[t]))]
+    args = {f"t{i}": t for i, t in enumerate(terms)}
+    markers = ", ".join(f":{p}" for p in args)
+    q_mult = " ".join(
+        f"WHEN :t{i} THEN {tok_counts[t]}" for i, t in enumerate(terms)
     )
-    per_term = (
-        post.where(F.col("term").isin(terms))
-        .join(
-            # term filter on the stats side too: the broadcast hash holds
-            # ≤|terms| rows instead of every term in the touched buckets,
-            # and the predicate pushes to the termstats scan
-            F.broadcast(
-                stats.where(F.col("term").isin(terms)).select("term", "df")
-            ),
-            "term",
-        )
-        .withColumn("q_mult", q_mult_map[F.col("term")])
-        .withColumn("idf", idf_column(F.col("df"), m.num_docs))
-        .withColumn(
-            "partial",
-            bm25_partial(F.col("tf"), F.col("dl"), F.col("idf"), k1, b, m.avgdl)
-            * F.col("q_mult"),
-        )
+    # Explicit bucket-pruning predicate (Catalyst can't infer it, SURVEY
+    # §4.3); the term predicate reaches both scans as a pushed filter, so
+    # the broadcast termstats side holds ≤|terms| rows
+    buckets = ", ".join(
+        str(x) for x in sorted({term_bucket(t, m.num_buckets) for t in terms})
     )
-
-    scored = (
-        per_term.groupBy("doc_id")
-        .agg(F.sum("partial").alias("score"), F.count("*").alias("_nt"))
-        .where(F.col("_nt") == F.lit(n_distinct))  # conjunctive AND
-        .drop("_nt")
+    partial = bm25_partial_sql(
+        "p.tf", "p.dl", idf_sql("s.df", m.num_docs), k1, b, m.avgdl
     )
-
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
-
-    doc_cols = ["full_path", "filename", "content_sha256"]
-    if include_content:
-        doc_cols.append("content")
-    result = (
-        fetch_winner_docs(index, topk, doc_cols)
-        .withColumnRenamed("full_path", "path")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .select("doc_id", "path", "filename", "content_sha256", "score",
-                *(["content"] if include_content else []))
+    text = f"""
+WITH scored AS (
+  SELECT /*+ BROADCAST(s) */ p.doc_id,
+         sum(({partial}) * (CASE p.term {q_mult} END)) AS score
+  FROM {{post}} p
+  JOIN (SELECT term, df FROM {{stats}}
+        WHERE bucket IN ({buckets}) AND term IN ({markers})) s
+    ON p.term = s.term
+  WHERE p.bucket IN ({buckets}) AND p.term IN ({markers})
+  GROUP BY p.doc_id
+  HAVING count(*) = {len(terms)}
+),
+topk AS (
+  SELECT doc_id, score FROM scored
+  ORDER BY score DESC, doc_id ASC LIMIT {int(top_k)}
+)
+"""
+    docs = index.docs()
+    if stage != "result":
+        text += f"SELECT * FROM {stage}"
+    else:
+        # broadcast the ≤k winners into docs on (doc_id, doc_pt): Catalyst
+        # emits DynamicPartitionPruning on the docs scan, so the content
+        # fetch reads ≤k partitions (VERDICT r04 #5); legacy pre-doc_pt
+        # bases join on doc_id alone
+        if "doc_pt" in docs.columns:
+            pt_type = docs.schema["doc_pt"].dataType.simpleString()
+            pt = f", {doc_pt_sql('doc_id', m.num_buckets, pt_type)} AS doc_pt"
+            on_pt = " AND w.doc_pt = d.doc_pt"
+        else:
+            pt = on_pt = ""
+        content = ", d.content" if include_content else ""
+        text += f"""SELECT /*+ BROADCAST(w) */ w.doc_id, d.full_path AS path,
+       d.filename, d.content_sha256, w.score{content}
+FROM (SELECT doc_id, score{pt} FROM topk) w
+JOIN {{docs}} d ON w.doc_id = d.doc_id{on_pt}
+ORDER BY w.score DESC, w.doc_id ASC"""
+    return index.spark.sql(
+        text,
+        args=args,
+        post=index.postings(),
+        stats=index.termstats(),
+        docs=docs,
     )
-    return {"scored": scored, "topk": topk, "full": result}
 
 
 def score_query_batch(
@@ -522,11 +572,10 @@ def score_query_batch(
 
     per_term = (
         per_term.join(F.broadcast(stats.select("term", "df")), "term")
-        .withColumn("idf", idf_column(F.col("df"), m.num_docs))
+        .withColumn("idf", idf_column("df", m.num_docs))
         .withColumn(
             "partial",
-            bm25_partial(F.col("tf"), F.col("dl"), F.col("idf"), k1, b, m.avgdl)
-            * F.col("q_mult"),
+            bm25_partial("tf", "dl", "idf", k1, b, m.avgdl) * F.col("q_mult"),
         )
     )
     scored = (

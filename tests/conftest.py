@@ -77,5 +77,6 @@ QUERY_SET = [
     "zanzibar",                     # rare term
     "zzz_not_present",              # empty result set
     "apple apple",                  # duplicate query token multiplicity
+    "banana apple banana",          # duplicate token beside a single one
     "spark partition shuffle",      # 3-term AND
 ]

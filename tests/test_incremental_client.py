@@ -283,6 +283,85 @@ def test_search_multi_and_cache_and_history(spark, client):
     assert client.history.count() == 1
 
 
+def _log_many(history_dir: str, tag: str, n: int, start) -> None:
+    from bm25_index_tool_spark.history import SearchHistory
+
+    h = SearchHistory(None, history_dir)  # logging needs no Spark session
+    start.wait(60)  # both writers append at the same time
+    for i in range(n):
+        # long lines: an interleaved write would split one of them
+        h.log(["idx"], f"{tag}-{i} " + tag * 2000, 10, i, 0.001 * i)
+
+
+def test_history_concurrent_appends_from_two_processes(spark, tmp_path):
+    """Two processes append to one history log at once; every entry reads
+    back whole (one O_APPEND write per line, never interleaved)."""
+    import multiprocessing
+
+    from bm25_index_tool_spark.history import SearchHistory
+
+    hdir = str(tmp_path / "_history")
+    n = 500
+    # spawn, not fork: this process runs the Spark gateway's threads
+    ctx = multiprocessing.get_context("spawn")
+    start = ctx.Barrier(2)
+    procs = [
+        ctx.Process(target=_log_many, args=(hdir, tag, n, start))
+        for tag in "ab"
+    ]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(60)
+        assert p.exitcode == 0
+    h = SearchHistory(spark, hdir)
+    assert h.count() == 2 * n
+    got = sorted(r["query"] for r in h.df().select("query").collect())
+    want = sorted(
+        f"{tag}-{i} " + tag * 2000 for tag in "ab" for i in range(n)
+    )
+    assert got == want
+
+
+def test_history_reads_legacy_parquet_alongside_jsonl(spark, tmp_path):
+    """A root written by the former parquet-append log keeps its history:
+    legacy part files show in recent/count/stats beside new JSONL entries,
+    and clear() deletes both."""
+    import os
+
+    from bm25_index_tool_spark.history import HISTORY_SCHEMA, SearchHistory
+
+    hdir = str(tmp_path / "_history")
+    legacy = [
+        (1, "2024-01-01T00:00:00", '["old"]', "legacy query", 10, 3, 0.5,
+         "[]", "[]"),
+        (2, "2024-01-02T00:00:00", '["old"]', "legacy query", 10, 2, 1.5,
+         "[]", "[]"),
+    ]
+    for row in legacy:  # the former log's write shape, one file per search
+        spark.createDataFrame([row], HISTORY_SCHEMA).write.mode(
+            "append"
+        ).parquet(hdir)
+    h = SearchHistory(spark, hdir)
+    assert h.count() == 2
+    h.log(["new"], "fresh query", 5, 1, 0.25)
+    assert h.count() == 3
+    assert [r["query"] for r in h.recent(10)] == [
+        "fresh query", "legacy query", "legacy query",
+    ]
+    assert [r["id"] for r in h.search("legacy", 10)] == [2, 1]
+    st = h.stats(top_n=5)
+    assert st["total"] == 3
+    assert st["top_queries"][0] == {
+        "query": "legacy query", "count": 2, "avg_elapsed_seconds": 1.0,
+    }
+    assert h.clear() == 3
+    assert h.count() == 0
+    assert not os.path.exists(hdir)
+    h.log(["new"], "after clear", 5, 0, 0.1)
+    assert [r["query"] for r in h.recent()] == ["after clear"]
+
+
 def test_client_block_engine(spark, client):
     rows = C.generate_rows(40, seed=21)
     client.create_index(

@@ -144,6 +144,19 @@ def test_brute_force_and_lsh_cosine(spark):
     assert all(r["cosine"] >= 0.99 for r in pairs)
 
 
+def test_srp_bucket_sql_col_empty_planes(spark):
+    """No planes: every vector is in bucket 0, like srp_bucket_col — the
+    SQL twin must not build the unparsable ``0 + ``."""
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [-1.0, 0.5])], "vec_id long, embedding array<float>"
+    )
+    got = emb.select(
+        SS.srp_bucket_sql_col("`embedding`", []).alias("sql"),
+        SS.srp_bucket_col(F.col("embedding"), []).alias("col"),
+    ).collect()
+    assert [(r["sql"], r["col"]) for r in got] == [(0, 0), (0, 0)]
+
+
 def test_srp_ann_recall(spark, tmp_path):
     """Recall@20 ≥ 0.9 vs brute force on a CLUSTERED corpus (the regime ANN
     parameters target: near neighbors at cosine ≳ 0.95).  16 bits × 16

@@ -13,7 +13,12 @@ import math
 
 import pytest
 
-from bm25_index_tool_spark.score import score_query, score_query_batch
+from bm25_index_tool_spark.score import (
+    score_query,
+    score_query_batch,
+    score_stage_frames,
+    score_tokens,
+)
 from tests.conftest import QUERY_SET
 
 SEARCHABLE = [q for q in QUERY_SET]
@@ -86,6 +91,31 @@ def test_rank_identity_with_zero_token_docs(spark, tmp_path):
         assert [r["doc_id"] for r in got] == [e[0] for e in expected], q
         for e, g in zip(expected, got):
             assert math.isclose(e[4], g["score"], rel_tol=1e-9), (q, e, g)
+
+
+@pytest.mark.parametrize("query", ["apple", "data value", "apple apple"])
+def test_stage_frames_full_is_the_scorer(small_index, query):
+    """bench.py's query_stage_* frames are cut from the scorer's own
+    statement: the full stage collects to exactly score_query's rows."""
+    stages = score_stage_frames(small_index, query, 10)
+    got = stages["full"].collect()
+    assert got == score_query(small_index, query, 10, include_content=False).collect()
+    assert got
+
+
+@pytest.mark.parametrize(
+    "tokens",
+    [
+        ["o'neil", "back\\slash", "semi;colon"],
+        ["{post}", ":t0"],
+        ["apple", "x' OR '1'='1"],
+    ],
+)
+def test_tokens_are_bound_not_formatted(small_index, tokens):
+    """Query terms reach the scorer's SQL statement as bound parameters:
+    quotes, backslashes, semicolons, braces and marker-like text match
+    nothing and never break the statement."""
+    assert score_tokens(small_index, tokens).collect() == []
 
 
 def test_empty_query_raises(small_index):
