@@ -18,8 +18,20 @@ answer instead (Lucene segments + deletes; Delta/Iceberg/Hudi MOR):
     postings  = (base ∪ segments) ⟕anti tombstones
     docs      = (base ∪ segments) ⟕anti tombstones
     termstats = Σ df over (base ∪ df-adjustment segments), df > 0
-  Bucket/doc_pt partition pruning pushes through the union and the
+  The query's bucket IN (...) predicate pushes through the union and the
   broadcast anti-join, so query plans keep their shape;
+* **segment layout**: the base tables stay directory-partitioned
+  (``bucket=``/``doc_pt=``, pruned by PartitionFilters and, on docs, by
+  dynamic partition pruning).  A segment table is flat: one sorted parquet
+  file per write task, with ``bucket``/``doc_pt`` as ordinary data columns
+  sorted first — postings by (bucket, term, doc_id), termstats by
+  (bucket, term), docs by (doc_pt, doc_id) — so the same predicate prunes
+  segment row groups by their min/max statistics (PushedFilters).  Per-file
+  writer cost, not data volume, dominates a small update: partitioned, a
+  300-doc segment was 96 files in 32 dirs per table, and every tiered
+  merge rewrote all of them.  Segments are read with declared schemas (no
+  footer-inference job); dirs staged in the old partitioned layout stay
+  readable and are rewritten flat by the next merge or compaction;
 * write IO is ∝ delta: tokenize added∪modified, RE-tokenize the removed
   docs' old content (delta-sized) to derive the negative df adjustments
   and removed token counts — never a postings-table scan;
@@ -50,6 +62,7 @@ import threading
 import time as _time_mod
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 POSTINGS_SEG_DIR = "postings_seg"
 TERMSTATS_SEG_DIR = "termstats_seg"
@@ -70,6 +83,12 @@ _SEG_DIRS = (
     VECTOR_SEG_DIR,
     VECTOR_TS_DIR,
 )
+
+# declared segment schemas: reads skip the parquet footer-inference job
+# (docs_seg takes the docs base's schema, see _docs_seg_schema)
+POSTINGS_SEG_SCHEMA = "term STRING, doc_id BIGINT, tf INT, dl INT, bucket INT"
+TERMSTATS_SEG_SCHEMA = "term STRING, df_delta BIGINT, bucket INT"
+TOMBSTONES_SCHEMA = "doc_id BIGINT"
 
 # ---------------------------------------------------------------------------
 # Inter-process write lock
@@ -309,6 +328,18 @@ def _seg_dir_id(path: str) -> int:
     return int(os.path.basename(path).split("=", 1)[1])
 
 
+def _seg_layout(path: str) -> str | None:
+    """``"flat"`` for a dir of sorted part files, ``"legacy"`` for the old
+    ``bucket=``/``doc_pt=`` subdirectory layout, None when the dir holds no
+    data (a partitioned write of an empty relation leaves only _SUCCESS)."""
+    names = os.listdir(path)
+    if any(n.endswith(".parquet") for n in names):
+        return "flat"
+    if any("=" in n for n in names):
+        return "legacy"
+    return None
+
+
 def _read_all_segments(
     spark: SparkSession,
     index_dir: str,
@@ -316,41 +347,57 @@ def _read_all_segments(
     keep_seg: bool = False,
     upto: int | None = None,
     after: int | None = None,
+    schema: StructType | str | None = None,
 ):
     """Union of all committed segments of one table (None when empty).
-    Explicit seg-dir paths + basePath keep partition discovery working
-    (``seg``/``bucket``/``doc_pt`` columns) while ignoring staging dirs;
-    the ``seg`` column is dropped — readers never care which segment a row
-    came from.  ``upto`` restricts to segment ids ≤ upto (tiered merge);
-    ``after`` to ids > after (ANN fold absorption skips absorbed dirs
-    entirely — no scan is even scheduled)."""
-    def _has_parquet(p: str) -> bool:
-        for dp, _d, fs in os.walk(p):
-            if any(f.endswith(".parquet") for f in fs):
-                return True
-        return False
-
-    # a delete-only (or add-only) update commits an EMPTY segment for some
-    # tables — a partitioned write of an empty relation leaves only
-    # _SUCCESS, which is unreadable and contributes nothing; skip those
-    dirs = [
-        d for d in _committed_seg_dirs(index_dir, table_dir) if _has_parquet(d)
-    ]
-    if upto is not None:
-        dirs = [d for d in dirs if _seg_dir_id(d) <= upto]
-    if after is not None:
-        dirs = [d for d in dirs if _seg_dir_id(d) > after]
-    if not dirs:
+    Explicit seg-dir paths + basePath keep the ``seg`` column coming from
+    the path while ignoring staging dirs; the ``seg`` column is dropped
+    unless ``keep_seg`` — readers never care which segment a row came
+    from.  ``schema`` skips the parquet footer-inference job (the LSM
+    tables always pass one; the vector tables infer).  ``upto`` restricts
+    to segment ids ≤ upto (tiered merge); ``after`` to ids > after (ANN
+    fold absorption skips absorbed dirs entirely — no scan is even
+    scheduled)."""
+    groups: dict[str, list[str]] = {}
+    for d in _committed_seg_dirs(index_dir, table_dir):
+        sid = _seg_dir_id(d)
+        if (upto is not None and sid > upto) or (
+            after is not None and sid <= after
+        ):
+            continue
+        layout = _seg_layout(d)
+        if layout is not None:
+            groups.setdefault(layout, []).append(d)
+    if not groups:
         return None
-    root = os.path.join(index_dir, table_dir)
-    df = spark.read.option("basePath", root).parquet(*dirs)
+    reader = spark.read.option("basePath", os.path.join(index_dir, table_dir))
+    if schema is not None:
+        reader = reader.schema(schema)
+    # segments staged before the flat layout keep their bucket=/doc_pt=
+    # subdirs until the next merge or compaction; Spark rejects mixed
+    # partition layouts in one parquet() call, so each layout is read on
+    # its own and the two are unioned by name
+    df = functools.reduce(
+        DataFrame.unionByName, [reader.parquet(*ds) for ds in groups.values()]
+    )
     if keep_seg:
         return df
-    return df.drop("seg") if "seg" in df.columns else df
+    return df.drop("seg")
+
+
+def _docs_seg_schema(docs_base: DataFrame) -> StructType:
+    """docs_seg rows carry the base's columns plus ``doc_pt`` (the base's
+    partition type, int), also over a legacy pre-doc_pt base."""
+    fields = list(docs_base.schema.fields)
+    if "doc_pt" not in docs_base.columns:
+        fields.append(StructField("doc_pt", IntegerType()))
+    return StructType(fields)
 
 
 def tombstones(spark: SparkSession, index_dir: str):
-    return _read_all_segments(spark, index_dir, TOMBSTONES_DIR)
+    return _read_all_segments(
+        spark, index_dir, TOMBSTONES_DIR, schema=TOMBSTONES_SCHEMA
+    )
 
 
 def max_ever_doc_id(
@@ -361,7 +408,9 @@ def max_ever_doc_id(
     count.  Legacy fallback for manifests without ``next_doc_id`` —
     deriving it from the tombstone-filtered live view reused dead ids,
     whose new rows the anti-join then hid (ADVICE r03, high)."""
-    seg = _read_all_segments(spark, index_dir, DOCS_SEG_DIR)
+    seg = _read_all_segments(
+        spark, index_dir, DOCS_SEG_DIR, schema=_docs_seg_schema(docs_base)
+    )
     allrows = (
         docs_base
         if seg is None
@@ -378,13 +427,17 @@ def _anti_tombstones(df: DataFrame, ts) -> DataFrame:
 
 
 def postings_view(spark: SparkSession, index_dir: str, base: DataFrame) -> DataFrame:
-    seg = _read_all_segments(spark, index_dir, POSTINGS_SEG_DIR)
+    seg = _read_all_segments(
+        spark, index_dir, POSTINGS_SEG_DIR, schema=POSTINGS_SEG_SCHEMA
+    )
     out = base if seg is None else base.unionByName(seg.select(*base.columns))
     return _anti_tombstones(out, tombstones(spark, index_dir))
 
 
 def docs_view(spark: SparkSession, index_dir: str, base: DataFrame) -> DataFrame:
-    seg = _read_all_segments(spark, index_dir, DOCS_SEG_DIR)
+    seg = _read_all_segments(
+        spark, index_dir, DOCS_SEG_DIR, schema=_docs_seg_schema(base)
+    )
     out = base if seg is None else base.unionByName(seg.select(*base.columns))
     return _anti_tombstones(out, tombstones(spark, index_dir))
 
@@ -392,7 +445,9 @@ def docs_view(spark: SparkSession, index_dir: str, base: DataFrame) -> DataFrame
 def termstats_view(spark: SparkSession, index_dir: str, base: DataFrame) -> DataFrame:
     """df per term = base df + Σ segment adjustments; terms whose df drops
     to 0 disappear (all their docs tombstoned)."""
-    seg = _read_all_segments(spark, index_dir, TERMSTATS_SEG_DIR)
+    seg = _read_all_segments(
+        spark, index_dir, TERMSTATS_SEG_DIR, schema=TERMSTATS_SEG_SCHEMA
+    )
     if seg is None:
         return base
     unioned = base.select("term", "df", "bucket").unionByName(
@@ -501,6 +556,26 @@ def _sized_parallelism(
     if n_rows is None:
         return full
     return max(1, min(full, n_rows // rows_per_task + 1))
+
+
+# sort keys of the flat segment files: the bucket/doc_pt prefix keeps each
+# row group's min/max tight, so a query's bucket IN (...) skips the rest
+_POSTINGS_SORT = ("bucket", "term", "doc_id")
+_TERMSTATS_SORT = ("bucket", "term")
+_DOCS_SORT = ("doc_pt", "doc_id")
+
+
+def _write_flat(df: DataFrame, path: str, n_tasks: int, sort_cols) -> None:
+    """THE segment writer: one sorted part file per task and no partition
+    subdirs (see the module docstring's segment layout).  Without sort
+    keys (tombstones, vector tables): a few unsorted files."""
+    if sort_cols:
+        df = df.repartition(n_tasks, sort_cols[0]).sortWithinPartitions(
+            *sort_cols
+        )
+    else:
+        df = df.coalesce(4)
+    df.write.mode("overwrite").parquet(path)
 
 
 def _tokenize_rows(
@@ -699,11 +774,15 @@ def apply_update_append(
     else:  # legacy manifest: backfill from base ∪ segments pre-anti-join
         max_id = max_ever_doc_id(spark, index_dir, docs_base)
     # checkpoint the delta rows FIRST (one corpus scan; delta-sized output)
-    # so id assignment + tokenize + docs staging never re-scan the corpus
+    # so id assignment + tokenize + docs staging never re-scan the corpus.
+    # The checkpointed diff carries no size statistics: broadcast it by
+    # hint, or the semi-join shuffles the whole corpus to pick delta rows
     delta_src = (
         cur.join(
-            diff.where(F.col("status").isin("added", "modified"))
-            .select("full_path"),
+            F.broadcast(
+                diff.where(F.col("status").isin("added", "modified"))
+                .select("full_path")
+            ),
             "full_path",
             "left_semi",
         )
@@ -798,35 +877,21 @@ def apply_update_append(
     moves: list[tuple[str, str]] = []
 
     # segment writes are delta-sized: fan out to the delta, not to nb tasks
-    # of a few rows each (guide §2/§6 — a micro-batch segment should be a
-    # handful of files; one task happily writes every bucket=/doc_pt= dir
-    # through the dynamic-partition writer).  Large deltas still spread.
+    # of a few rows each (guide §2/§6 — a micro-batch segment is a handful
+    # of sorted files, one per task).  Large deltas still spread.
     n_stage_tasks = _sized_parallelism(spark, n_delta, 50_000)
 
-    def _stage(df: DataFrame, table_dir: str, part_col: str | None) -> None:
+    def _stage(df: DataFrame, table_dir: str, sort_cols: tuple) -> None:
         final = _seg_path(index_dir, table_dir, seg)
         staged = final + ".staging"
         os.makedirs(os.path.join(index_dir, table_dir), exist_ok=True)
-        if part_col:
-            # sort prefix = the partition column: satisfies the dynamic
-            # writer's required ordering (no second sort inserted) while
-            # keeping postings (term, doc_id)-clustered within each bucket
-            df2 = (
-                df.repartition(n_stage_tasks, part_col).sortWithinPartitions(
-                    part_col, "term", "doc_id"
-                )
-                if table_dir == POSTINGS_SEG_DIR
-                else df.repartition(n_stage_tasks, part_col)
-            )
-            w = df2.write.mode("overwrite").partitionBy(part_col)
-        else:
-            # tombstones: tiny id list — few files, not one per partition
-            w = df.coalesce(4).write.mode("overwrite")
-        w.parquet(staged)
+        _write_flat(df, staged, n_stage_tasks, sort_cols)
         moves.append((staged, final))
 
+    # doc_pt in the base's partition type (int): a bigint here would widen
+    # docs_view's union and the winners' doc_pt join key with it
     delta_docs = B.docs_derived_columns(delta_full).withColumn(
-        "doc_pt", F.pmod(F.col("doc_id"), F.lit(nb))
+        "doc_pt", F.pmod(F.col("doc_id"), F.lit(nb)).cast("int")
     )
     # legacy pre-doc_pt base: keep the partition column in the segment
     # anyway (docs_view projects it away when composing with such a base)
@@ -840,13 +905,13 @@ def apply_update_append(
     # r03 #2); a delete-free batch skips the tombstone write entirely
     stage_jobs = [
         (delta_post.select("term", "doc_id", "tf", "dl", "bucket"),
-         POSTINGS_SEG_DIR, "bucket"),
+         POSTINGS_SEG_DIR, _POSTINGS_SORT),
         (df_adjust.select("term", "df_delta", "bucket"),
-         TERMSTATS_SEG_DIR, "bucket"),
-        (delta_docs.select(*docs_seg_cols), DOCS_SEG_DIR, "doc_pt"),
+         TERMSTATS_SEG_DIR, _TERMSTATS_SORT),
+        (delta_docs.select(*docs_seg_cols), DOCS_SEG_DIR, _DOCS_SORT),
     ]
     if counts["modified"] + counts["deleted"] > 0:
-        stage_jobs.append((removed_ids, TOMBSTONES_DIR, None))
+        stage_jobs.append((removed_ids, TOMBSTONES_DIR, ()))
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(stage_jobs)) as pool:
@@ -984,7 +1049,9 @@ def merge_segments(
     upto = folded[-1]
     nb = B.load_manifest(index_dir).num_buckets
 
-    ts = _read_all_segments(spark, index_dir, TOMBSTONES_DIR, upto=upto)
+    ts = _read_all_segments(
+        spark, index_dir, TOMBSTONES_DIR, upto=upto, schema=TOMBSTONES_SCHEMA
+    )
     moves: list[tuple[str, str]] = []
 
     # task fan-out ∝ folded bytes (guide §2: scale-adaptive partitioning —
@@ -1005,40 +1072,42 @@ def merge_segments(
                             pass
     n_merge_tasks = max(1, min(nb, folded_bytes // (128 << 20) + 1))
 
-    def _stage(df, table_dir: str, part_col: str | None, sort_cols=()):
+    def _stage(df, table_dir: str, sort_cols=()):
         final = _seg_path(index_dir, table_dir, upto)
         tmp = final + ".staging"
-        if part_col:
-            df = df.repartition(n_merge_tasks, part_col)
-            if sort_cols:
-                # part_col prefix satisfies the dynamic writer's required
-                # ordering — no second sort inserted
-                df = df.sortWithinPartitions(part_col, *sort_cols)
-            w = df.write.mode("overwrite").partitionBy(part_col)
-        else:
-            w = df.coalesce(4).write.mode("overwrite")
-        w.parquet(tmp)
+        _write_flat(df, tmp, n_merge_tasks, sort_cols)
         moves.append((tmp, final))
 
     stage_jobs: list[tuple] = []
-    post = _read_all_segments(spark, index_dir, POSTINGS_SEG_DIR, upto=upto)
+    post = _read_all_segments(
+        spark, index_dir, POSTINGS_SEG_DIR, upto=upto,
+        schema=POSTINGS_SEG_SCHEMA,
+    )
     if post is not None:
         stage_jobs.append((
-            _anti_tombstones(post, ts), POSTINGS_SEG_DIR, "bucket",
-            ("term", "doc_id"),
+            _anti_tombstones(post, ts), POSTINGS_SEG_DIR, _POSTINGS_SORT,
         ))
-    tseg = _read_all_segments(spark, index_dir, TERMSTATS_SEG_DIR, upto=upto)
+    tseg = _read_all_segments(
+        spark, index_dir, TERMSTATS_SEG_DIR, upto=upto,
+        schema=TERMSTATS_SEG_SCHEMA,
+    )
     if tseg is not None:
         stage_jobs.append((
             tseg.groupBy("term", "bucket")
             .agg(F.sum("df_delta").alias("df_delta"))
             .where(F.col("df_delta") != 0)
             .select("term", "df_delta", "bucket"),
-            TERMSTATS_SEG_DIR, "bucket",
+            TERMSTATS_SEG_DIR, _TERMSTATS_SORT,
         ))
-    dseg = _read_all_segments(spark, index_dir, DOCS_SEG_DIR, upto=upto)
+    dseg = None
+    if _committed_seg_dirs(index_dir, DOCS_SEG_DIR):
+        docs_base = spark.read.parquet(os.path.join(index_dir, B.DOCS_DIR))
+        dseg = _read_all_segments(
+            spark, index_dir, DOCS_SEG_DIR, upto=upto,
+            schema=_docs_seg_schema(docs_base),
+        )
     if dseg is not None:
-        stage_jobs.append((_anti_tombstones(dseg, ts), DOCS_SEG_DIR, "doc_pt"))
+        stage_jobs.append((_anti_tombstones(dseg, ts), DOCS_SEG_DIR, _DOCS_SORT))
     if ts is not None:
         keep_ts = ts.select("doc_id")
         # the prune below relies on the never-reused-id invariant, which
@@ -1056,7 +1125,7 @@ def merge_segments(
             keep_ts = keep_ts.join(
                 dseg.select("doc_id"), "doc_id", "left_anti"
             )
-        stage_jobs.append((keep_ts, TOMBSTONES_DIR, None))
+        stage_jobs.append((keep_ts, TOMBSTONES_DIR))
 
     # vector store: within the folded group apply the segment-ORDER rule
     # (row alive iff its seg ≥ the path's latest folded tombstone seg);
@@ -1080,9 +1149,9 @@ def merge_segments(
                 )
                 .drop("_ts_seg")
             )
-        stage_jobs.append((alive.drop("seg"), VECTOR_SEG_DIR, None))
+        stage_jobs.append((alive.drop("seg"), VECTOR_SEG_DIR))
     if vts is not None:
-        stage_jobs.append((vts.select("path").distinct(), VECTOR_TS_DIR, None))
+        stage_jobs.append((vts.select("path").distinct(), VECTOR_TS_DIR))
 
     # every staged write reads only committed on-disk segments — run them as
     # concurrent Spark jobs (guide §2.6: back-fill the tail) so a fold of

@@ -134,7 +134,9 @@ class LoadedIndex:
         resolution (~80 ms at 32 shards, growing with shard count).  The
         memo key adds blocks_meta.json's stat to the index-version token:
         build_blocks/update_blocks commit a rebuilt store WITHOUT touching
-        the manifest, and both rewrite the meta file last."""
+        the manifest, and both rewrite the meta file last.  Without a
+        readable meta file there is no token, so nothing is memoized: a
+        pinned file listing could otherwise be served forever."""
         import os
 
         self._revalidate()
@@ -144,7 +146,7 @@ class LoadedIndex:
         except OSError:
             btok = None
         hit = self._frames.get("_blocks")
-        if hit is not None and hit[0] == btok:
+        if btok is not None and hit is not None and hit[0] == btok:
             return hit[1]
         bp = os.path.join(self.index_dir, B.BLOCKS_DIR)
         if not os.path.exists(bp):
@@ -153,7 +155,8 @@ class LoadedIndex:
                 "run blocks.build_blocks (or create_index(build_block_engine=True))"
             )
         df = self.spark.read.parquet(bp)
-        self._frames["_blocks"] = (btok, df)
+        if btok is not None:
+            self._frames["_blocks"] = (btok, df)
         return df
 
     def docs(self) -> DataFrame:

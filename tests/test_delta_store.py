@@ -970,3 +970,154 @@ def test_num_buckets_validated_on_append_strategy(spark, tmp_path):
             spark, client._index_dir("nbv"), cur,
             num_buckets=16, strategy="append",
         )
+
+
+def _scan_blocks(df) -> list[str]:
+    """The ``Scan parquet`` node sections of ``df``'s formatted plan."""
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return [
+        blk.strip()
+        for blk in buf.getvalue().split("\n\n")
+        if "Scan parquet" in blk.strip().split("\n", 1)[0]
+    ]
+
+
+def _plan_line(block: str, key: str) -> str:
+    return next((ln for ln in block.splitlines() if ln.startswith(key)), "")
+
+
+def _assert_flat_segment(idx_dir, seg):
+    """postings/termstats/docs of segment ``seg`` hold sorted part files
+    and no bucket=/doc_pt= subdirectory.  A delta of a few docs sizes
+    every write to one task, so each table is exactly one file."""
+    for table in (DS.POSTINGS_SEG_DIR, DS.TERMSTATS_SEG_DIR, DS.DOCS_SEG_DIR):
+        names = os.listdir(os.path.join(idx_dir, table, f"seg={seg}"))
+        assert not [n for n in names if "=" in n], (table, names)
+        parts = [n for n in names if n.endswith(".parquet")]
+        assert len(parts) == 1, (table, names)
+
+
+def test_segments_are_flat_sorted_files_pruned_by_pushed_filters(
+    spark, tmp_path
+):
+    """Append updates and tiered merges write each segment table as sorted
+    part files with bucket/doc_pt as data columns (a partitioned segment
+    was one file per bucket dir), and the query's bucket predicate still
+    prunes the segment scan, now as a pushed parquet filter, while the
+    base scan keeps its bucket PartitionFilters."""
+    from bm25_index_tool_spark.score import LoadedIndex, score_query
+
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    rows = _base_rows()
+    client.create_index(
+        "a", spark.createDataFrame(rows, C.CORPUS_SCHEMA), num_buckets=8
+    )
+    idx_dir = client._index_dir("a")
+    waves = _waves(rows, 2)
+    for cur in waves:
+        DS.apply_update_append(
+            spark, idx_dir, spark.createDataFrame(cur, C.CORPUS_SCHEMA),
+            auto_compact_segments=None,
+        )
+    for seg in (1, 2):
+        _assert_flat_segment(idx_dir, seg)
+    post_dir = os.path.join(idx_dir, DS.POSTINGS_SEG_DIR, "seg=2")
+    part = next(n for n in os.listdir(post_dir) if n.endswith(".parquet"))
+    keys = [
+        (r["bucket"], r["term"], r["doc_id"])
+        for r in spark.read.parquet(os.path.join(post_dir, part)).collect()
+    ]
+    assert keys and keys == sorted(keys)
+
+    assert DS.merge_segments(spark, idx_dir) == 2
+    assert DS.segment_ids(idx_dir) == [2]
+    _assert_flat_segment(idx_dir, 2)
+    qs = QUERIES + ["tiermark0", "tiermark1"]
+    client._open.pop("a", None)
+    _assert_oracle_identical(client, "a", waves[-1], qs)
+
+    q = score_query(
+        LoadedIndex.open(spark, idx_dir), "tiermark1 data", 10,
+        include_content=False,
+    )
+    q.collect()
+    scans = _scan_blocks(q)
+    seg_scans = [b for b in scans if f"{DS.POSTINGS_SEG_DIR}/seg=" in b]
+    base_scans = [b for b in scans if f"/{B.POSTINGS_DIR}]" in b]
+    assert seg_scans and base_scans
+    for b in seg_scans:
+        pushed = _plan_line(b, "PushedFilters")
+        assert "In(bucket" in pushed or "EqualTo(bucket" in pushed, b
+    for b in base_scans:
+        assert "bucket" in _plan_line(b, "PartitionFilters"), b
+
+
+def _to_legacy_layout(spark, idx_dir, seg):
+    """Rewrite one flat segment in the older partitioned layout, with the
+    old stage writer's shape: repartition, then partitionBy(bucket|doc_pt)."""
+    import shutil
+
+    for table, part_col in (
+        (DS.POSTINGS_SEG_DIR, "bucket"),
+        (DS.TERMSTATS_SEG_DIR, "bucket"),
+        (DS.DOCS_SEG_DIR, "doc_pt"),
+    ):
+        d = os.path.join(idx_dir, table, f"seg={seg}")
+        rows = spark.read.parquet(d).localCheckpoint(eager=True)
+        shutil.rmtree(d)
+        rows.repartition(2, part_col).write.partitionBy(part_col).parquet(d)
+        assert any(n.startswith(f"{part_col}=") for n in os.listdir(d))
+
+
+def test_legacy_partitioned_segment_reads_beside_flat_one(spark, tmp_path):
+    """A segment staged in the older bucket=/doc_pt= layout stays readable
+    beside a flat one (by the update's diff and by search); the next
+    tiered merge folds both into the flat layout, and compaction still
+    restores the partitioned base."""
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    rows = _base_rows()
+    client.create_index(
+        "a", spark.createDataFrame(rows, C.CORPUS_SCHEMA), num_buckets=4
+    )
+    idx_dir = client._index_dir("a")
+    waves = _waves(rows, 2)
+    DS.apply_update_append(
+        spark, idx_dir, spark.createDataFrame(waves[0], C.CORPUS_SCHEMA),
+        auto_compact_segments=None,
+    )
+    _to_legacy_layout(spark, idx_dir, 1)
+    # the next diff reads the legacy docs segment, not a cached projection
+    DS.invalidate_stored_projection(idx_dir)
+    DS.apply_update_append(
+        spark, idx_dir, spark.createDataFrame(waves[1], C.CORPUS_SCHEMA),
+        auto_compact_segments=None,
+    )
+    _assert_flat_segment(idx_dir, 2)
+    final = waves[-1]
+    qs = QUERIES + ["tiermark0", "tiermark1"]
+    client._open.pop("a", None)
+    _assert_oracle_identical(client, "a", final, qs)
+
+    assert DS.merge_segments(spark, idx_dir) == 2
+    assert DS.segment_ids(idx_dir) == [2]
+    _assert_flat_segment(idx_dir, 2)
+    client._open.pop("a", None)
+    _assert_oracle_identical(client, "a", final, qs)
+
+    client.compact_index("a")
+    assert not DS.has_segments(idx_dir)
+    for sub, part_col in (
+        (B.POSTINGS_DIR, "bucket"),
+        (B.TERMSTATS_DIR, "bucket"),
+        (B.DOCS_DIR, "doc_pt"),
+    ):
+        assert any(
+            n.startswith(f"{part_col}=")
+            for n in os.listdir(os.path.join(idx_dir, sub))
+        ), sub
+    _assert_oracle_identical(client, "a", final, qs)

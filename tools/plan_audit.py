@@ -185,7 +185,9 @@ def main() -> None:
     # ---- LSM live-view plan: pruning must push through segments ----------
     # (delta_store.py): after an append update, the postings view is
     # (base ∪ segments) ⟕anti broadcast(tombstones) — the query's bucket IN
-    # predicate must reach BOTH parquet scans, and the anti-join must be a
+    # predicate must reach BOTH parquet scans, each in its layout's form:
+    # PartitionFilters on the bucket=-partitioned base, a pushed row-group
+    # filter on the flat sorted segment files.  The anti-join must be a
     # broadcast, not a shuffle.
     from bm25_index_tool_spark.client import BM25SparkClient
 
@@ -209,15 +211,30 @@ def main() -> None:
     with redirect_stdout(lbuf):
         lq.explain("formatted")
     lplan = lbuf.getvalue()
-    lsm_checks = {
-        "bucket pruning reaches BOTH base and segment scans "
-        "(≥2 parquet scans with bucket PartitionFilters)": (
-            sum(
-                1
-                for ln in lplan.splitlines()
-                if "PartitionFilters" in ln and "bucket" in ln
+    lscans = [
+        blk
+        for blk in lplan.split("\n\n")
+        if "Scan parquet" in blk.strip().split("\n", 1)[0]
+    ]
+
+    def _scan_has(table_dir: str, key: str, *preds: str) -> bool:
+        return any(
+            f"/{table_dir}" in blk
+            and any(
+                ln.startswith(key) and any(p in ln for p in preds)
+                for ln in blk.splitlines()
             )
-            >= 2
+            for blk in lscans
+        )
+
+    lsm_checks = {
+        "bucket pruning reaches the base scan "
+        "(postings PartitionFilters with bucket IN ...)": _scan_has(
+            B.POSTINGS_DIR + "]", "PartitionFilters", "bucket"
+        ),
+        "bucket pruning reaches the flat segment scan "
+        "(postings_seg PushedFilters with bucket IN/=)": _scan_has(
+            "postings_seg/seg=", "PushedFilters", "In(bucket", "EqualTo(bucket"
         ),
         "tombstone anti-join is broadcast (BroadcastHashJoin ... LeftAnti)": (
             "LeftAnti" in lplan and "BroadcastHashJoin" in lplan
