@@ -1,6 +1,6 @@
 """Query latency vs outstanding LSM segment count (VERDICT r03 #5).
 
-The append update strategy trades write cost for read amplification: every
+The LSM append update trades write cost for read amplification: every
 outstanding segment adds one more parquet scan to the live postings/docs
 views until compaction folds them.  This measures that curve — query
 p50/p95 over the same 8-query set at 0/1/4/16/64 outstanding segments on

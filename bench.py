@@ -292,9 +292,9 @@ def main() -> None:
 
         if "update" in phases:
             # TRUE-delta incremental update: ~1% of documents modified.
-            # Only the delta is tokenized; postings/docs merge per changed
-            # bucket/partition (incremental.py) — compare against
-            # index_build (the full-rebuild cost of the same corpus).
+            # Only the delta is tokenized and written, as one LSM segment
+            # (delta_store.py) — compare against index_build (the
+            # full-rebuild cost of the same corpus).
             from bm25_index_tool_spark.incremental import apply_update
 
             cur = corpus.withColumn(
@@ -306,7 +306,7 @@ def main() -> None:
             )
             c0 = _cpu_stat()
             t = time.monotonic()
-            apply_update(spark, idx_dir, cur)  # default = LSM append
+            apply_update(spark, idx_dir, cur)  # LSM segment append
             timings["incremental_update_1pct"] = round(time.monotonic() - t, 3)
             phase_steal["update"] = _steal_pct(c0, _cpu_stat())
             phase_load["update"] = round(os.getloadavg()[0], 2)
@@ -314,7 +314,7 @@ def main() -> None:
 
             for k, v in LAST_UPDATE_TIMINGS.items():
                 timings[f"update_{k}_sec"] = v
-            # compaction is the deferred half of the append strategy's cost
+            # compaction is the deferred half of the append update's cost
             # — measured separately: latency-critical ingest pays only the
             # append, compaction amortizes in the background
             from bm25_index_tool_spark.delta_store import compact_index
@@ -324,7 +324,7 @@ def main() -> None:
             timings["compaction_after_1pct"] = round(time.monotonic() - t, 3)
 
             # streaming-shaped upsert: a ~100-file micro-batch through the
-            # same path foreachBatch uses (mode=upsert, append strategy) —
+            # same path foreachBatch uses (mode=upsert) —
             # the latency a continuous-ingest trigger pays
             k = max(n_files // 100, 1)
             batch = corpus.where(F.crc32(F.col("path")) % k == 1).withColumn(

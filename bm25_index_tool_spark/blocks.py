@@ -421,8 +421,7 @@ def update_blocks(
 
 def _ensure_readable_blocks(spark, blocks_path: str) -> None:
     """A partitioned write of an EMPTY relation leaves only _SUCCESS —
-    unreadable by spark.read.parquet (same Spark behavior the docs/
-    postings tables guard with _ensure_nonempty_partitioned).  An index
+    unreadable by spark.read.parquet.  An index
     emptied by a full delete, or built over zero postings, must still
     have a readable block store: replace the bare dir with a schema'd
     empty plain-parquet table."""

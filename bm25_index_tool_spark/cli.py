@@ -109,11 +109,6 @@ def main(argv: list[str] | None = None) -> int:
     u = sub.add_parser("update", help="incremental update from a fresh corpus parquet")
     u.add_argument("name")
     u.add_argument("--corpus", required=True)
-    u.add_argument(
-        "--strategy", default="append", choices=["append", "merge"],
-        help="append = LSM segment (IO ∝ delta; default), "
-        "merge = eager per-partition merge-and-swap",
-    )
 
     cp = sub.add_parser(
         "compact", help="fold LSM update segments back into the base index"
@@ -320,7 +315,7 @@ def main(argv: list[str] | None = None) -> int:
         from bm25_index_tool_spark.sources import read_corpus
 
         corpus = read_corpus(client.spark, args.corpus)
-        m = client.update_index(args.name, corpus, strategy=args.strategy)
+        m = client.update_index(args.name, corpus)
         print(f"Updated '{args.name}': now {m.num_docs} docs")
     elif args.cmd == "stats":
         print(json.dumps(client.stats(args.name), indent=2))

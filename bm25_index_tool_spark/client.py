@@ -216,18 +216,14 @@ class BM25SparkClient:
         return manifest
 
     @traced("client.update_index")
-    def update_index(
-        self, name: str, current: DataFrame, *, strategy: str = "append"
-    ) -> B.IndexManifest:
-        """Incremental update (anti-join diff; SURVEY.md §2.3 I3).
-        ``strategy="append"`` = LSM segment append (IO ∝ delta; default);
-        ``"merge"`` = eager per-partition merge-and-swap."""
+    def update_index(self, name: str, current: DataFrame) -> B.IndexManifest:
+        """Incremental update from the complete current corpus (SURVEY.md
+        §2.3 I3): diff on (full_path, md5), then one LSM segment append
+        whose write IO is proportional to the delta."""
         from bm25_index_tool_spark.incremental import apply_update
 
         self._require(name)
-        manifest = apply_update(
-            self.spark, self._index_dir(name), current, strategy=strategy
-        )
+        manifest = apply_update(self.spark, self._index_dir(name), current)
         def _bump(reg):
             # the entry may have been deleted by a concurrent process —
             # don't resurrect a half-entry for a dead index

@@ -20,7 +20,7 @@ COMMANDS: dict[str, list[str]] = {
               "--path-filter", "--exclude-path", "--engine",
               "--related-to", "--semantic"],
     "batch": ["-i", "--input", "-n", "--top"],
-    "update": ["--corpus", "--strategy"],
+    "update": ["--corpus"],
     "compact": ["--tiered"],
     "ann": ["-m", "--cells"],
     "stats": [],

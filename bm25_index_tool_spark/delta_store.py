@@ -1,12 +1,11 @@
-"""LSM-style append path for incremental updates (VERDICT r02 #3).
+"""LSM-style append path: the one way an index is updated (VERDICT r02 #3).
 
-Why: the per-bucket-swap merge path (incremental.apply_update) rewrites
-every bucket/partition a delta term or doc_id lands in.  A *scattered* 1%
-delta (the realistic shape — edits spread across the corpus) touches every
-one of the ~nb term-hash buckets and doc_pt partitions, so its IO converges
-on a full rebuild — the measured 0.79× full-build cost at sf0.1.  No swap
-granularity fixes that; scattered updates need the classic log-structured
-answer instead (Lucene segments + deletes; Delta/Iceberg/Hudi MOR):
+Why: rewriting the term-hash buckets and doc_pt partitions a delta lands
+in does not shrink with the delta.  One text document's terms fall in
+most of the ~nb buckets, so even a 1% update touches nearly all of them
+and its IO converges on a full rebuild.  No swap granularity fixes that;
+updates use the classic log-structured answer instead (Lucene segments +
+deletes; Delta/Iceberg/Hudi MOR):
 
 * each update appends an immutable **segment** — new postings / termstat
   adjustments / doc rows — plus a **tombstone** list of replaced doc_ids;
@@ -38,12 +37,14 @@ answer instead (Lucene segments + deletes; Delta/Iceberg/Hudi MOR):
 * read amplification is bounded by **compaction** (`compact_index`): fold
   segments + tombstones back into fresh base tables (a partitioned write
   of the live view — the same job shape as a build's write stages, minus
-  tokenization).  `apply_update(strategy="append")` auto-compacts past
+  tokenization).  `incremental.apply_update` auto-compacts past
   ``auto_compact_segments`` outstanding segments.
 
 Crash safety: a segment becomes visible via a SINGLE ``os.replace`` of its
-staged directory per table; a journal written after staging and removed
-after the manifest lets recovery roll the (tiny) commit window forward.
+staged directory per table; a journal (``_segment.journal``) written after
+staging and removed after the manifest lets recovery roll the (tiny)
+commit window forward.  It is the one commit and recovery protocol of
+every writer: append, tiered merge and compaction.
 
 The reference has no analogue — its SQLite layer updates rows in place
 (``storage/sqlite_storage.py`` upserts); this module is the distributed
@@ -74,6 +75,9 @@ TOMBSTONES_DIR = "tombstones"
 VECTOR_SEG_DIR = "vector_seg"
 VECTOR_TS_DIR = "vector_tombstones"
 SEG_JOURNAL = "_segment.journal"
+# left behind by a crashed per-bucket merge-and-swap update, a writer that
+# no longer exists; such an index may hold half-swapped partitions
+_LEGACY_MERGE_JOURNAL = "_update.journal"
 
 _SEG_DIRS = (
     POSTINGS_SEG_DIR,
@@ -232,7 +236,7 @@ LAST_UPDATE_TIMINGS: dict[str, float] = {}
 # projection changes only by the (tiny) delta.  Cache it per index_dir,
 # persisted on the executors; validity is an os-level token (manifest
 # mtime/size + committed segment ids) so ANY out-of-band writer — another
-# process, a merge update, a compaction — invalidates it for free.  After a
+# process, a tiered merge, a compaction — invalidates it for free.  After a
 # commit the cache advances incrementally: (old ⟕anti removed) ∪ delta,
 # localCheckpointed so lineage stays flat across thousands of batches.
 # ---------------------------------------------------------------------------
@@ -469,17 +473,22 @@ def termstats_view(spark: SparkSession, index_dir: str, base: DataFrame) -> Data
 def recover_segments_if_needed(spark: SparkSession, index_dir: str) -> bool:
     """Roll a crashed segment commit forward: the journal lists the staged
     dirs and the post-commit manifest; each ``os.replace`` is idempotent
-    (skipped when the final dir already exists)."""
-    from bm25_index_tool_spark import build as B
-    from bm25_index_tool_spark import incremental as I
+    (skipped when the final dir already exists).
 
+    Raises ``ValueError`` on a leftover merge-update journal: nothing can
+    replay it, and serving its half-swapped partitions would be silent
+    corruption."""
+    from bm25_index_tool_spark import build as B
+
+    legacy = os.path.join(index_dir, _LEGACY_MERGE_JOURNAL)
+    if os.path.exists(legacy):
+        raise ValueError(
+            f"{legacy} is left by a crashed merge-strategy update, which "
+            "this version cannot replay; the index may hold half-swapped "
+            "partitions — rebuild it (create_index with overwrite)"
+        )
     jpath = os.path.join(index_dir, SEG_JOURNAL)
     if not os.path.exists(jpath):
-        # a pending MERGE-strategy journal may reference staged vector
-        # segment dirs (incremental.apply_update stages them before its own
-        # journal) — leave staging alone until recover_if_needed replays it
-        if os.path.exists(os.path.join(index_dir, I.JOURNAL)):
-            return False
         for d in _SEG_DIRS:  # pre-journal crash: discard stray staging
             root = os.path.join(index_dir, d)
             if os.path.isdir(root):
@@ -672,6 +681,9 @@ def upsert_diff_frame(cur: DataFrame, stored: DataFrame) -> DataFrame:
     return modified.unionByName(added)
 
 
+_CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
+
+
 @_locked_writer
 def apply_update_append(
     spark: SparkSession,
@@ -682,7 +694,7 @@ def apply_update_append(
     auto_compact_segments: int | None = 16,
     auto_compact_strategy: str = "full",
 ) -> "object":
-    """Append-strategy incremental update; returns the new IndexManifest.
+    """Append one update as a segment; returns the new IndexManifest.
 
     ``auto_compact_strategy``: past ``auto_compact_segments`` outstanding
     segments, "full" folds everything into the base (zero read amp, O(base)
@@ -697,7 +709,6 @@ def apply_update_append(
     from pyspark import StorageLevel
 
     from bm25_index_tool_spark import build as B
-    from bm25_index_tool_spark import incremental as I
 
     import time as _time
 
@@ -717,7 +728,6 @@ def apply_update_append(
         _t0 = now
 
     recover_segments_if_needed(spark, index_dir)
-    I.recover_if_needed(spark, index_dir)
     manifest = B.load_manifest(index_dir)
     nb = manifest.num_buckets
 
@@ -786,7 +796,7 @@ def apply_update_append(
             "full_path",
             "left_semi",
         )
-        .select(*I._CORPUS_COLS)
+        .select(*_CORPUS_COLS)
         .localCheckpoint(eager=True)
     )
     _mark("delta_scan")  # corpus scan + semi-join, checkpointed delta rows
@@ -804,7 +814,7 @@ def apply_update_append(
             cleanup=_id_cache,
         )
         .withColumn("doc_id", F.col("doc_id") + F.lit(max_id))
-        .select("doc_id", *I._CORPUS_COLS)
+        .select("doc_id", *_CORPUS_COLS)
     ).drop("_dirname", "_natint")
     _mark("delta_extract")
 
@@ -1211,8 +1221,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     """Materialize the live views as new base tables and drop the segment
     dirs — the same partitioned-write job shapes as the full build's write
     stages, minus tokenization.  Bounded-frequency background work that
-    restores zero read amplification; crash-safe via incremental.py's
-    journal machinery (whole-directory staging + replace)."""
+    restores zero read amplification; crash-safe via the segment journal
+    (whole-directory staging + replace)."""
     from bm25_index_tool_spark import build as B
 
     index_dir = os.path.abspath(index_dir)  # journaled paths must resolve

@@ -3,275 +3,23 @@
 The reference diffs a current file listing against the stored documents
 table with Python dicts and md5 compares (reference
 ``core/incremental.py:68-126``), then applies per-row SQLite upserts.
-Spark-first, the same semantics are three joins:
+Here the update is the LSM segment append of ``delta_store.py``: one
+narrow (full_path, md5) diff, tokenization of added∪modified documents
+only, and one immutable segment plus tombstones per update, committed by
+the segment journal.  Compaction (``delta_store.compact_index``) and the
+tiered ``merge_segments`` bound the read amplification this trades for.
 
-    added    = current ⟕anti stored            (on full_path)
-    deleted  = stored  ⟕anti current
-    modified = current ⋈ stored WHERE hash differs
-
-and the apply step is a TRUE delta merge (VERDICT r01 #2):
-
-* only ``added ∪ modified`` documents are tokenized — unchanged documents
-  never re-enter the tokenizer (the reference's skip-unchanged intent,
-  ``commands/update.py:149-253``);
-* postings/termstats are rewritten ONLY for the term-hash buckets that
-  contain delta terms or postings of removed docs (per-bucket directory
-  swap; untouched buckets' parquet files stay byte-identical);
-* the docs table is partitioned by ``doc_pt = pmod(doc_id, num_buckets)``
-  and only partitions containing changed doc_ids are rewritten — unchanged
-  docs are never re-read, re-hashed, or re-written;
-* N / avgdl are delta-adjusted from the manifest's exact ``total_tokens``
-  (new_total = old − removed_tf + delta_tf), no corpus-wide aggregate.
-
-Changed docs keep their doc_id (path identity); new docs get fresh ids
-above the current max.  Equivalence to a from-scratch rebuild on the new
-corpus is asserted in tests (the reference's own equivalence:
-``commands/update.py`` incremental apply vs ``--reindex``), plus a
-byte-identity test on untouched bucket files.
+This module keeps the public entry point, ``apply_update``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-from dataclasses import dataclass
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from bm25_index_tool_spark.delta_store import _locked_writer
 
 
-@dataclass
-class ChangeSet:
-    """Mirror of reference ``core/incremental.py`` ChangeSet — but each
-    member is a DataFrame, not a list."""
-
-    added: DataFrame
-    modified: DataFrame
-    deleted: DataFrame
-
-    def counts(self) -> dict[str, int]:
-        return {
-            "added": self.added.count(),
-            "modified": self.modified.count(),
-            "deleted": self.deleted.count(),
-        }
-
-    def is_empty(self) -> bool:
-        return all(v == 0 for v in self.counts().values())
-
-
-def detect_changes(current: DataFrame, stored_docs: DataFrame) -> ChangeSet:
-    """``current`` = fresh corpus (repo, path, commit, lang, content);
-    ``stored_docs`` = the index's docs table.  Identity key = full path;
-    modification test = md5(content) difference (reference uses md5 for
-    change detection, ``sqlite_storage.py:821-835``)."""
-    cur = current.withColumn(
-        "full_path", F.concat_ws("/", "repo", "path")
-    ).withColumn("content_md5", F.md5("content"))
-    stored = stored_docs.select(
-        "full_path", F.col("content_md5").alias("_stored_md5")
-    )
-
-    added = cur.join(stored, "full_path", "left_anti")
-    deleted = stored_docs.join(
-        cur.select("full_path"), "full_path", "left_anti"
-    )
-    modified = (
-        cur.join(stored, "full_path")
-        # eqNullSafe: the streaming corpus schema allows NULL content
-        # (md5(NULL) = NULL) — a plain != would evaluate to NULL and
-        # silently drop a NULL→real-content update as unchanged
-        .where(~F.col("content_md5").eqNullSafe(F.col("_stored_md5")))
-        .drop("_stored_md5")
-    )
-    return ChangeSet(added=added, modified=modified, deleted=deleted)
-
-
-_CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
-
-
-def detect_upserts(current: DataFrame, stored_docs: DataFrame) -> ChangeSet:
-    """Upsert-only diff: ``current`` is a PARTIAL corpus (e.g. one
-    Structured-Streaming micro-batch) — rows absent from it are NOT
-    deletions.  Unchanged rows (same md5) are dropped, which makes the
-    merge idempotent under micro-batch replay: re-delivering an already
-    applied batch yields an empty ChangeSet."""
-    cs = detect_changes(current, stored_docs)
-    return ChangeSet(
-        added=cs.added,
-        modified=cs.modified,
-        deleted=stored_docs.limit(0),
-    )
-
-
-def _ensure_nonempty_partitioned(
-    spark: SparkSession, path: str, part_col: str, schema
-) -> None:
-    """After partition swaps, a directory may hold zero partition dirs
-    (everything deleted) — unreadable by spark.read.parquet.  Replace it
-    with a schema'd empty plain-parquet table (same convention as the
-    empty-corpus build)."""
-    if any(n.startswith(f"{part_col}=") for n in os.listdir(path)):
-        return
-    if any(n.endswith(".parquet") for n in os.listdir(path)):
-        return  # already a plain (possibly empty) parquet table
-    from pyspark.sql.types import IntegerType
-
-    empty = spark.createDataFrame([], schema.add(part_col, IntegerType()))
-    empty.write.mode("overwrite").parquet(path)
-
-
-def _swap_partitions(
-    live_dir: str, tmp_dir: str, part_col: str, values: list,
-    fresh_values: list | None = None,
-) -> None:
-    """Atomically-ish replace ``live_dir/part_col=v`` with the freshly
-    written ``tmp_dir/part_col=v`` for each v; a value with no output in
-    tmp (everything in the partition was removed) deletes the live dir.
-
-    ``fresh_values`` (recovery roll-forward) lists the values that HAD
-    fresh output when the update was journaled: a value absent from tmp but
-    present in ``fresh_values`` was already moved by the crashed run and is
-    left alone, making the swap idempotent under re-execution."""
-    fresh_set = set() if fresh_values is None else set(fresh_values)
-    for v in values:
-        live = os.path.join(live_dir, f"{part_col}={v}")
-        fresh = os.path.join(tmp_dir, f"{part_col}={v}")
-        if os.path.exists(fresh):
-            if os.path.exists(live):
-                shutil.rmtree(live)
-            os.replace(fresh, live)
-        elif v not in fresh_set and os.path.exists(live):
-            # genuinely emptied-out partition → delete
-            shutil.rmtree(live)
-        # else: already swapped by a crashed run — keep live as-is
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-
-
-JOURNAL = "_update.journal"
-
-
-def _commit_vector_moves(moves: list) -> None:
-    """Rename staged vector segment/tombstone dirs into place — idempotent
-    (a move whose final dir already exists was committed by a crashed run;
-    its leftover staging, if any, is swept)."""
-    for staged, final in moves:
-        if os.path.isdir(staged) and not os.path.isdir(final):
-            os.replace(staged, final)
-        elif os.path.isdir(staged):
-            shutil.rmtree(staged, ignore_errors=True)
-
-
-def _fresh_parts(tmp_dir: str, part_col: str) -> list:
-    """Partition values actually present in a staged tmp dir."""
-    if not os.path.isdir(tmp_dir):
-        return []
-    vals = []
-    for n in os.listdir(tmp_dir):
-        if n.startswith(f"{part_col}="):
-            vals.append(int(n.split("=", 1)[1]))
-    return sorted(vals)
-
-
-def recover_if_needed(spark: SparkSession, index_dir: str) -> bool:
-    """Roll a crashed ``apply_update`` forward (ADVICE r02).
-
-    ``apply_update`` stages every new partition under ``*.update-tmp``,
-    then durably journals its intent (``_update.journal``: the partitions
-    to swap, the new manifest JSON, whether blocks must be re-derived)
-    before the first live mutation, and deletes the journal only after the
-    last write.  Consequences:
-
-    * crash BEFORE the journal → live index untouched; stray tmp dirs are
-      deleted here (returns False);
-    * crash AFTER the journal → this function re-executes the commit phase
-      idempotently (the ``fresh_values`` lists make partially-completed
-      swaps safe to re-run), rewrites the manifest from the journal, and —
-      because the in-flight delta DataFrames died with the crashed driver —
-      re-derives the block engine from the committed postings.
-
-    No ghost postings can survive: the journaled swap set covers every
-    bucket whose postings reference removed/added doc_ids, so replaying
-    the commit phase converges postings, termstats, docs, manifest and
-    blocks to the same post-update state the crashed run was producing.
-    Called automatically at the top of ``apply_update``; safe to call any
-    time (no-op without a journal).
-    """
-    import json as _json
-
-    from bm25_index_tool_spark import build as B
-
-    jpath = os.path.join(index_dir, JOURNAL)
-    postings_path = os.path.join(index_dir, B.POSTINGS_DIR)
-    termstats_path = os.path.join(index_dir, B.TERMSTATS_DIR)
-    docs_path = os.path.join(index_dir, B.DOCS_DIR)
-    if not os.path.exists(jpath):
-        # pre-journal crash (or clean state): discard any stray staging dirs
-        for p in (postings_path, termstats_path, docs_path):
-            shutil.rmtree(p + ".update-tmp", ignore_errors=True)
-        return False
-
-    from pyspark.sql.types import StructType
-
-    with open(jpath) as f:
-        j = _json.load(f)
-
-    post_schema = StructType.fromJson(j["post_schema"])
-    ts_schema = StructType.fromJson(j["ts_schema"])
-    docs_schema = StructType.fromJson(j["docs_schema"])
-
-    if j["changed_buckets"]:
-        _swap_partitions(
-            termstats_path, termstats_path + ".update-tmp", "bucket",
-            j["changed_buckets"], j["ts_fresh"],
-        )
-        _swap_partitions(
-            postings_path, postings_path + ".update-tmp", "bucket",
-            j["changed_buckets"], j["post_fresh"],
-        )
-        _ensure_nonempty_partitioned(spark, postings_path, "bucket", post_schema)
-        _ensure_nonempty_partitioned(spark, termstats_path, "bucket", ts_schema)
-    tmp_docs = docs_path + ".update-tmp"
-    if j["docs_full_rewrite"]:
-        if os.path.isdir(tmp_docs) and os.path.exists(
-            os.path.join(tmp_docs, "_SUCCESS")
-        ):
-            shutil.rmtree(docs_path, ignore_errors=True)
-            os.replace(tmp_docs, docs_path)
-        # tmp already consumed by the crashed run → docs swap completed
-    elif j["changed_pts"]:
-        _swap_partitions(
-            docs_path, tmp_docs, "doc_pt", j["changed_pts"], j["docs_fresh"]
-        )
-    _ensure_nonempty_partitioned(spark, docs_path, "doc_pt", docs_schema)
-
-    # blocks BEFORE the manifest: the manifest stat is the reader-cache
-    # version token, so committing it while the block store still holds
-    # pre-update shards would let a concurrent blocks-engine query cache
-    # stale results under the NEW version
-    if j.get("blocks_stale") and os.path.exists(
-        os.path.join(index_dir, B.BLOCKS_DIR)
-    ):
-        from bm25_index_tool_spark.blocks import build_blocks
-
-        build_blocks(spark, index_dir)
-
-    B.save_manifest(index_dir, j["manifest_json"])
-
-    # vector refresh staged before the journal (ADVICE r03): roll the
-    # segment/tombstone renames forward idempotently — staged dirs were
-    # complete before the journal existed
-    _commit_vector_moves(j.get("vector_moves", []))
-
-    os.remove(jpath)
-    for p in (postings_path, termstats_path, docs_path):
-        shutil.rmtree(p + ".update-tmp", ignore_errors=True)
-    return True
-
-
-from bm25_index_tool_spark.delta_store import _locked_writer as _locked
-
-
-@_locked
+@_locked_writer
 def apply_update(
     spark: SparkSession,
     index_dir: str,
@@ -279,383 +27,36 @@ def apply_update(
     *,
     num_buckets: int | None = None,
     mode: str = "full",
-    strategy: str = "append",
     auto_compact_segments: int | None = 16,
     auto_compact_strategy: str = "full",
 ) -> "object":
     """True incremental update; returns the new IndexManifest.
 
-    ``num_buckets`` is accepted for API compatibility but the bucket layout
-    is fixed by the existing index (changing it requires a full rebuild).
+    ``num_buckets`` is accepted for API compatibility, but the bucket
+    layout is fixed by the existing index: a different value raises
+    (changing it requires a full rebuild).
 
     ``mode="full"``: ``current`` is the complete corpus — rows missing from
     it are deletions (the reference's update-vs-stored diff).
     ``mode="upsert"``: ``current`` is a partial delta (a streaming
     micro-batch) — only adds/modifies, never deletes.
 
-    ``strategy="append"`` (default): LSM segment append — write IO ∝ delta
-    even for scattered edits; read views merge base + segments; auto-
-    compaction bounds read amplification (delta_store.py, VERDICT r02 #3).
-    ``strategy="merge"``: eager per-bucket/partition merge-and-swap — zero
-    read amplification, but scattered deltas rewrite most partitions; the
-    right choice when the delta is bucket-local or as an explicit compat
-    path.  Segments, if any, are compacted first so the merge sees one
-    base.
+    Past ``auto_compact_segments`` outstanding segments the update folds
+    them: ``auto_compact_strategy="full"`` compacts into the base,
+    ``"tiered"`` merges the oldest half (see delta_store.merge_segments).
     """
-    from pyspark import StorageLevel
-
     from bm25_index_tool_spark import build as B
     from bm25_index_tool_spark import delta_store as DS
 
-    # validate the bucket-layout request BEFORE strategy dispatch — the
-    # append branch never reaches the merge path's check, and a silently
-    # ignored num_buckets would hide layout drift from the caller
     if num_buckets:
-        nb0 = B.load_manifest(index_dir).num_buckets
-        if num_buckets != nb0:
+        nb = B.load_manifest(index_dir).num_buckets
+        if num_buckets != nb:
             raise ValueError(
-                f"bucket layout is fixed at build time ({nb0}); "
+                f"bucket layout is fixed at build time ({nb}); "
                 "rebuild to change it"
             )
-    if strategy == "append":
-        return DS.apply_update_append(
-            spark, index_dir, current, mode=mode,
-            auto_compact_segments=auto_compact_segments,
-            auto_compact_strategy=auto_compact_strategy,
-        )
-    if strategy != "merge":
-        raise ValueError(f"unknown strategy {strategy!r} (append|merge)")
-    # journals record staged paths verbatim — absolutize so recovery run
-    # from a different working directory still resolves them (ADVICE r03)
-    index_dir = os.path.abspath(index_dir)
-    DS.recover_segments_if_needed(spark, index_dir)
-    if DS.has_segments(index_dir):
-        DS.compact_index(spark, index_dir)
-
-    recover_if_needed(spark, index_dir)
-    manifest = B.load_manifest(index_dir)
-    nb = manifest.num_buckets
-    if num_buckets and num_buckets != nb:
-        raise ValueError(
-            f"bucket layout is fixed at build time ({nb}); rebuild to change it"
-        )
-    docs_path = os.path.join(index_dir, B.DOCS_DIR)
-    postings_path = os.path.join(index_dir, B.POSTINGS_DIR)
-    termstats_path = os.path.join(index_dir, B.TERMSTATS_DIR)
-
-    docs = spark.read.parquet(docs_path)
-    if mode == "upsert":
-        changes = detect_upserts(current, docs)
-    elif mode == "full":
-        changes = detect_changes(current, docs)
-    else:
-        raise ValueError(f"unknown update mode {mode!r} (full|upsert)")
-    # materialize the (delta-sized) diff ONCE: counts, the dup guard, the
-    # removed-id/path derivations and the delta union all consume these
-    # frames, and the lazy plans would re-run the corpus-vs-docs diff
-    # joins for every consumer — roughly 7 full scans per update before
-    # staging started.  The append strategy already follows this
-    # single-checkpoint discipline (delta_store.apply_update_append).
-    changes = ChangeSet(
-        added=changes.added.localCheckpoint(eager=True),
-        modified=changes.modified.localCheckpoint(eager=True),
-        deleted=changes.deleted.localCheckpoint(eager=True),
+    return DS.apply_update_append(
+        spark, index_dir, current, mode=mode,
+        auto_compact_segments=auto_compact_segments,
+        auto_compact_strategy=auto_compact_strategy,
     )
-    counts = changes.counts()
-    if all(v == 0 for v in counts.values()):
-        return manifest
-
-    # duplicate full_paths within the delta would assign two doc_ids to one
-    # path (ADVICE r02) — reject early; the streaming path dedupes each
-    # micro-batch upstream (streaming.stream_index_updates)
-    dup = (
-        changes.added.select("full_path")
-        .unionByName(changes.modified.select("full_path"))
-        .groupBy("full_path")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"duplicate full_path in update corpus: {dup[0]['full_path']!r}"
-            " — dedupe the input to one row per path before apply_update"
-        )
-
-    # ---- removed ids: deleted docs + old versions of modified docs --------
-    modified_ids = changes.modified.join(
-        docs.select("doc_id", "full_path"), "full_path"
-    )
-    removed_ids = (
-        changes.deleted.select("doc_id")
-        .unionByName(modified_ids.select("doc_id"))
-        .localCheckpoint(eager=True)  # sever lineage from the files we swap
-    )
-    rem = F.broadcast(removed_ids)
-    # captured BEFORE the swaps for the vector refresh below — the lazy
-    # changes.* plans would otherwise re-diff against the post-swap docs
-    removed_paths = (
-        changes.deleted.select("full_path")
-        .unionByName(changes.modified.select("full_path"))
-        .select(F.col("full_path").alias("path"))
-        .localCheckpoint(eager=True)
-        if os.path.isdir(os.path.join(index_dir, "vector"))
-        else None
-    )
-
-    # ---- delta docs (the ONLY rows that get tokenized) ---------------------
-    # fresh ids come from the manifest's monotonic high-water mark, never
-    # from max over the live table — deleted max-ids must stay retired so a
-    # later append-strategy update's tombstones can't collide (ADVICE r03)
-    if manifest.next_doc_id > 0:
-        max_id = manifest.next_doc_id - 1
-    else:  # legacy manifest (no HWM field): best-available backfill
-        max_id = docs.agg(F.max("doc_id")).collect()[0][0] or 0
-    added_src = changes.added.select(*_CORPUS_COLS)
-    id_cache: list = []
-    added_with_ids = (
-        B.assign_doc_ids(
-            added_src,
-            num_partitions=DS._sized_parallelism(
-                spark, counts["added"], 65_536
-            ),
-            cleanup=id_cache,
-        )
-        .withColumn("doc_id", F.col("doc_id") + F.lit(max_id))
-        .select("doc_id", *_CORPUS_COLS)
-    )
-    delta = (
-        modified_ids.select("doc_id", *_CORPUS_COLS)
-        .unionByName(added_with_ids)
-    )
-    delta_full = (
-        B.with_derived_columns(delta)
-        .drop("_dirname", "_natint")
-        .localCheckpoint(eager=True)
-    )
-
-    # tokenize ONLY the delta — the SAME pipeline as the append strategy
-    # (arrow C++ fast path for arrow-capable profiles, explode/window
-    # fallback otherwise); one shared implementation keeps the two
-    # strategies' rebuild-equivalence invariant from silently diverging
-    tfs = DS._tokenize_rows(
-        spark, delta_full, manifest.tokenizer_profile,
-        n_rows=counts["added"] + counts["modified"],
-    )
-
-    delta_post = tfs.withColumn(
-        "bucket", F.pmod(F.hash("term"), F.lit(nb))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    agg = delta_post.agg(
-        F.coalesce(F.sum("tf"), F.lit(0)).alias("tokens"),
-        F.collect_set("bucket").alias("buckets"),
-    ).collect()[0]
-    delta_tokens, delta_buckets = int(agg["tokens"]), set(agg["buckets"])
-
-    # ---- discover buckets holding removed docs' postings + their tf sum ----
-    old_post = spark.read.parquet(postings_path)
-    removed_rows = old_post.join(rem, "doc_id")
-    ragg = removed_rows.groupBy("bucket").agg(F.sum("tf").alias("t")).collect()
-    hit_buckets = {r["bucket"] for r in ragg}
-    removed_tokens = int(sum(r["t"] for r in ragg))
-
-    changed = sorted(delta_buckets | hit_buckets)
-
-    tmp_post = postings_path.rstrip("/") + ".update-tmp"
-    tmp_ts = termstats_path.rstrip("/") + ".update-tmp"
-    tmp_docs = docs_path.rstrip("/") + ".update-tmp"
-
-    # ======== STAGE phase: write every new partition to .update-tmp ========
-    # No live file is touched until the journal below is durably written; a
-    # crash anywhere in this phase leaves the index untouched (stray tmp
-    # dirs are discarded by the next apply_update's recover_if_needed).
-    if changed:
-        # ---- merge postings for changed buckets only (per-bucket swap) ----
-        merged = (
-            old_post.where(F.col("bucket").isin(changed))
-            .join(rem, "doc_id", "left_anti")
-            .unionByName(delta_post.select(*old_post.columns))
-        )
-        (
-            merged.repartition(len(changed), "bucket")
-            .sortWithinPartitions("bucket", "term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp_post)
-        )
-        if any(n.startswith("bucket=") for n in os.listdir(tmp_post)):
-            # termstats for changed buckets: term → bucket is functional, so
-            # a changed bucket's df values derive entirely from its merged
-            # postings
-            new_ts = (
-                spark.read.parquet(tmp_post)
-                .groupBy("term")
-                .agg(F.count("*").cast("long").alias("df"))
-                .withColumn("bucket", F.pmod(F.hash("term"), F.lit(nb)))
-            )
-            (
-                new_ts.repartition(len(changed), "bucket")
-                .sortWithinPartitions("bucket", "term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(tmp_ts)
-            )
-        else:
-            # every changed bucket emptied out — swaps below just delete
-            shutil.rmtree(tmp_ts, ignore_errors=True)
-            os.makedirs(tmp_ts)
-    # capture schemas BEFORE any swap (lineage points at live files)
-    post_schema = old_post.drop("bucket").schema
-    ts_schema = spark.read.parquet(termstats_path).drop("bucket").schema
-    docs_schema = docs.drop("doc_pt").schema
-
-    # ---- docs table: stage only partitions containing changed ids ----------
-    delta_docs = B.docs_derived_columns(delta_full).withColumn(
-        "doc_pt", F.pmod(F.col("doc_id"), F.lit(nb))
-    )
-    docs_full_rewrite = "doc_pt" not in docs.columns
-    changed_pts: list = []
-    if docs_full_rewrite:
-        # index built before the docs table was doc_pt-partitioned: one-time
-        # full rewrite onto the partitioned layout (no tokenization either way)
-        full = (
-            docs.withColumn("doc_pt", F.pmod(F.col("doc_id"), F.lit(nb)))
-            .join(rem, "doc_id", "left_anti")
-            .unionByName(delta_docs.select(*docs.columns, "doc_pt"))
-            .localCheckpoint(eager=True)
-        )
-        (
-            full.repartition(nb, "doc_pt")
-            .sortWithinPartitions("doc_pt", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("doc_pt")
-            .parquet(tmp_docs)
-        )
-    else:
-        removed_pts = {
-            r["p"]
-            for r in removed_ids.select(
-                F.pmod(F.col("doc_id"), F.lit(nb)).alias("p")
-            )
-            .distinct()
-            .collect()
-        }
-        dagg = delta_docs.agg(F.collect_set("doc_pt").alias("p")).collect()[0]
-        changed_pts = sorted(removed_pts | set(dagg["p"]))
-        if changed_pts:
-            docs_cols = [c for c in docs.columns]
-            merged_docs = (
-                docs.where(F.col("doc_pt").isin(changed_pts))
-                .join(rem, "doc_id", "left_anti")
-                .unionByName(delta_docs.select(*docs_cols))
-            )
-            (
-                merged_docs.repartition(len(changed_pts), "doc_pt")
-                .sortWithinPartitions("doc_pt", "doc_id")
-                .write.mode("overwrite")
-                .partitionBy("doc_pt")
-                .parquet(tmp_docs)
-            )
-
-    # ---- manifest: exact delta-adjusted N / total_tokens / avgdl -----------
-    new_num_docs = manifest.num_docs - counts["deleted"] + counts["added"]
-    new_total = manifest.total_tokens - removed_tokens + delta_tokens
-    new_manifest = B.IndexManifest(
-        name=manifest.name,
-        num_docs=new_num_docs,
-        avgdl=(new_total / new_num_docs) if new_num_docs else 0.0,
-        num_buckets=nb,
-        tokenizer_profile=manifest.tokenizer_profile,
-        params=manifest.params,
-        created_at=manifest.created_at,
-        source=manifest.source,
-        total_tokens=new_total,
-        # merge keeps modified docs' ids; only `added` minted fresh ones
-        next_doc_id=max_id + counts["added"] + 1,
-    )
-
-    # ---- vector refresh rides the SAME journal (ADVICE r03, medium) --------
-    # Staged before the journal is written, committed (renamed) with the
-    # other moves, rolled forward by recover_if_needed — a crash anywhere
-    # after the journal can no longer commit the BM25 update while silently
-    # dropping the vector refresh.
-    vector_moves: list = []
-    if removed_paths is not None:
-        from bm25_index_tool_spark.vector import stage_vector_refresh
-
-        ids = DS.segment_ids(index_dir)
-        vec_seg = (max(ids) + 1) if ids else 1
-        stage_vector_refresh(
-            spark, index_dir, delta_full, removed_paths, vec_seg, vector_moves
-        )
-
-    # ======== JOURNAL: durably record intent before touching live state ====
-    # The journal carries everything recovery needs to roll the commit phase
-    # FORWARD: which partitions swap (and which had fresh output, making the
-    # swap idempotent under re-execution), the complete new manifest, and
-    # whether the block engine must be re-derived (ADVICE r02).
-    import json as _json
-
-    journal = {
-        "changed_buckets": changed,
-        "post_fresh": _fresh_parts(tmp_post, "bucket"),
-        "ts_fresh": _fresh_parts(tmp_ts, "bucket"),
-        "docs_full_rewrite": docs_full_rewrite,
-        "changed_pts": changed_pts,
-        "docs_fresh": _fresh_parts(tmp_docs, "doc_pt"),
-        "post_schema": post_schema.jsonValue(),
-        "ts_schema": ts_schema.jsonValue(),
-        "docs_schema": docs_schema.jsonValue(),
-        "manifest_json": new_manifest.to_json(),
-        "blocks_stale": os.path.exists(os.path.join(index_dir, B.BLOCKS_DIR)),
-        "vector_moves": vector_moves,
-    }
-    jpath = os.path.join(index_dir, JOURNAL)
-    with open(jpath + ".tmp", "w") as f:
-        _json.dump(journal, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(jpath + ".tmp", jpath)
-
-    # ======== COMMIT phase: swaps + manifest + blocks ======================
-    if changed:
-        _swap_partitions(termstats_path, tmp_ts, "bucket", changed)
-        _swap_partitions(postings_path, tmp_post, "bucket", changed)
-        # if every bucket emptied out (corpus shrank to nothing), leave a
-        # readable schema'd-empty table like the full build does
-        _ensure_nonempty_partitioned(spark, postings_path, "bucket", post_schema)
-        _ensure_nonempty_partitioned(spark, termstats_path, "bucket", ts_schema)
-    if docs_full_rewrite:
-        shutil.rmtree(docs_path)
-        os.replace(tmp_docs, docs_path)
-    elif changed_pts:
-        _swap_partitions(docs_path, tmp_docs, "doc_pt", changed_pts)
-    _ensure_nonempty_partitioned(spark, docs_path, "doc_pt", docs_schema)
-
-    if os.path.exists(os.path.join(index_dir, B.BLOCKS_DIR)):
-        # fixed-span doc sharding (blocks_meta shard_span) keeps shard
-        # assignment stable as N changes: only shards containing changed
-        # doc_ids are re-encoded, from their own old blocks + the delta —
-        # IO ∝ delta, untouched shard dirs stay byte-identical.  Ordered
-        # BEFORE the manifest commit: the manifest stat is the reader-
-        # cache version token, and a blocks-engine query racing this
-        # window must cache under the OLD version (which the manifest
-        # write below then retires), never stale-under-new
-        from bm25_index_tool_spark.blocks import update_blocks
-
-        update_blocks(
-            spark, index_dir, delta_post.select("term", "doc_id", "tf", "dl"),
-            removed_ids,
-        )
-    delta_post.unpersist()
-
-    B.save_manifest(index_dir, new_manifest.to_json())
-    # vector refresh (reference commands/update.py:276+): the staged chunk
-    # segment + path tombstones become visible here, inside the journal's
-    # lifetime — recovery replays these renames idempotently
-    _commit_vector_moves(vector_moves)
-    os.remove(jpath)
-    for _p in id_cache:  # all delta writes committed; drop the key cache
-        _p.unpersist()
-    return new_manifest

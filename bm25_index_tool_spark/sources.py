@@ -14,10 +14,10 @@ incremental) sees the same (repo, path, commit, lang, content) DataFrame:
   (Hive/Unity/Iceberg/Delta all surface through ``spark.table``).
 
 At 100 TB the Iceberg path is the right default: snapshot isolation makes
-``detect_changes`` race-free (read one snapshot), partition/file pruning
+the update diff race-free (read one snapshot), partition/file pruning
 serves the discovery predicates, and incremental maintenance can become a
 single ``MERGE INTO`` (template below) executed by the Iceberg writer
-instead of our per-bucket parquet swap.
+instead of our parquet segment append.
 """
 
 from __future__ import annotations
@@ -59,7 +59,7 @@ def _read_catalog_table(spark: SparkSession, name: str, *, flavor: str) -> DataF
 
 
 # I6 upsert/delete as one Iceberg MERGE (SURVEY.md §2.3): equivalent to
-# detect_changes + apply_update when the index itself is Iceberg-backed.
+# the update diff + apply_update when the index itself is Iceberg-backed.
 # Kept as a template — executed only where an Iceberg catalog exists.
 MERGE_CORPUS_SQL = """
 MERGE INTO {target} t

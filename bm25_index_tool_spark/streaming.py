@@ -7,19 +7,19 @@ drop directory (or Kafka/Iceberg CDC feed), and the index absorbs them as
 micro-batches without ever re-reading the unchanged corpus.
 
 Spark-first shape: ``readStream`` over the drop directory → ``writeStream
-.foreachBatch`` → the SAME true-delta merge the batch path uses
+.foreachBatch`` → the SAME segment-append update the batch path uses
 (incremental.apply_update, mode="upsert").  Design points:
 
 * **Upsert semantics per micro-batch** — a batch is a partial corpus;
   absence is not deletion (deletions remain an explicit batch operation,
   as in the reference).
-* **Replay-safe** — the merge diffs on (full_path, md5(content)), so a
+* **Replay-safe** — the update diffs on (full_path, md5(content)), so a
   re-delivered batch (failure/restart between foreachBatch and the
-  source-offset commit) produces an empty ChangeSet and the index is
-  unchanged.  A crash *inside* the merge is covered by the sink-side
-  journal (incremental.recover_if_needed rolls the half-applied update
-  forward before the replayed batch is diffed) — together these give
-  effectively-once application; the exactly-once guarantee is the pair
+  source-offset commit) produces an empty diff and the index is
+  unchanged.  A crash *inside* the update is covered by the sink-side
+  segment journal (delta_store.recover_segments_if_needed rolls the
+  half-applied update forward before the replayed batch is diffed) —
+  together these give effectively-once application; the exactly-once guarantee is the pair
   (md5 diff idempotence + journal), not the diff alone (ADVICE r02).
 * **Within-batch dedup** — a micro-batch can carry several rows for one
   path (a file rewritten twice before a trigger, or present in two
@@ -100,7 +100,7 @@ def stream_index_updates(
             .where(F.col("_rn") == 1)
             .drop("_mtime", "_src", "_rn")
         )
-        # empty batches are no-ops inside apply_update (empty ChangeSet
+        # empty batches are no-ops inside apply_update (empty diff
         # short-circuit).  Past auto_compact_segments outstanding segments
         # the trigger pays a TIERED merge (fold the oldest half into one
         # segment, cost ∝ delta — merge_segments), never the full O(base)

@@ -1,13 +1,14 @@
-"""LSM append-strategy incremental updates (delta_store.py, VERDICT r02 #3).
+"""LSM segment-append incremental updates (delta_store.py, VERDICT r02 #3).
 
 Invariants under test:
-* append update is query-identical to the FTS5 oracle on the new corpus
-  (same gate as the merge path), while leaving EVERY base parquet file
-  byte-identical — write IO ∝ delta even for scattered edits;
+* append update is query-identical to the FTS5 oracle on the new corpus,
+  while leaving EVERY base parquet file byte-identical — write IO ∝ delta
+  even for scattered edits, and only the delta is tokenized;
 * termstats view: df adjustments apply, terms whose df hits 0 vanish;
 * compaction folds segments + tombstones into fresh bases with identical
   query results, and auto-compaction triggers past the segment bound;
-* crash between segment journal and the directory renames rolls forward.
+* a crash in any commit window leaves the pre- or the post-update state;
+  recovery rolls the journaled commit forward.
 """
 
 from __future__ import annotations
@@ -73,7 +74,9 @@ def _assert_oracle_identical(client, name, cur_rows, queries):
 QUERIES = ["xylograph", "apple", "data value", "the"]
 
 
-def test_append_update_oracle_identical_and_base_untouched(spark, tmp_path):
+def test_append_update_oracle_identical_and_base_untouched(
+    spark, tmp_path, monkeypatch
+):
     client = BM25SparkClient(spark, str(tmp_path / "root"))
     client.create_index(
         "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=8
@@ -84,9 +87,22 @@ def test_append_update_oracle_identical_and_base_untouched(spark, tmp_path):
         for sub in (B.POSTINGS_DIR, B.TERMSTATS_DIR, B.DOCS_DIR)
     }
 
+    # spy: rows entering the tokenizer during the update
+    real_tokenize = DS._tokenize_rows
+    seen = []
+
+    def spy(spark_, rows, *a, **k):
+        seen.append(rows.count())
+        return real_tokenize(spark_, rows, *a, **k)
+
+    monkeypatch.setattr(DS, "_tokenize_rows", spy)
     m = client.update_index(
         "a", spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
-    )  # default strategy = append
+    )
+    monkeypatch.undo()
+    # only the delta is tokenized: the 4 modified + 4 added docs' new
+    # content, then the 3 deleted + 4 modified docs' old content
+    assert seen == [8, 7]
     assert DS.has_segments(idx_dir) and DS.segment_ids(idx_dir) == [1]
     assert m.num_docs == len(_delta_rows())
 
@@ -150,8 +166,6 @@ def test_second_append_then_compact(spark, tmp_path):
 
 
 def test_auto_compaction_bound(spark, tmp_path):
-    from bm25_index_tool_spark import incremental as I
-
     client = BM25SparkClient(spark, str(tmp_path / "root"))
     rows = _base_rows()
     client.create_index(
@@ -177,37 +191,182 @@ def test_auto_compaction_bound(spark, tmp_path):
     _assert_oracle_identical(client, "a", cur, ["wave0", "wave2", "apple"])
 
 
-def test_append_crash_rolls_forward(spark, tmp_path, monkeypatch):
-    """Crash after the segment journal but before any directory rename:
-    recovery publishes the staged segment and the journaled manifest."""
-    client = BM25SparkClient(spark, str(tmp_path / "root"))
-    client.create_index(
-        "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=8
-    )
-    idx_dir = client._index_dir("a")
+class _Boom(RuntimeError):
+    pass
 
+
+def _crash_at_publish(monkeypatch, skip: int, table: str = ""):
+    """Let the first ``skip`` staged-dir renames (of ``table``, when given)
+    through and crash on the next one."""
     real_replace = os.replace
+    calls = {"n": 0}
 
     def boom(src, dst):
-        if src.endswith(".staging"):
-            raise RuntimeError("injected crash at segment publish")
+        if src.endswith(".staging") and f"{os.sep}{table}" in src:
+            if calls["n"] >= skip:
+                raise _Boom(f"injected crash at publish #{calls['n']}")
+            calls["n"] += 1
         return real_replace(src, dst)
 
     monkeypatch.setattr(DS.os, "replace", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        client.update_index(
-            "a", spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
-        )
-    monkeypatch.setattr(DS.os, "replace", real_replace)
 
-    assert os.path.exists(os.path.join(idx_dir, DS.SEG_JOURNAL))
-    assert DS.recover_segments_if_needed(spark, idx_dir) is True
-    assert DS.segment_ids(idx_dir) == [1]
+
+def _crash_after_staged_docs_write(monkeypatch):
+    """The docs segment write completes, then raises — before the journal
+    exists, with staged dirs left on disk."""
+    real_write = DS._write_flat
+
+    def boom(df, path, n_tasks, sort_cols):
+        real_write(df, path, n_tasks, sort_cols)
+        if f"{os.sep}{DS.DOCS_SEG_DIR}{os.sep}" in path:
+            raise _Boom("injected crash after a staged write")
+
+    monkeypatch.setattr(DS, "_write_flat", boom)
+
+
+def _crash_in_update_blocks(monkeypatch):
+    import bm25_index_tool_spark.blocks as BL
+
+    def boom(*a, **k):
+        raise _Boom("injected crash in update_blocks")
+
+    monkeypatch.setattr(BL, "update_blocks", boom)
+
+
+def _staging_dirs(idx_dir):
+    return [
+        os.path.join(dp, d)
+        for dp, ds, _f in os.walk(idx_dir)
+        for d in ds
+        if d.endswith(".staging")
+    ]
+
+
+_VEC_OLD = "benthic oscillation ledger"
+_VEC_NEW = "glowworm cartography almanac"
+
+
+@pytest.mark.parametrize(
+    "window",
+    ["staged_write", "first_publish", "after_first_publish", "blocks",
+     "vector_publish"],
+)
+def test_append_crash_rolls_forward(spark, tmp_path, monkeypatch, window):
+    """Crash windows of the segment commit.  Before the journal exists
+    (``staged_write``) the index keeps answering the pre-update state and
+    the next writer sweeps the staging dirs; after it (the publish
+    renames, the block-store update, the vector segment's rename) recovery
+    publishes the staged segment, re-derives stale blocks and writes the
+    journaled manifest."""
+    base, cur = _base_rows(), _delta_rows()
+    if window == "vector_publish":
+        base = base + [("rv", "keep/b.txt", "c1", "txt", _VEC_OLD)]
+        cur = cur + [("rv", "keep/b.txt", "c2", "txt", _VEC_NEW)]
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    client.create_index(
+        "a", spark.createDataFrame(base, C.CORPUS_SCHEMA), num_buckets=8,
+        build_block_engine=(window == "blocks"),
+        build_vector_index=(window == "vector_publish"),
+    )
+    idx_dir = client._index_dir("a")
+    m0 = B.load_manifest(idx_dir)
+    base_files = {
+        sub: _tree_hashes(os.path.join(idx_dir, sub))
+        for sub in (B.POSTINGS_DIR, B.TERMSTATS_DIR, B.DOCS_DIR)
+    }
+
+    if window == "staged_write":
+        _crash_after_staged_docs_write(monkeypatch)
+    elif window == "blocks":
+        _crash_in_update_blocks(monkeypatch)
+    elif window == "vector_publish":
+        _crash_at_publish(monkeypatch, 0, DS.VECTOR_SEG_DIR)
+    else:
+        _crash_at_publish(monkeypatch, 0 if window == "first_publish" else 1)
+    with pytest.raises(_Boom):
+        client.update_index("a", spark.createDataFrame(cur, C.CORPUS_SCHEMA))
+    monkeypatch.undo()
     client._open.pop("a", None)
     client.cache.clear()
-    _assert_oracle_identical(client, "a", _delta_rows(), QUERIES)
+
+    jpath = os.path.join(idx_dir, DS.SEG_JOURNAL)
+    if window == "staged_write":
+        assert not os.path.exists(jpath)
+        assert _staging_dirs(idx_dir), "the crash must leave staged dirs"
+        assert DS.segment_ids(idx_dir) == []
+        assert B.load_manifest(idx_dir).to_json() == m0.to_json()
+        for sub, exp in base_files.items():
+            assert _tree_hashes(os.path.join(idx_dir, sub)) == exp, sub
+        _assert_oracle_identical(client, "a", base, QUERIES)
+        # the next writer sweeps the staging, then applies the update
+        client.update_index("a", spark.createDataFrame(cur, C.CORPUS_SCHEMA))
+    else:
+        assert os.path.exists(jpath), "journal must survive the crash"
+        assert DS.recover_segments_if_needed(spark, idx_dir) is True
+        client._open.pop("a", None)
+        client.cache.clear()
+
+    assert not os.path.exists(jpath)
+    assert not _staging_dirs(idx_dir)
+    assert DS.segment_ids(idx_dir) == [1]
+    _assert_oracle_identical(client, "a", cur, QUERIES)
     m = B.load_manifest(idx_dir)
-    assert m.num_docs == len(_delta_rows())
+    assert m.num_docs == len(cur)
+    idx = client._require("a")
+    post_ids = idx.postings().select("doc_id").distinct()
+    doc_ids = idx.docs().select("doc_id")
+    # no ghost postings, and every (non-empty) doc has postings
+    assert post_ids.join(doc_ids, "doc_id", "left_anti").count() == 0
+    assert doc_ids.join(post_ids, "doc_id", "left_anti").count() == 0
+    total = (
+        idx.postings().groupBy("doc_id").max("dl").toPandas()["max(dl)"].sum()
+    )
+    assert m.total_tokens == int(total)
+    assert math.isclose(m.avgdl, m.total_tokens / m.num_docs, rel_tol=1e-12)
+
+    if window == "blocks":
+        # recovery rebuilt the stale block store: both engines agree
+        for q in QUERIES:
+            join = client.search("a", q, top_k=10, use_cache=False,
+                                 engine="join")
+            blk = client.search("a", q, top_k=10, use_cache=False,
+                                engine="blocks")
+            assert [r["path"] for r in blk] == [r["path"] for r in join], q
+            for g, e in zip(blk, join):
+                assert math.isclose(g["score"], e["score"], rel_tol=1e-9), q
+    if window == "vector_publish":
+        from bm25_index_tool_spark import vector as V
+
+        top = client.search_semantic("a", _VEC_NEW, top_k=1)[0]
+        assert top["path"] == "rv/keep/b.txt"
+        assert top["score"] == pytest.approx(1.0)
+        vv = V.vector_view(spark, idx_dir)
+        assert vv.where(vv.chunk_text == _VEC_OLD).count() == 0
+
+
+def test_legacy_merge_journal_fails_clearly(spark, tmp_path):
+    """A crashed merge-and-swap update (a writer that no longer exists)
+    leaves ``_update.journal`` and possibly half-swapped partitions:
+    every writer refuses the index and names the file, rather than
+    serving it."""
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    client.create_index(
+        "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=4
+    )
+    idx_dir = client._index_dir("a")
+    with open(os.path.join(idx_dir, "_update.journal"), "w") as f:
+        f.write("{}")
+    cur = spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
+    with pytest.raises(ValueError, match=r"_update\.journal.*rebuild"):
+        client.update_index("a", cur)
+    assert DS.segment_ids(idx_dir) == []
+    # the rebuild the error asks for clears it
+    client.create_index(
+        "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA),
+        num_buckets=4, overwrite=True,
+    )
+    client.update_index("a", cur)
+    assert DS.segment_ids(idx_dir) == [1]
 
 
 def test_compact_crash_rolls_forward(spark, tmp_path, monkeypatch):
@@ -250,8 +409,7 @@ def test_compact_crash_rolls_forward(spark, tmp_path, monkeypatch):
     assert dups.count() == 0
 
 
-@pytest.mark.parametrize("strategy", ["append", "merge"])
-def test_vector_store_refreshes_on_update(spark, tmp_path, strategy):
+def test_vector_store_refreshes_on_update(spark, tmp_path):
     """Reference commands/update.py:276+: an update must refresh the vector
     index — chunks of deleted∪modified docs drop, added∪modified re-embed
     with the store's own embedder/chunk params.  Exact-text queries score
@@ -266,7 +424,7 @@ def test_vector_store_refreshes_on_update(spark, tmp_path, strategy):
         ("rv", "keep/b.txt", "c1", "txt", old_b),
         ("rv", "drop/d.txt", "c1", "txt", doc_d),
     ]
-    client = BM25SparkClient(spark, str(tmp_path / f"root_{strategy}"))
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
     client.create_index(
         "v", spark.createDataFrame(base, C.CORPUS_SCHEMA),
         num_buckets=4, build_vector_index=True,
@@ -277,9 +435,7 @@ def test_vector_store_refreshes_on_update(spark, tmp_path, strategy):
     cur = [r for r in base if r[1] != "drop/d.txt" and r[1] != "keep/b.txt"]
     cur += [("rv", "keep/b.txt", "c2", "txt", new_b),
             ("rv", "new/c.txt", "c1", "txt", doc_c)]
-    client.update_index(
-        "v", spark.createDataFrame(cur, C.CORPUS_SCHEMA), strategy=strategy
-    )
+    client.update_index("v", spark.createDataFrame(cur, C.CORPUS_SCHEMA))
 
     for q, path in ((new_b, "rv/keep/b.txt"), (doc_c, "rv/new/c.txt")):
         top = client.search_semantic("v", q, top_k=1)[0]
@@ -956,8 +1112,10 @@ def test_null_content_update_end_to_end(spark, tmp_path):
 
 
 def test_num_buckets_validated_on_append_strategy(spark, tmp_path):
-    """The layout check must fire on the DEFAULT strategy too, not only
-    merge."""
+    """A bucket layout other than the index's raises, and the update takes
+    no ``strategy`` (there is one update path): a keyword is a TypeError,
+    the CLI option an argparse error."""
+    from bm25_index_tool_spark.cli import main
     from bm25_index_tool_spark.incremental import apply_update
 
     client = BM25SparkClient(spark, str(tmp_path / "root"))
@@ -966,10 +1124,14 @@ def test_num_buckets_validated_on_append_strategy(spark, tmp_path):
     )
     cur = spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
     with pytest.raises(ValueError, match="fixed at build time"):
-        apply_update(
-            spark, client._index_dir("nbv"), cur,
-            num_buckets=16, strategy="append",
-        )
+        apply_update(spark, client._index_dir("nbv"), cur, num_buckets=16)
+    with pytest.raises(TypeError, match="strategy"):
+        apply_update(spark, client._index_dir("nbv"), cur, strategy="merge")
+    with pytest.raises(TypeError, match="strategy"):
+        client.update_index("nbv", cur, strategy="merge")
+    with pytest.raises(SystemExit):
+        main(["--root", str(tmp_path / "root"), "update", "nbv",
+              "--corpus", "unused", "--strategy", "merge"])
 
 
 def _scan_blocks(df) -> list[str]:

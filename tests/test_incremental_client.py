@@ -6,12 +6,13 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from bm25_index_tool_spark import corpus as C
+from bm25_index_tool_spark import delta_store as DS
 from bm25_index_tool_spark.client import BM25SparkClient
 from bm25_index_tool_spark.filters import PathFilter
 from bm25_index_tool_spark.fragments import extract_fragments
-from bm25_index_tool_spark.incremental import detect_changes
 from tests.oracle import FTS5Oracle
 
 
@@ -49,11 +50,20 @@ def test_detect_changes(spark, client):
     client.create_index(
         "inc", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=4
     )
-    idx = client._require("inc")
-    cs = detect_changes(
-        spark.createDataFrame(cur_rows, C.CORPUS_SCHEMA), idx.docs()
+    cur = (
+        spark.createDataFrame(cur_rows, C.CORPUS_SCHEMA)
+        .withColumn("full_path", F.concat_ws("/", "repo", "path"))
+        .withColumn("content_md5", F.md5("content"))
     )
-    assert cs.counts() == {"added": 5, "modified": 5, "deleted": 5}
+    stored = client._require("inc").docs().select(
+        "full_path", F.col("content_md5").alias("_s"), "doc_id"
+    )
+    counts = {
+        r["status"]: r["count"]
+        for r in DS.full_diff_frame(cur, stored)
+        .groupBy("status").count().collect()
+    }
+    assert counts == {"added": 5, "modified": 5, "deleted": 5}
 
 
 def test_incremental_equals_rebuild(spark, client, tmp_path):
@@ -69,132 +79,6 @@ def test_incremental_equals_rebuild(spark, client, tmp_path):
     for q in ["zanzibar", "data value", "apple"]:
         got = client.search("inc", q, top_k=10, use_cache=False)
         exp = oracle.search_bm25(q, top_k=10)
-        assert [r["path"] for r in got] == [e[1] for e in exp], q
-        for g, e in zip(got, exp):
-            assert math.isclose(g["score"], e[4], rel_tol=1e-9), q
-
-
-def _dir_file_hashes(root):
-    import hashlib
-    import os
-
-    out = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            p = os.path.join(dirpath, fn)
-            rel = os.path.relpath(p, root)
-            with open(p, "rb") as f:
-                out[rel] = hashlib.sha256(f.read()).hexdigest()
-    return out
-
-
-def test_incremental_touches_only_changed_buckets(spark, tmp_path):
-    """VERDICT r01 #2 'done' criteria: after an incremental update,
-    (a) parquet files of postings/termstats buckets not containing delta or
-    removed terms are BYTE-IDENTICAL, (b) docs partitions without changed
-    doc_ids are byte-identical, and (c) only delta docs enter the tokenizer."""
-    import os
-
-    from bm25_index_tool_spark import build as B
-    from bm25_index_tool_spark import incremental as I
-    from bm25_index_tool_spark.murmur import term_bucket
-    from bm25_index_tool_spark.tokenize import _tokenize_series
-
-    import pandas as pd
-
-    nb = 32
-    words = [f"w{chr(97 + i)}x" for i in range(30)]
-    base = [
-        ("r", f"a/d{i}.txt", "c1", "txt", f"{words[i]} hello")
-        for i in range(30)
-    ]
-    # delta: delete d7, modify d9, add d30
-    cur = [
-        r for r in base if r[1] != "a/d7.txt" and r[1] != "a/d9.txt"
-    ]
-    modified = ("r", "a/d9.txt", "c1", "txt", "zulu hello")
-    added = ("r", "a/d30.txt", "c1", "txt", "yankee hello")
-    cur += [modified, added]
-
-    idx_dir = str(tmp_path / "sel")
-    B.build_index(
-        spark,
-        spark.createDataFrame(base, C.CORPUS_SCHEMA),
-        idx_dir,
-        num_buckets=nb,
-    )
-    before_post = _dir_file_hashes(os.path.join(idx_dir, B.POSTINGS_DIR))
-    before_ts = _dir_file_hashes(os.path.join(idx_dir, B.TERMSTATS_DIR))
-    before_docs = _dir_file_hashes(os.path.join(idx_dir, B.DOCS_DIR))
-
-    # spy: count rows entering the tokenizer during the update
-    from bm25_index_tool_spark import arrow_tokenize as AT
-
-    real = AT.doc_term_freqs
-    seen = []
-
-    def spy(df, text_expr, id_col="doc_id", profile="unicode61"):
-        seen.append(df.count())
-        return real(df, text_expr, id_col, profile)
-
-    AT.doc_term_freqs = spy
-    try:
-        m = I.apply_update(
-            spark, idx_dir, spark.createDataFrame(cur, C.CORPUS_SCHEMA),
-            strategy="merge",  # this test pins the merge path's invariants
-        )
-    finally:
-        AT.doc_term_freqs = real
-    assert seen == [2], "exactly the 2 delta docs (modified+added) tokenized"
-    assert m.num_docs == 30  # 30 - 1 deleted + 1 added
-
-    # expected changed term-buckets: terms of delta docs (new content) and
-    # of removed docs (deleted + modified OLD content)
-    def fts_terms(row):
-        text = f"{row[0]}/{row[1]} {row[1].rsplit('/', 1)[-1]} {row[4]}"
-        return set(_tokenize_series(pd.Series([text])).iloc[0])
-
-    changed_terms = (
-        fts_terms(modified)
-        | fts_terms(added)
-        | fts_terms(base[7])
-        | fts_terms(base[9])
-    )
-    changed_buckets = {f"bucket={term_bucket(t, nb)}" for t in changed_terms}
-    after_post = _dir_file_hashes(os.path.join(idx_dir, B.POSTINGS_DIR))
-    after_ts = _dir_file_hashes(os.path.join(idx_dir, B.TERMSTATS_DIR))
-
-    untouched = 0
-    for rel, h in before_post.items():
-        bucket = rel.split(os.sep)[0]
-        if bucket not in changed_buckets:
-            assert after_post.get(rel) == h, f"postings {rel} rewritten"
-            untouched += 1
-    assert untouched >= 3, "fixture must leave several buckets untouched"
-    for rel, h in before_ts.items():
-        bucket = rel.split(os.sep)[0]
-        if bucket not in changed_buckets:
-            assert after_ts.get(rel) == h, f"termstats {rel} rewritten"
-
-    # docs partitions: ids 8 (deleted d7) / 10 (modified d9) / 31 (added)
-    changed_pts = {"doc_pt=8", "doc_pt=10", "doc_pt=31"}
-    after_docs = _dir_file_hashes(os.path.join(idx_dir, B.DOCS_DIR))
-    for rel, h in before_docs.items():
-        pt = rel.split(os.sep)[0]
-        if pt not in changed_pts:
-            assert after_docs.get(rel) == h, f"docs {rel} rewritten"
-
-    # and the updated index answers identically to the FTS5 oracle
-    oracle = FTS5Oracle()
-    oracle.add_documents(C.ordered_rows(cur))
-    from bm25_index_tool_spark.score import LoadedIndex, score_query
-
-    idx = LoadedIndex.open(spark, idx_dir)
-    for q in ("hello", "zulu", "yankee"):
-        exp = oracle.search_bm25(q, top_k=10)
-        got = score_query(idx, q, top_k=10).collect()
         assert [r["path"] for r in got] == [e[1] for e in exp], q
         for g, e in zip(got, exp):
             assert math.isclose(g["score"], e[4], rel_tol=1e-9), q

@@ -1,23 +1,19 @@
-"""Crash-consistency of apply_update (ADVICE r02).
+"""Update-path guards that sit beside the commit protocol: duplicate
+paths in an update corpus are rejected before anything is staged, and a
+search whose plan was built just before a full compaction swapped the base
+directories retries against the committed state.
 
-apply_update stages new partitions under *.update-tmp, journals its intent
-(_update.journal) before the first live mutation, and deletes the journal
-after the last write.  These tests inject crashes at each window and assert
-recover_if_needed converges the index to the exact post-update state
-(query-identical to the FTS5 oracle on the new corpus, manifest exact),
-with no ghost postings (postings doc_ids ⊆ docs doc_ids).
+The crash windows of the update commit itself are in test_delta_store.py
+(``test_append_crash_rolls_forward``).
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import pytest
 
-from bm25_index_tool_spark import build as B
 from bm25_index_tool_spark import corpus as C
-from bm25_index_tool_spark import incremental as I
 from bm25_index_tool_spark.client import BM25SparkClient
 from tests.oracle import FTS5Oracle
 
@@ -40,238 +36,6 @@ def _delta_rows():
             out.append(r)
     out.extend(C.generate_rows(N0 + 4, seed=77)[N0:])  # 4 added
     return out
-
-
-class _Boom(RuntimeError):
-    pass
-
-
-def _crash_after_n_swaps(monkeypatch, n: int):
-    """Let the first n _swap_partitions calls through, crash on call n+1."""
-    real = I._swap_partitions
-    calls = {"n": 0}
-
-    def wrapper(*a, **k):
-        if calls["n"] >= n:
-            raise _Boom(f"injected crash at swap #{calls['n']}")
-        calls["n"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(I, "_swap_partitions", wrapper)
-    return lambda: monkeypatch.setattr(I, "_swap_partitions", real)
-
-
-def _assert_converged(spark, client, name, cur_rows):
-    idx = client._require(name)
-    docs = idx.docs()
-    post = idx.postings()
-
-    # no ghost postings: every postings doc_id has a docs row
-    ghosts = post.select("doc_id").distinct().join(
-        docs.select("doc_id"), "doc_id", "left_anti"
-    )
-    assert ghosts.count() == 0, "orphan postings survived recovery"
-    # no missing postings either: every non-empty doc has postings
-    # (fixture docs all have tokens)
-    missing = docs.select("doc_id").join(
-        post.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    assert missing.count() == 0
-
-    # manifest is the exact post-update state
-    m = idx.manifest
-    assert m.num_docs == len(cur_rows)
-    total = post.groupBy("doc_id").max("dl").toPandas()["max(dl)"].sum()
-    assert m.total_tokens == int(total)
-    assert math.isclose(m.avgdl, m.total_tokens / m.num_docs, rel_tol=1e-12)
-
-    # query-identical to FTS5 on the new corpus
-    oracle = FTS5Oracle()
-    oracle.add_documents(C.ordered_rows(cur_rows))
-    for q in ["xylophone", "apple", "data value"]:
-        got = client.search(name, q, top_k=10, use_cache=False)
-        exp = oracle.search_bm25(q, top_k=10)
-        assert [r["path"] for r in got] == [e[1] for e in exp], q
-        for g, e in zip(got, exp):
-            assert math.isclose(g["score"], e[4], rel_tol=1e-9), q
-
-
-@pytest.mark.parametrize("crash_at", ["first_swap", "mid_swap", "blocks"])
-def test_crash_windows_roll_forward(spark, tmp_path, monkeypatch, crash_at):
-    client = BM25SparkClient(spark, str(tmp_path / f"root_{crash_at}"))
-    client.create_index(
-        "r",
-        spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA),
-        num_buckets=8,
-        build_block_engine=(crash_at == "blocks"),
-    )
-    cur = spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
-    idx_dir = client._index_dir("r")
-
-    if crash_at in ("first_swap", "mid_swap"):
-        restore = _crash_after_n_swaps(
-            monkeypatch, 0 if crash_at == "first_swap" else 2
-        )
-    else:
-        import bm25_index_tool_spark.blocks as BL
-
-        real_upd = BL.update_blocks
-
-        def boom(*a, **k):
-            raise _Boom("injected crash before blocks update")
-
-        monkeypatch.setattr(BL, "update_blocks", boom)
-        restore = lambda: monkeypatch.setattr(BL, "update_blocks", real_upd)
-
-    with pytest.raises(_Boom):
-        client.update_index("r", cur, strategy="merge")
-    restore()
-
-    jpath = os.path.join(idx_dir, I.JOURNAL)
-    assert os.path.exists(jpath), "journal must survive the crash window"
-
-    assert I.recover_if_needed(spark, idx_dir) is True
-    assert not os.path.exists(jpath)
-    client._open.pop("r", None)
-    client.cache.clear()
-    _assert_converged(spark, client, "r", _delta_rows())
-
-    if crash_at == "blocks":
-        # blocks were re-derived from committed postings by recovery and
-        # agree with the plan-1 scorer
-        from bm25_index_tool_spark.wand import wand_search
-
-        got = wand_search(client._require("r"), "xylophone", top_k=10)
-        plain = client.search("r", "xylophone", top_k=10, use_cache=False)
-        assert [r["doc_id"] for r in got.collect()] == [
-            r["document_id"] for r in plain
-        ]
-
-
-def test_crash_before_journal_leaves_index_untouched(
-    spark, tmp_path, monkeypatch
-):
-    """A crash during the STAGE phase (before the journal) must leave the
-    live index byte-identical; the stray tmp dirs are swept on next use."""
-    import hashlib
-
-    client = BM25SparkClient(spark, str(tmp_path / "root_stage"))
-    client.create_index(
-        "r", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=8
-    )
-    idx_dir = client._index_dir("r")
-
-    def tree_hash(root):
-        out = {}
-        for dp, _d, fs in os.walk(root):
-            if ".update-tmp" in dp:
-                continue
-            for fn in fs:
-                if fn.endswith(".parquet") or fn == B.MANIFEST:
-                    p = os.path.join(dp, fn)
-                    with open(p, "rb") as f:
-                        out[os.path.relpath(p, root)] = hashlib.sha256(
-                            f.read()
-                        ).hexdigest()
-        return out
-
-    before = tree_hash(idx_dir)
-
-    # crash while staging: journal write is the first thing after staging —
-    # make it explode
-    real_replace = os.replace
-
-    def boom_replace(src, dst):
-        if dst.endswith(I.JOURNAL):
-            raise _Boom("injected crash at journal write")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(I.os, "replace", boom_replace)
-    with pytest.raises(_Boom):
-        client.update_index(
-            "r", spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA),
-            strategy="merge",
-        )
-    monkeypatch.setattr(I.os, "replace", real_replace)
-
-    assert not os.path.exists(os.path.join(idx_dir, I.JOURNAL))
-    assert I.recover_if_needed(spark, idx_dir) is False  # sweeps tmp dirs
-    for sub in (B.POSTINGS_DIR, B.TERMSTATS_DIR, B.DOCS_DIR):
-        assert not os.path.exists(os.path.join(idx_dir, sub + ".update-tmp"))
-    assert tree_hash(idx_dir) == before, "live index must be untouched"
-
-    # and the update still applies cleanly afterwards
-    client.update_index(
-        "r", spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA),
-        strategy="merge",
-    )
-    _assert_converged(spark, client, "r", _delta_rows())
-
-
-def test_merge_vector_refresh_crash_rolls_forward(spark, tmp_path, monkeypatch):
-    """ADVICE r03 (medium): the merge-strategy vector refresh rides the
-    SAME _update.journal as the bucket swaps — a crash after the BM25
-    commit but before the vector segment renames must be rolled forward by
-    recovery, never silently dropped (which left the vector store
-    permanently stale)."""
-    import pytest as _pytest
-
-    from bm25_index_tool_spark import delta_store as DS
-    from bm25_index_tool_spark import vector as V
-
-    old_b = "benthic oscillation ledger"
-    new_b = "glowworm cartography almanac"
-    base = C.generate_rows(15, seed=91) + [
-        ("rv", "keep/b.txt", "c1", "txt", old_b)
-    ]
-    client = BM25SparkClient(spark, str(tmp_path / "root_vec"))
-    client.create_index(
-        "v", spark.createDataFrame(base, C.CORPUS_SCHEMA),
-        num_buckets=4, build_vector_index=True,
-    )
-    idx_dir = client._index_dir("v")
-    cur = [r for r in base if r[1] != "keep/b.txt"] + [
-        ("rv", "keep/b.txt", "c2", "txt", new_b)
-    ]
-
-    real_commit = I._commit_vector_moves
-
-    def boom(moves):
-        raise _Boom("injected crash before vector segment commit")
-
-    monkeypatch.setattr(I, "_commit_vector_moves", boom)
-    with pytest.raises(_Boom):
-        client.update_index(
-            "v", spark.createDataFrame(cur, C.CORPUS_SCHEMA), strategy="merge"
-        )
-    monkeypatch.setattr(I, "_commit_vector_moves", real_commit)
-
-    jpath = os.path.join(idx_dir, I.JOURNAL)
-    assert os.path.exists(jpath), "journal must survive the crash window"
-    # the segment-journal sweeper must NOT discard staging referenced by a
-    # pending merge journal (it runs first on every index open)
-    assert DS.recover_segments_if_needed(spark, idx_dir) is False
-    assert any(
-        n.endswith(".staging")
-        for n in os.listdir(os.path.join(idx_dir, DS.VECTOR_SEG_DIR))
-    ), "staged vector segment swept before recovery"
-
-    assert I.recover_if_needed(spark, idx_dir) is True
-    assert not os.path.exists(jpath)
-    client._open.pop("v", None)
-    client.cache.clear()
-
-    top = client.search_semantic("v", new_b, top_k=1)[0]
-    assert top["path"] == "rv/keep/b.txt"
-    assert top["score"] == _pytest.approx(1.0)
-    vv = V.vector_view(spark, idx_dir)
-    assert vv.where(vv.chunk_text == old_b).count() == 0
-    _assert_converged_rows = [r for r in cur]  # BM25 side converged too
-    oracle = FTS5Oracle()
-    oracle.add_documents(C.ordered_rows(_assert_converged_rows))
-    got = client.search("v", "glowworm", top_k=5, use_cache=False)
-    exp = oracle.search_bm25("glowworm", top_k=5)
-    assert [r["path"] for r in got] == [e[1] for e in exp]
 
 
 def test_duplicate_full_path_rejected(spark, tmp_path):
@@ -314,12 +78,9 @@ def test_search_retries_across_compaction_base_swap(
     c.create_index(
         "race", spark.createDataFrame(rows, C.CORPUS_SCHEMA), num_buckets=4
     )
-    # append-strategy update → outstanding segment, so compaction has base
-    # swaps to perform
+    # update → outstanding segment, so compaction has base swaps to perform
     c.update_index(
-        "race",
-        spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA),
-        strategy="append",
+        "race", spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
     )
 
     real_score = client_mod.score_query

@@ -77,7 +77,7 @@ def test_stream_ingest_merges_and_replays(spark, tmp_path):
     assert m1.num_docs == len(final_rows)
 
     # replay: fresh checkpoint ⇒ both files re-delivered; the content-
-    # addressed merge must produce an empty ChangeSet (index unchanged)
+    # addressed update must produce an empty diff (index unchanged)
     q2 = stream_index_updates(
         spark, idx_dir, str(src),
         checkpoint_dir=str(tmp_path / "ckpt2"), available_now=True,

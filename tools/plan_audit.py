@@ -203,7 +203,7 @@ def main() -> None:
     ]
     lsm_client.update_index(
         "lsm", spark.createDataFrame(lsm_cur, C.CORPUS_SCHEMA)
-    )  # append strategy → segments + tombstones
+    )  # append update → segments + tombstones
     lsm_idx = lsm_client._require("lsm")
     lq = score_query(lsm_idx, "kubernetes networking", 10, include_content=False)
     lq.collect()
