@@ -110,6 +110,8 @@ BLOCKS_SCHEMA = (
     "term string, block_id int, n int, doc_id_min long, doc_id_max long,"
     " max_tf int, min_dl int, payload binary"
 )
+# the on-disk store: partitioned by shard (a flat table when empty)
+SHARDED_BLOCKS_SCHEMA = "shard int, " + BLOCKS_SCHEMA
 
 
 def blocks_from_sorted_batch(terms, doc_ids, tfs, dls, block_size: int = BLOCK_SIZE):
@@ -207,9 +209,10 @@ def build_blocks(
     shard_span = max((n_docs + num_shards - 1) // num_shards, 1)
     from bm25_index_tool_spark import delta_store as DS
 
-    post = spark.read.parquet(os.path.join(index_dir, B.POSTINGS_DIR))
-    if DS.has_segments(index_dir):  # live view when LSM segments exist
-        post = DS.postings_view(spark, index_dir, post)
+    post = DS.postings_view(
+        spark, index_dir,
+        B.read_table(spark, index_dir, B.POSTINGS_DIR, manifest),
+    )
     sharded = post.withColumn(
         "shard", ((F.col("doc_id") - 1) / F.lit(shard_span)).cast("int")
     )
@@ -223,7 +226,7 @@ def build_blocks(
         .sortWithinPartitions("shard", "term", "doc_id")
         .select("shard", "term", "doc_id", "tf", "dl")
     )
-    result = encoded.mapInArrow(_encode_with_shard, "shard int, " + BLOCKS_SCHEMA)
+    result = encoded.mapInArrow(_encode_with_shard, SHARDED_BLOCKS_SCHEMA)
     # block count rides the write as an Observation — no read-back job
     from pyspark.sql import Observation
 
@@ -242,10 +245,7 @@ def build_blocks(
     # the (small) termstats live view, one scalar agg.  Refreshed on every
     # build_blocks; update_blocks keeps the stored value (order-of-magnitude
     # heuristic, benign staleness).
-    ts = spark.read.parquet(os.path.join(index_dir, B.TERMSTATS_DIR))
-    if DS.has_segments(index_dir):
-        ts = DS.termstats_view(spark, index_dir, ts)
-    max_df = ts.agg(F.max("df")).collect()[0][0] or 0
+    max_df = _max_df(spark, index_dir, manifest)
     meta = {
         "num_shards": num_shards,
         "block_size": block_size,
@@ -257,7 +257,23 @@ def build_blocks(
 
     with open(os.path.join(index_dir, "blocks_meta.json"), "w") as f:
         _json.dump(meta, f)
+    B.save_manifest(index_dir, manifest)
     return meta
+
+
+def _max_df(spark, index_dir: str, manifest) -> int:
+    """Longest live posting list: one scalar agg over the (small) termstats
+    live view."""
+    from pyspark.sql import functions as F
+
+    from bm25_index_tool_spark import build as B
+    from bm25_index_tool_spark import delta_store as DS
+
+    ts = DS.termstats_view(
+        spark, index_dir,
+        B.read_table(spark, index_dir, B.TERMSTATS_DIR, manifest),
+    )
+    return int(ts.agg(F.max("df")).collect()[0][0] or 0)
 
 
 def _decode_to_postings(batches):
@@ -317,8 +333,7 @@ def update_blocks(
     containing changed doc_ids, reconstructing them from their own old
     blocks (decode → drop removed → merge delta) — IO ∝ changed shards,
     never a postings-table rescan.  Unchanged shard directories stay
-    byte-identical.  Falls back to ``build_blocks`` for pre-shard_span
-    stores (ratio sharding shifts with N, so deltas can't be localized).
+    byte-identical.  The caller's manifest save publishes the change.
 
     ``delta_post``: (doc_id, term, tf, dl) rows of added∪modified docs
     (re-tokenized by the update); ``removed_ids``: (doc_id) of deleted ∪
@@ -330,15 +345,12 @@ def update_blocks(
 
     from pyspark.sql import functions as F
 
+    from bm25_index_tool_spark import build as B
+
     meta_path = os.path.join(index_dir, "blocks_meta.json")
     with open(meta_path) as f:
         meta = _json.load(f)
-    span = meta.get("shard_span")
-    if not span:
-        return build_blocks(
-            spark, index_dir, num_shards=meta.get("num_shards")
-        )
-    from bm25_index_tool_spark import build as B
+    span = meta["shard_span"]
 
     blocks_path = os.path.join(index_dir, B.BLOCKS_DIR)
 
@@ -355,7 +367,7 @@ def update_blocks(
     if not changed:
         return meta
 
-    old_blocks = spark.read.parquet(blocks_path)
+    old_blocks = spark.read.schema(SHARDED_BLOCKS_SCHEMA).parquet(blocks_path)
     old_changed = old_blocks.where(F.col("shard").isin(changed))
     n_old_changed = old_changed.count()  # partition-pruned, footer-only
     old_posts = old_changed.mapInArrow(
@@ -373,10 +385,10 @@ def update_blocks(
         .sortWithinPartitions("shard", "term", "doc_id")
         .select("shard", "term", "doc_id", "tf", "dl")
     )
-    result = encoded.mapInArrow(_encode_with_shard, "shard int, " + BLOCKS_SCHEMA)
+    result = encoded.mapInArrow(_encode_with_shard, SHARDED_BLOCKS_SCHEMA)
     result.write.mode("overwrite").partitionBy("shard").parquet(tmp)
     n_new_changed = (
-        spark.read.parquet(tmp).count()
+        spark.read.schema(SHARDED_BLOCKS_SCHEMA).parquet(tmp).count()
         if any(d.startswith("shard=") for d in os.listdir(tmp))
         else 0
     )
@@ -402,18 +414,13 @@ def update_blocks(
     # an update that emptied every shard must leave a READABLE store
     _ensure_readable_blocks(spark, blocks_path)
 
-    meta["n_blocks"] = meta.get("n_blocks", 0) - n_old_changed + n_new_changed
+    meta["n_blocks"] = meta["n_blocks"] - n_old_changed + n_new_changed
     # refresh max_df (the choose_engine auto-selection stat) from the
     # (small) termstats live view — one scalar agg, same as build_blocks.
     # Without this, append-only ingest could grow the hottest posting list
     # far past the WAND threshold while auto stays on 'join' forever
     # (ADVICE r04: the staleness was unbounded, not order-of-magnitude).
-    from bm25_index_tool_spark import delta_store as DS
-
-    ts = spark.read.parquet(os.path.join(index_dir, B.TERMSTATS_DIR))
-    if DS.has_segments(index_dir):
-        ts = DS.termstats_view(spark, index_dir, ts)
-    meta["max_df"] = int(ts.agg(F.max("df")).collect()[0][0] or 0)
+    meta["max_df"] = _max_df(spark, index_dir, B.load_manifest(index_dir))
     with open(meta_path, "w") as f:
         _json.dump(meta, f)
     return meta
@@ -431,7 +438,7 @@ def _ensure_readable_blocks(spark, blocks_path: str) -> None:
         return
     if any(n.endswith(".parquet") for n in os.listdir(blocks_path)):
         return  # already a plain (possibly empty) parquet table
-    empty = spark.createDataFrame([], "shard int, " + BLOCKS_SCHEMA)
+    empty = spark.createDataFrame([], SHARDED_BLOCKS_SCHEMA)
     empty.write.mode("overwrite").parquet(blocks_path)
 
 

@@ -30,6 +30,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 import dataclasses
 from dataclasses import dataclass, field
 
@@ -37,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bm25_index_tool_spark.tokenize import token_count_unicode61, tokenizer_for
 
-INDEX_FORMAT_VERSION = 1
+INDEX_FORMAT_VERSION = 2
 DEFAULT_NUM_BUCKETS = 32
 BROADCAST_IDS_THRESHOLD = int(
     os.environ.get("BM25_BROADCAST_IDS_THRESHOLD", "5000000")
@@ -49,6 +50,13 @@ TERMSTATS_DIR = "termstats"
 BLOCKS_DIR = "blocks"
 CHECKPOINT_DIR = "_checkpoints"
 MANIFEST = "manifest.json"
+
+# declared schemas of the base tables (partition column last, as a
+# partitioned read orders it): reads skip the parquet footer-inference job.
+# The docs table's schema follows the corpus, so the manifest records it
+# (IndexManifest.docs_schema).
+POSTINGS_SCHEMA = "doc_id BIGINT, term STRING, tf INT, dl INT, bucket INT"
+TERMSTATS_SCHEMA = "term STRING, df BIGINT, bucket INT"
 
 
 @dataclass
@@ -74,18 +82,22 @@ class IndexManifest:
     index_version: int = INDEX_FORMAT_VERSION
     created_at: str = ""
     source: dict = field(default_factory=dict)
-    # exact corpus token count (avgdl = total_tokens / num_docs) — carried
-    # so incremental updates can delta-adjust avgdl without a full scan;
-    # -1 in manifests written before this field existed
-    total_tokens: int = -1
-    # monotonic doc_id high-water mark: the next id an incremental update
-    # may mint.  Persisted so id rotation NEVER reuses an id that ever
-    # existed — a tombstoned max-id must not be re-minted (the tombstone
-    # anti-join would hide the new doc) and a compaction must not reset the
-    # counter.  -1 in manifests written before this field existed; readers
-    # fall back to max(doc_id) over base ∪ segments BEFORE the tombstone
-    # filter (ADVICE r03).
-    next_doc_id: int = -1
+    # exact corpus token count (avgdl = total_tokens / num_docs), so
+    # updates delta-adjust avgdl without a full scan
+    total_tokens: int = 0
+    # monotonic doc_id high-water mark: the next id an update may mint.
+    # Id rotation never reuses an id that ever existed — a tombstoned
+    # max-id must not be re-minted (the tombstone anti-join would hide the
+    # new doc) and a compaction must not reset the counter (ADVICE r03)
+    next_doc_id: int = 1
+    # commit counter: save_manifest writes the committed value + 1, and
+    # every writer re-saves the manifest as its last step
+    generation: int = 0
+    # one id per build: an overwrite rebuild restarts the generation count
+    build_id: str = ""
+    # DDL of the docs base (partition column doc_pt last); every docs base
+    # and docs segment read declares it
+    docs_schema: str = ""
 
     def to_json(self) -> str:
         d = dict(self.__dict__)
@@ -95,19 +107,15 @@ class IndexManifest:
     @classmethod
     def from_json(cls, s: str) -> "IndexManifest":
         d = json.loads(s)
+        fmt = d.get("index_version")
+        if fmt != INDEX_FORMAT_VERSION:
+            raise ValueError(
+                f"index format {fmt} is not readable by this engine (format "
+                f"{INDEX_FORMAT_VERSION}); rebuild it with "
+                "create_index(..., overwrite=True)"
+            )
         d["params"] = BM25Params(**d["params"])
-        # forward compat: drop keys a NEWER engine may have added — a
-        # rollback (or mixed-version cluster on a shared index root) must
-        # still read every manifest (code-review r05); missing-field
-        # defaults below handle the backward direction
-        known = {f.name for f in dataclasses.fields(cls)}
-        m = cls(**{k: v for k, v in d.items() if k in known})
-        if m.total_tokens < 0 and m.num_docs >= 0:
-            # pre-field manifest: reconstruct from avgdl (exact — avgdl was
-            # computed as total/num_docs in double, round-trips for realistic
-            # corpus sizes)
-            m.total_tokens = int(round(m.avgdl * m.num_docs))
-        return m
+        return cls(**d)
 
 
 def load_manifest(index_dir: str) -> IndexManifest:
@@ -115,20 +123,42 @@ def load_manifest(index_dir: str) -> IndexManifest:
         return IndexManifest.from_json(f.read())
 
 
-def save_manifest(index_dir: str, manifest_json: str) -> None:
-    """Commit the manifest atomically (tmp + fsync + os.replace).  An
-    in-place truncate-and-write would let a concurrent reader — every
-    query revalidates the handle against the manifest stat — load a torn
-    or empty file; the os.replace guarantees readers only ever see a
-    complete committed manifest, matching the rename discipline every
-    other index file already follows."""
+def save_manifest(index_dir: str, manifest: IndexManifest) -> IndexManifest:
+    """Commit ``manifest`` as the index's next generation and return it.
+
+    The generation is the committed one + 1, read under the write lock, so
+    a journal replay that re-saves a manifest never reuses a generation.
+    tmp + fsync + os.replace: a concurrent reader only ever sees a
+    complete committed manifest."""
+    from bm25_index_tool_spark.delta_store import write_lock
+
     path = os.path.join(index_dir, MANIFEST)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(manifest_json)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+    with write_lock(index_dir):
+        try:
+            committed = load_manifest(index_dir).generation
+        except FileNotFoundError:
+            committed = 0
+        manifest = dataclasses.replace(manifest, generation=committed + 1)
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(manifest.to_json())
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    return manifest
+
+
+def read_table(
+    spark: SparkSession, index_dir: str, sub: str, manifest: IndexManifest
+) -> DataFrame:
+    """One base table (docs/postings/termstats), read with its declared
+    schema (no inference job)."""
+    schema = {
+        DOCS_DIR: manifest.docs_schema,
+        POSTINGS_DIR: POSTINGS_SCHEMA,
+        TERMSTATS_DIR: TERMSTATS_SCHEMA,
+    }[sub]
+    return spark.read.schema(schema).parquet(os.path.join(index_dir, sub))
 
 
 # ---------------------------------------------------------------------------
@@ -278,7 +308,8 @@ def _narrow_ids(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
 
 class BuildCheckpoints:
     """Per-stage lineage + metrics checkpoints.  A stage whose checkpoint
-    records status=complete is skipped on re-run (resume).  Generalizes the
+    records status=complete in this engine's index format is skipped on
+    re-run (resume); a checkpoint from another format re-runs its stage.  Generalizes the
     reference's per-batch ``indexing_progress`` JSON resume
     (reference ``vector/indexer.py:221-263``, ``sqlite_storage.py:791-818``)
     to distributed partitioned writes.
@@ -296,12 +327,24 @@ class BuildCheckpoints:
         if not os.path.exists(p):
             return False
         with open(p) as f:
-            return json.load(f).get("status") == "complete"
+            j = json.load(f)
+        return (j.get("status"), j.get("format")) == (
+            "complete", INDEX_FORMAT_VERSION
+        )
 
     def mark_complete(self, stage: str, metrics: dict) -> None:
         tmp = self._path(stage) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"status": "complete", "stage": stage, **metrics}, f, indent=2)
+            json.dump(
+                {
+                    "status": "complete",
+                    "format": INDEX_FORMAT_VERSION,
+                    "stage": stage,
+                    **metrics,
+                },
+                f,
+                indent=2,
+            )
         os.replace(tmp, self._path(stage))
 
     def read(self, stage: str) -> dict:
@@ -442,7 +485,6 @@ def build_index(
             resume=resume,
             fail_after_stage=fail_after_stage,
             source=source,
-            ids_preassigned=False,
         )
 
 
@@ -459,11 +501,12 @@ def _build(
     resume: bool,
     fail_after_stage: str | None,
     source: dict | None,
-    ids_preassigned: bool,
 ) -> IndexManifest:
     params = params or BM25Params()
     if not resume and os.path.exists(index_dir):
         shutil.rmtree(index_dir)
+    elif os.path.exists(os.path.join(index_dir, MANIFEST)):
+        load_manifest(index_dir)  # a resume refuses another format up front
     os.makedirs(index_dir, exist_ok=True)
     ckpt = BuildCheckpoints(index_dir)
     tok = tokenizer_for(tokenizer_profile)
@@ -491,10 +534,7 @@ def _build(
     def _docs() -> dict:
         t_ids0 = time.monotonic()
         _id_cache: list = []
-        if ids_preassigned:
-            ids = with_derived_columns(corpus).drop("_dirname", "_natint")
-        else:
-            ids = assign_doc_ids(corpus, num_partitions, cleanup=_id_cache)
+        ids = assign_doc_ids(corpus, num_partitions, cleanup=_id_cache)
         # sub-timing: assign_doc_ids runs the range-sample + counts jobs
         # eagerly; everything after is the derived-column + write job
         ids_sec = round(time.monotonic() - t_ids0, 4)
@@ -503,8 +543,10 @@ def _build(
         target_p = num_partitions or spark.sparkContext.defaultParallelism
         if ids.rdd.getNumPartitions() < target_p:
             ids = ids.repartition(target_p, "doc_id")
+        # doc_pt as int, the type a partitioned read gives it, so the
+        # declared schema also fits the flat table of an empty corpus
         out = docs_derived_columns(ids).withColumn(
-            "doc_pt", F.pmod(F.col("doc_id"), F.lit(num_buckets))
+            "doc_pt", F.pmod(F.col("doc_id"), F.lit(num_buckets)).cast("int")
         )
         # Observation: row count rides along with the write — no read-back
         # job and no up-front emptiness probe (isEmpty would re-run the id
@@ -531,11 +573,14 @@ def _build(
             spark.createDataFrame([], out.schema).write.mode(
                 "overwrite"
             ).parquet(docs_path)
-        return {"rows": rows, "ids_sec": ids_sec}
+        schema = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in out.schema
+        )
+        return {"rows": rows, "ids_sec": ids_sec, "schema": schema}
 
     m_docs = _stage("docs", _docs)
     num_docs = m_docs["rows"]
-    docs = spark.read.parquet(docs_path)
+    docs = spark.read.schema(m_docs["schema"]).parquet(docs_path)
 
     # -- stages 2-3: ONE tokenize pass; termstats derive from the postings
     # parquet (a cheap columnar term scan) rather than a persisted tf
@@ -611,7 +656,8 @@ def _build(
         # partition-column-only scan: row counts come from parquet metadata
         per_bucket = {
             str(r["bucket"]): r["cnt"]
-            for r in spark.read.parquet(postings_path)
+            for r in spark.read.schema(POSTINGS_SCHEMA)
+            .parquet(postings_path)
             .groupBy("bucket")
             .agg(F.count("*").alias("cnt"))
             .collect()
@@ -632,7 +678,7 @@ def _build(
         # (cache write + memory pressure cost more than this scan).
         from pyspark.sql import Observation
 
-        src = spark.read.parquet(postings_path)
+        src = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path)
         stats = (
             src.groupBy("term")
             .agg(
@@ -664,16 +710,6 @@ def _build(
         return {"rows": got["rows"], "total_tokens": int(got["total_tokens"] or 0)}
 
     m_ts = _stage("termstats", _termstats)
-    if m_ts.get("total_tokens") is None:
-        # resuming over a pre-r02 'termstats' checkpoint that recorded only
-        # {rows}: recompute from the written postings (sum tf == total token
-        # occurrences) instead of KeyError-ing (ADVICE r02)
-        row = (
-            spark.read.parquet(postings_path)
-            .agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("t"))
-            .collect()[0]
-        )
-        m_ts["total_tokens"] = int(row["t"])
     # FTS5 avgdl = total_tokens / nRow over ALL docs — zero-token documents
     # count in the denominator (they are rows in the FTS table with dl=0).
     # A mean over only docs-with-postings would diverge on corpora with
@@ -692,6 +728,7 @@ def _build(
         total_tokens=int(m_ts["total_tokens"]),
         # assign_doc_ids is 1-based contiguous → first free id is N+1
         next_doc_id=int(num_docs) + 1,
+        build_id=uuid.uuid4().hex,
+        docs_schema=m_docs["schema"],
     )
-    save_manifest(index_dir, manifest.to_json())
-    return manifest
+    return save_manifest(index_dir, manifest)

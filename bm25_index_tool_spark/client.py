@@ -46,8 +46,8 @@ class BM25SparkClient:
         self.config = load_config(root_dir)
         self.cache = SearchCache(max_size=self.config.search_cache_size)
         self.history = SearchHistory(spark, os.path.join(root_dir, "_history"))
-        # name -> (index version token, handle); _require revalidates the
-        # token per call so out-of-band commits are picked up automatically
+        # name -> (index token, handle); _require revalidates the token per
+        # call so out-of-band commits are picked up automatically
         self._open: dict[str, tuple[tuple, LoadedIndex]] = {}
 
     # -- registry ------------------------------------------------------------
@@ -87,19 +87,13 @@ class BM25SparkClient:
     def _index_dir(self, name: str) -> str:
         return os.path.join(self.root, "indices", name)
 
-    def _index_version(self, name: str) -> tuple:
-        """Os-level index version: manifest mtime/size + committed LSM
-        segment ids — the same token discipline as the stored-projection
-        cache (delta_store._index_state_token).  ANY committed write, by
-        this process or another, changes it; stat+listdir cost only."""
-        from bm25_index_tool_spark.delta_store import segment_ids
+    def _index_version(self, name: str) -> tuple | None:
+        """delta_store.index_token of the named index: ANY committed write,
+        by this process or another, changes it.  Raises for an index of
+        another format before anything else reads it."""
+        from bm25_index_tool_spark.delta_store import index_token
 
-        idx_dir = self._index_dir(name)
-        try:
-            st = os.stat(os.path.join(idx_dir, B.MANIFEST))
-        except (FileNotFoundError, NotADirectoryError):
-            return (None,)
-        return (st.st_mtime_ns, st.st_size, tuple(segment_ids(idx_dir)))
+        return index_token(self._index_dir(name), self.spark)
 
     def _require(self, name: str) -> LoadedIndex:
         if name not in self._read_registry():
@@ -307,19 +301,14 @@ class BM25SparkClient:
             for r in docs.groupBy("lang").count().orderBy(F.desc("count"), "lang").collect()
         }
         # reference stats "document_types": GROUP BY mime_type ORDER BY
-        # count DESC (commands/stats.py:116-133); indexes built before the
-        # column existed simply omit the breakdown
-        by_mime = (
-            {
-                r["mime_type"]: r["count"]
-                for r in docs.groupBy("mime_type")
-                .count()
-                .orderBy(F.desc("count"), "mime_type")
-                .collect()
-            }
-            if "mime_type" in docs.columns
-            else {}
-        )
+        # count DESC (commands/stats.py:116-133)
+        by_mime = {
+            r["mime_type"]: r["count"]
+            for r in docs.groupBy("mime_type")
+            .count()
+            .orderBy(F.desc("count"), "mime_type")
+            .collect()
+        }
         n_terms = idx.termstats().count()
         return {
             "name": name,
@@ -349,7 +338,10 @@ class BM25SparkClient:
             "file_count": m.num_docs,
             "avgdl": m.avgdl,
             "num_buckets": m.num_buckets,
-            "index_version": m.index_version,
+            # index format and commit counter: each commit moves the
+            # generation, so an operator can see that a write landed
+            "format": m.index_version,
+            "generation": m.generation,
             # outstanding LSM update segments awaiting compaction (0 = fully
             # compacted base; see delta_store.py)
             "update_segments": self._segment_count(idx_dir),
@@ -365,27 +357,18 @@ class BM25SparkClient:
                 "blocks": os.path.exists(os.path.join(idx_dir, B.BLOCKS_DIR)),
             },
         }
-        vec_dir = os.path.join(idx_dir, "vector")
-        if os.path.exists(vec_dir):
-            import json as _json
-
-            from bm25_index_tool_spark.vector import FAKE_EMBED_DIM
-
-            model, dim = "deterministic-stub (see vector.py)", FAKE_EMBED_DIM
-            meta_path = os.path.join(vec_dir, "_meta.json")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    vm = _json.load(f)
-                model, dim = vm["embedder"], vm["dim"]
-            out["vector_metadata"] = {
-                "embedding_model": model,
-                "dimensions": dim,
-            }
+        if os.path.exists(os.path.join(idx_dir, "vector")):
             from bm25_index_tool_spark.vector import (
+                _ann_fresh,
                 _load_ann_meta,
-                _vector_base_fingerprint,
+                _load_vector_meta,
             )
 
+            vm = _load_vector_meta(idx_dir)
+            out["vector_metadata"] = {
+                "embedding_model": vm["embedder"],
+                "dimensions": vm["dim"],
+            }
             ann = _load_ann_meta(idx_dir)
             if ann is not None:
                 out["vector_metadata"]["ann"] = {
@@ -401,8 +384,7 @@ class BM25SparkClient:
                     "absorbed_folds": ann.get("absorbed") or [],
                     # stale ⇒ auto falls back to the exact scan until
                     # build_vector_ann is re-run (full compaction does this)
-                    "fresh": ann.get("base_fingerprint")
-                    == _vector_base_fingerprint(idx_dir),
+                    "fresh": _ann_fresh(ann, vm),
                 }
         return out
 
@@ -424,6 +406,7 @@ class BM25SparkClient:
         are the contract (PLANS.md); this surfaces the same evidence for
         any live index + query.  ``mode``: formatted | simple | extended |
         cost | codegen (Spark ExplainMode)."""
+        idx = self._require(name)
         if engine == "auto":
             from bm25_index_tool_spark.wand import choose_engine
 
@@ -431,7 +414,6 @@ class BM25SparkClient:
                 self._index_dir(name),
                 df_threshold=self.config.extras.get("wand_df_threshold"),
             )
-        idx = self._require(name)
         if engine == "blocks":
             from bm25_index_tool_spark.wand import wand_search
 
@@ -471,6 +453,13 @@ class BM25SparkClient:
         (block-max WAND over the compressed block store; requires
         build_block_engine).  Both engines are rank-identical, so the
         choice is purely cost."""
+        # the index version rides in the cache key: a hit cached before ANY
+        # writer's commit — this process or another — can never be served
+        # afterwards (in-process clears in update/compact/delete remain as
+        # memory hygiene, but correctness no longer depends on them).  Read
+        # first, so an index of another format is refused before any file
+        # of it is read.
+        version_token = self._index_version(name)
         if engine == "auto":
             from bm25_index_tool_spark.wand import choose_engine
 
@@ -483,17 +472,12 @@ class BM25SparkClient:
         # include_content is part of the key: cached rows only carry
         # 'content' when it was requested, so a content-less hit must not
         # serve a later include_content=True call (ADVICE r01)
-        # the index version rides in the key: a hit cached before ANY
-        # writer's commit — this process or another — can never be served
-        # afterwards (in-process clears in update/compact/delete remain as
-        # memory hygiene, but correctness no longer depends on them)
-        version_token = self._index_version(name)
         key = SearchCache.make_key(
             [name], query, top_k,
             {
                 "engine": engine,
                 "include_content": include_content,
-                "index_version": list(version_token),
+                "index_version": version_token,
             },
         )
         if cacheable:

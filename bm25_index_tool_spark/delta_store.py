@@ -28,9 +28,8 @@ deletes; Delta/Iceberg/Hudi MOR):
   segment row groups by their min/max statistics (PushedFilters).  Per-file
   writer cost, not data volume, dominates a small update: partitioned, a
   300-doc segment was 96 files in 32 dirs per table, and every tiered
-  merge rewrote all of them.  Segments are read with declared schemas (no
-  footer-inference job); dirs staged in the old partitioned layout stay
-  readable and are rewritten flat by the next merge or compaction;
+  merge rewrote all of them.  Segments, like the base tables, are read
+  with declared schemas (no footer-inference job);
 * write IO is ∝ delta: tokenize added∪modified, RE-tokenize the removed
   docs' old content (delta-sized) to derive the negative df adjustments
   and removed token counts — never a postings-table scan;
@@ -44,7 +43,9 @@ Crash safety: a segment becomes visible via a SINGLE ``os.replace`` of its
 staged directory per table; a journal (``_segment.journal``) written after
 staging and removed after the manifest lets recovery roll the (tiny)
 commit window forward.  It is the one commit and recovery protocol of
-every writer: append, tiered merge and compaction.
+every writer: append, tiered merge and compaction.  Each of them, like
+every other index writer, re-saves the manifest as its last step, so the
+manifest generation (``index_token``) moves on every commit.
 
 The reference has no analogue — its SQLite layer updates rows in place
 (``storage/sqlite_storage.py`` upserts); this module is the distributed
@@ -54,6 +55,7 @@ immutable and scattered in-place edits are the enemy.
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import logging
@@ -63,7 +65,9 @@ import threading
 import time as _time_mod
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import StructType
+
+from bm25_index_tool_spark import build as B
 
 POSTINGS_SEG_DIR = "postings_seg"
 TERMSTATS_SEG_DIR = "termstats_seg"
@@ -75,9 +79,6 @@ TOMBSTONES_DIR = "tombstones"
 VECTOR_SEG_DIR = "vector_seg"
 VECTOR_TS_DIR = "vector_tombstones"
 SEG_JOURNAL = "_segment.journal"
-# left behind by a crashed per-bucket merge-and-swap update, a writer that
-# no longer exists; such an index may hold half-swapped partitions
-_LEGACY_MERGE_JOURNAL = "_update.journal"
 
 _SEG_DIRS = (
     POSTINGS_SEG_DIR,
@@ -89,10 +90,16 @@ _SEG_DIRS = (
 )
 
 # declared segment schemas: reads skip the parquet footer-inference job
-# (docs_seg takes the docs base's schema, see _docs_seg_schema)
-POSTINGS_SEG_SCHEMA = "term STRING, doc_id BIGINT, tf INT, dl INT, bucket INT"
+# (postings_seg shares the base's B.POSTINGS_SCHEMA, docs_seg the
+# manifest's docs_schema)
 TERMSTATS_SEG_SCHEMA = "term STRING, df_delta BIGINT, bucket INT"
 TOMBSTONES_SCHEMA = "doc_id BIGINT"
+# the vector store's chunk rows (base, segments, ANN) and path tombstones
+VECTOR_SCHEMA = (
+    "path STRING, chunk_index INT, chunk_text STRING, start_word INT,"
+    " end_word INT, word_count INT, embedding ARRAY<FLOAT>"
+)
+VECTOR_TS_SCHEMA = "path STRING"
 
 # ---------------------------------------------------------------------------
 # Inter-process write lock
@@ -227,6 +234,32 @@ def _locked_writer(fn):
 # floor breakdown of the update cost is measurable, not guessed
 LAST_UPDATE_TIMINGS: dict[str, float] = {}
 
+def index_token(
+    index_dir: str,
+    spark: SparkSession | None = None,
+    manifest: "B.IndexManifest | None" = None,
+):
+    """THE memo token of an index: (app id, abspath, build id, generation)
+    of its committed manifest, None when there is none.  Every writer
+    re-saves the manifest as its last step, so any commit — by this process
+    or another — moves the generation, and an overwrite rebuild moves the
+    build id.  The app id keeps a new SparkContext from being served frames
+    (or localCheckpoints) of a stopped one.  Loading the manifest refuses
+    an index of another format."""
+    if manifest is None:
+        try:
+            manifest = B.load_manifest(index_dir)
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+    try:
+        app = (spark or SparkSession.getActiveSession()).sparkContext.applicationId
+    except Exception:
+        app = None
+    return (
+        app, os.path.abspath(index_dir), manifest.build_id, manifest.generation
+    )
+
+
 # ---------------------------------------------------------------------------
 # Stored-docs diff-projection cache (VERDICT r03 #2)
 #
@@ -234,37 +267,18 @@ LAST_UPDATE_TIMINGS: dict[str, float] = {}
 # projection of the live docs view.  A continuous-ingest trigger pays that
 # base+segments scan once per micro-batch even though between batches the
 # projection changes only by the (tiny) delta.  Cache it per index_dir,
-# persisted on the executors; validity is an os-level token (manifest
-# mtime/size + committed segment ids) so ANY out-of-band writer — another
-# process, a tiered merge, a compaction — invalidates it for free.  After a
-# commit the cache advances incrementally: (old ⟕anti removed) ∪ delta,
-# localCheckpointed so lineage stays flat across thousands of batches.
+# persisted on the executors, under index_token, so any out-of-band
+# writer — another process, a tiered merge, a compaction — invalidates it.
+# After a commit the cache advances incrementally: (old ⟕anti removed) ∪
+# delta, localCheckpointed so lineage stays flat across thousands of
+# batches.
 # ---------------------------------------------------------------------------
 _STORED_PROJ_CACHE: dict[str, tuple[tuple, DataFrame]] = {}
 
 
-def _index_state_token(index_dir: str, spark: SparkSession | None = None):
-    from bm25_index_tool_spark import build as B
-
-    try:
-        st = os.stat(os.path.join(index_dir, B.MANIFEST))
-    except FileNotFoundError:
-        return None
-    # the session id guards against serving a localCheckpoint whose
-    # SparkContext has been stopped (a process that recreates its session
-    # must rebuild the cached projection)
-    try:
-        app = spark.sparkContext.applicationId if spark is not None else (
-            SparkSession.getActiveSession().sparkContext.applicationId
-        )
-    except Exception:
-        app = None
-    return (app, st.st_mtime_ns, st.st_size, tuple(segment_ids(index_dir)))
-
-
 def _stored_projection(spark, index_dir: str, docs: DataFrame) -> DataFrame:
     """Live (full_path, content_md5, doc_id) — cached across updates."""
-    tok = _index_state_token(index_dir, spark)
+    tok = index_token(index_dir, spark)
     hit = _STORED_PROJ_CACHE.get(index_dir)
     if hit is not None and hit[0] == tok:
         return hit[1]
@@ -278,7 +292,8 @@ def _stored_projection(spark, index_dir: str, docs: DataFrame) -> DataFrame:
 
 
 def _advance_stored_projection(
-    index_dir: str, old: DataFrame, removed_ids: DataFrame, delta: DataFrame
+    spark, index_dir: str, old: DataFrame, removed_ids: DataFrame,
+    delta: DataFrame,
 ) -> None:
     """Post-commit cache advance: delta-sized work, no base re-scan."""
     new = (
@@ -287,7 +302,15 @@ def _advance_stored_projection(
         .localCheckpoint(eager=True)
     )
     old.unpersist()
-    _STORED_PROJ_CACHE[index_dir] = (_index_state_token(index_dir), new)
+    _STORED_PROJ_CACHE[index_dir] = (index_token(index_dir, spark), new)
+
+
+def _revalidate_stored_projection(spark, index_dir: str) -> None:
+    """A commit that keeps the live content (tiered merge, compaction)
+    re-keys the cached projection instead of forcing a rebuild scan."""
+    hit = _STORED_PROJ_CACHE.get(index_dir)
+    if hit is not None:
+        _STORED_PROJ_CACHE[index_dir] = (index_token(index_dir, spark), hit[1])
 
 
 def invalidate_stored_projection(index_dir: str) -> None:
@@ -332,18 +355,6 @@ def _seg_dir_id(path: str) -> int:
     return int(os.path.basename(path).split("=", 1)[1])
 
 
-def _seg_layout(path: str) -> str | None:
-    """``"flat"`` for a dir of sorted part files, ``"legacy"`` for the old
-    ``bucket=``/``doc_pt=`` subdirectory layout, None when the dir holds no
-    data (a partitioned write of an empty relation leaves only _SUCCESS)."""
-    names = os.listdir(path)
-    if any(n.endswith(".parquet") for n in names):
-        return "flat"
-    if any("=" in n for n in names):
-        return "legacy"
-    return None
-
-
 def _read_all_segments(
     spark: SparkSession,
     index_dir: str,
@@ -351,76 +362,39 @@ def _read_all_segments(
     keep_seg: bool = False,
     upto: int | None = None,
     after: int | None = None,
-    schema: StructType | str | None = None,
+    *,
+    schema: StructType | str,
 ):
     """Union of all committed segments of one table (None when empty).
     Explicit seg-dir paths + basePath keep the ``seg`` column coming from
     the path while ignoring staging dirs; the ``seg`` column is dropped
     unless ``keep_seg`` — readers never care which segment a row came
-    from.  ``schema`` skips the parquet footer-inference job (the LSM
-    tables always pass one; the vector tables infer).  ``upto`` restricts
-    to segment ids ≤ upto (tiered merge); ``after`` to ids > after (ANN
-    fold absorption skips absorbed dirs entirely — no scan is even
-    scheduled)."""
-    groups: dict[str, list[str]] = {}
-    for d in _committed_seg_dirs(index_dir, table_dir):
-        sid = _seg_dir_id(d)
-        if (upto is not None and sid > upto) or (
-            after is not None and sid <= after
-        ):
-            continue
-        layout = _seg_layout(d)
-        if layout is not None:
-            groups.setdefault(layout, []).append(d)
-    if not groups:
+    from.  ``schema`` is the table's declared schema (no footer-inference
+    job).  ``upto`` restricts to segment ids ≤ upto (tiered merge);
+    ``after`` to ids > after (ANN fold absorption skips absorbed dirs
+    entirely — no scan is even scheduled)."""
+    dirs = [
+        d
+        for d in _committed_seg_dirs(index_dir, table_dir)
+        if (upto is None or _seg_dir_id(d) <= upto)
+        and (after is None or _seg_dir_id(d) > after)
+        # a partitioned write of an empty relation leaves only _SUCCESS
+        and any(n.endswith(".parquet") for n in os.listdir(d))
+    ]
+    if not dirs:
         return None
-    reader = spark.read.option("basePath", os.path.join(index_dir, table_dir))
-    if schema is not None:
-        reader = reader.schema(schema)
-    # segments staged before the flat layout keep their bucket=/doc_pt=
-    # subdirs until the next merge or compaction; Spark rejects mixed
-    # partition layouts in one parquet() call, so each layout is read on
-    # its own and the two are unioned by name
-    df = functools.reduce(
-        DataFrame.unionByName, [reader.parquet(*ds) for ds in groups.values()]
+    df = (
+        spark.read.option("basePath", os.path.join(index_dir, table_dir))
+        .schema(schema)
+        .parquet(*dirs)
     )
-    if keep_seg:
-        return df
-    return df.drop("seg")
-
-
-def _docs_seg_schema(docs_base: DataFrame) -> StructType:
-    """docs_seg rows carry the base's columns plus ``doc_pt`` (the base's
-    partition type, int), also over a legacy pre-doc_pt base."""
-    fields = list(docs_base.schema.fields)
-    if "doc_pt" not in docs_base.columns:
-        fields.append(StructField("doc_pt", IntegerType()))
-    return StructType(fields)
+    return df if keep_seg else df.drop("seg")
 
 
 def tombstones(spark: SparkSession, index_dir: str):
     return _read_all_segments(
         spark, index_dir, TOMBSTONES_DIR, schema=TOMBSTONES_SCHEMA
     )
-
-
-def max_ever_doc_id(
-    spark: SparkSession, index_dir: str, docs_base: DataFrame
-) -> int:
-    """Highest doc_id that EVER existed: max over base ∪ doc segments
-    BEFORE the tombstone anti-join, so tombstoned (deleted) ids still
-    count.  Legacy fallback for manifests without ``next_doc_id`` —
-    deriving it from the tombstone-filtered live view reused dead ids,
-    whose new rows the anti-join then hid (ADVICE r03, high)."""
-    seg = _read_all_segments(
-        spark, index_dir, DOCS_SEG_DIR, schema=_docs_seg_schema(docs_base)
-    )
-    allrows = (
-        docs_base
-        if seg is None
-        else docs_base.select("doc_id").unionByName(seg.select("doc_id"))
-    )
-    return allrows.agg(F.max("doc_id")).collect()[0][0] or 0
 
 
 def _anti_tombstones(df: DataFrame, ts) -> DataFrame:
@@ -432,7 +406,7 @@ def _anti_tombstones(df: DataFrame, ts) -> DataFrame:
 
 def postings_view(spark: SparkSession, index_dir: str, base: DataFrame) -> DataFrame:
     seg = _read_all_segments(
-        spark, index_dir, POSTINGS_SEG_DIR, schema=POSTINGS_SEG_SCHEMA
+        spark, index_dir, POSTINGS_SEG_DIR, schema=B.POSTINGS_SCHEMA
     )
     out = base if seg is None else base.unionByName(seg.select(*base.columns))
     return _anti_tombstones(out, tombstones(spark, index_dir))
@@ -440,7 +414,7 @@ def postings_view(spark: SparkSession, index_dir: str, base: DataFrame) -> DataF
 
 def docs_view(spark: SparkSession, index_dir: str, base: DataFrame) -> DataFrame:
     seg = _read_all_segments(
-        spark, index_dir, DOCS_SEG_DIR, schema=_docs_seg_schema(base)
+        spark, index_dir, DOCS_SEG_DIR, schema=base.schema
     )
     out = base if seg is None else base.unionByName(seg.select(*base.columns))
     return _anti_tombstones(out, tombstones(spark, index_dir))
@@ -473,20 +447,12 @@ def termstats_view(spark: SparkSession, index_dir: str, base: DataFrame) -> Data
 def recover_segments_if_needed(spark: SparkSession, index_dir: str) -> bool:
     """Roll a crashed segment commit forward: the journal lists the staged
     dirs and the post-commit manifest; each ``os.replace`` is idempotent
-    (skipped when the final dir already exists).
+    (skipped when the final dir already exists).  Every replay ends by
+    re-saving the manifest, so a recovered commit moves the generation.
 
-    Raises ``ValueError`` on a leftover merge-update journal: nothing can
-    replay it, and serving its half-swapped partitions would be silent
-    corruption."""
-    from bm25_index_tool_spark import build as B
-
-    legacy = os.path.join(index_dir, _LEGACY_MERGE_JOURNAL)
-    if os.path.exists(legacy):
-        raise ValueError(
-            f"{legacy} is left by a crashed merge-strategy update, which "
-            "this version cannot replay; the index may hold half-swapped "
-            "partitions — rebuild it (create_index with overwrite)"
-        )
+    Loads the manifest before touching any file: an index of another
+    format raises ``ValueError`` (rebuild it) and is left as it is."""
+    B.load_manifest(index_dir)
     jpath = os.path.join(index_dir, SEG_JOURNAL)
     if not os.path.exists(jpath):
         for d in _SEG_DIRS:  # pre-journal crash: discard stray staging
@@ -517,6 +483,7 @@ def recover_segments_if_needed(spark: SparkSession, index_dir: str) -> bool:
             if os.path.isdir(tmp):
                 shutil.rmtree(live, ignore_errors=True)
                 os.replace(tmp, live)
+        B.save_manifest(index_dir, B.load_manifest(index_dir))
         os.remove(jpath)
         return True
 
@@ -531,6 +498,7 @@ def recover_segments_if_needed(spark: SparkSession, index_dir: str) -> bool:
                 os.replace(tmp, live)
         for d in _SEG_DIRS:
             shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
+        B.save_manifest(index_dir, B.load_manifest(index_dir))
         os.remove(jpath)
         return True
 
@@ -539,15 +507,14 @@ def recover_segments_if_needed(spark: SparkSession, index_dir: str) -> bool:
             os.replace(staged, final)
         elif os.path.isdir(staged):
             shutil.rmtree(staged, ignore_errors=True)
-    # blocks before the manifest — see apply_update_append's commit: the
-    # manifest stat is the reader-cache version token
+    # blocks before the manifest — see apply_update_append's commit
     if j.get("blocks_stale") and os.path.exists(
         os.path.join(index_dir, B.BLOCKS_DIR)
     ):
         from bm25_index_tool_spark.blocks import build_blocks
 
         build_blocks(spark, index_dir)
-    B.save_manifest(index_dir, j["manifest_json"])
+    B.save_manifest(index_dir, B.IndexManifest.from_json(j["manifest_json"]))
     os.remove(jpath)
     return True
 
@@ -594,7 +561,6 @@ def _tokenize_rows(
     the index's tokenizer profile — identical pipeline to the build.
     ``n_rows``, when the caller already knows the delta size (diff counts),
     sizes the tokenize fan-out to the delta instead of the cluster."""
-    from bm25_index_tool_spark import build as B
     from bm25_index_tool_spark.arrow_tokenize import ARROW_PROFILES
 
     parallelism = _sized_parallelism(spark, n_rows)
@@ -708,8 +674,6 @@ def apply_update_append(
     """
     from pyspark import StorageLevel
 
-    from bm25_index_tool_spark import build as B
-
     import time as _time
 
     # journals record staged/final paths verbatim — absolutize so recovery
@@ -731,8 +695,9 @@ def apply_update_append(
     manifest = B.load_manifest(index_dir)
     nb = manifest.num_buckets
 
-    docs_base = spark.read.parquet(os.path.join(index_dir, B.DOCS_DIR))
-    docs = docs_view(spark, index_dir, docs_base)
+    docs = docs_view(
+        spark, index_dir, B.read_table(spark, index_dir, B.DOCS_DIR, manifest)
+    )
 
     # ---- single-pass NARROW diff ------------------------------------------
     cur = current.withColumn(
@@ -779,10 +744,7 @@ def apply_update_append(
     # ids come from the manifest's monotonic high-water mark, NOT from the
     # live (tombstone-filtered) view — after deleting the max-id docs the
     # next update must not re-mint their ids (ADVICE r03, high)
-    if manifest.next_doc_id > 0:
-        max_id = manifest.next_doc_id - 1
-    else:  # legacy manifest: backfill from base ∪ segments pre-anti-join
-        max_id = max_ever_doc_id(spark, index_dir, docs_base)
+    max_id = manifest.next_doc_id - 1
     # checkpoint the delta rows FIRST (one corpus scan; delta-sized output)
     # so id assignment + tokenize + docs staging never re-scan the corpus.
     # The checkpointed diff carries no size statistics: broadcast it by
@@ -903,11 +865,6 @@ def apply_update_append(
     delta_docs = B.docs_derived_columns(delta_full).withColumn(
         "doc_pt", F.pmod(F.col("doc_id"), F.lit(nb)).cast("int")
     )
-    # legacy pre-doc_pt base: keep the partition column in the segment
-    # anyway (docs_view projects it away when composing with such a base)
-    docs_seg_cols = list(docs_base.columns)
-    if "doc_pt" not in docs_seg_cols:
-        docs_seg_cols.append("doc_pt")
 
     # all four writes read only persisted/checkpointed inputs — run them as
     # CONCURRENT Spark jobs (one driver thread each) so a small micro-batch
@@ -918,7 +875,7 @@ def apply_update_append(
          POSTINGS_SEG_DIR, _POSTINGS_SORT),
         (df_adjust.select("term", "df_delta", "bucket"),
          TERMSTATS_SEG_DIR, _TERMSTATS_SORT),
-        (delta_docs.select(*docs_seg_cols), DOCS_SEG_DIR, _DOCS_SORT),
+        (delta_docs.select(*docs.columns), DOCS_SEG_DIR, _DOCS_SORT),
     ]
     if counts["modified"] + counts["deleted"] > 0:
         stage_jobs.append((removed_ids, TOMBSTONES_DIR, ()))
@@ -945,15 +902,10 @@ def apply_update_append(
 
     new_num_docs = manifest.num_docs - counts["deleted"] + counts["added"]
     new_total = manifest.total_tokens - removed_tokens + delta_tokens
-    new_manifest = B.IndexManifest(
-        name=manifest.name,
+    new_manifest = dataclasses.replace(
+        manifest,
         num_docs=new_num_docs,
         avgdl=(new_total / new_num_docs) if new_num_docs else 0.0,
-        num_buckets=nb,
-        tokenizer_profile=manifest.tokenizer_profile,
-        params=manifest.params,
-        created_at=manifest.created_at,
-        source=manifest.source,
         total_tokens=new_total,
         # added ∪ modified minted ids max_id+1 .. max_id+n — advance the HWM
         next_doc_id=max_id + counts["added"] + counts["modified"] + 1,
@@ -977,10 +929,10 @@ def apply_update_append(
         os.replace(staged, final)
 
     if os.path.exists(os.path.join(index_dir, B.BLOCKS_DIR)):
-        # blocks BEFORE the manifest commit: the manifest stat is the
-        # reader-cache version token, so a blocks-engine query racing
-        # this window caches under the OLD version, which the manifest
-        # write below retires — never stale-results-under-new-version
+        # blocks BEFORE the manifest commit: the manifest generation is
+        # the reader-cache token, so a blocks-engine query racing this
+        # window caches under the OLD generation, which the manifest
+        # save below retires — never stale-results-under-new-generation
         from bm25_index_tool_spark.blocks import update_blocks
 
         update_blocks(
@@ -990,13 +942,15 @@ def apply_update_append(
     delta_post.unpersist()
     for _p in _id_cache:  # segment writes committed; drop the key cache
         _p.unpersist()
-    B.save_manifest(index_dir, new_manifest.to_json())
+    new_manifest = B.save_manifest(index_dir, new_manifest)
     if removed_tfs is not None:
         removed_tfs.unpersist()
     os.remove(jpath)
     # advance the diff-projection cache incrementally — the next micro-batch
     # diffs against this instead of re-scanning base ∪ segments
-    _advance_stored_projection(index_dir, stored_proj, removed_ids, delta_docs)
+    _advance_stored_projection(
+        spark, index_dir, stored_proj, removed_ids, delta_docs
+    )
     _mark("commit")
 
     if (
@@ -1042,8 +996,6 @@ def merge_segments(
     the same journal machinery (kind="seg_merge": drop list + staged
     moves, rolled forward idempotently).
     """
-    from bm25_index_tool_spark import build as B
-
     index_dir = os.path.abspath(index_dir)
     recover_segments_if_needed(spark, index_dir)
     ids = segment_ids(index_dir)
@@ -1057,7 +1009,8 @@ def merge_segments(
     if len(folded) < 2:
         return 0
     upto = folded[-1]
-    nb = B.load_manifest(index_dir).num_buckets
+    manifest = B.load_manifest(index_dir)
+    nb = manifest.num_buckets
 
     ts = _read_all_segments(
         spark, index_dir, TOMBSTONES_DIR, upto=upto, schema=TOMBSTONES_SCHEMA
@@ -1091,7 +1044,7 @@ def merge_segments(
     stage_jobs: list[tuple] = []
     post = _read_all_segments(
         spark, index_dir, POSTINGS_SEG_DIR, upto=upto,
-        schema=POSTINGS_SEG_SCHEMA,
+        schema=B.POSTINGS_SCHEMA,
     )
     if post is not None:
         stage_jobs.append((
@@ -1109,29 +1062,18 @@ def merge_segments(
             .select("term", "df_delta", "bucket"),
             TERMSTATS_SEG_DIR, _TERMSTATS_SORT,
         ))
-    dseg = None
-    if _committed_seg_dirs(index_dir, DOCS_SEG_DIR):
-        docs_base = spark.read.parquet(os.path.join(index_dir, B.DOCS_DIR))
-        dseg = _read_all_segments(
-            spark, index_dir, DOCS_SEG_DIR, upto=upto,
-            schema=_docs_seg_schema(docs_base),
-        )
+    dseg = _read_all_segments(
+        spark, index_dir, DOCS_SEG_DIR, upto=upto,
+        schema=manifest.docs_schema,
+    )
     if dseg is not None:
         stage_jobs.append((_anti_tombstones(dseg, ts), DOCS_SEG_DIR, _DOCS_SORT))
     if ts is not None:
         keep_ts = ts.select("doc_id")
-        # the prune below relies on the never-reused-id invariant, which
-        # only holds for indices whose manifest carries the doc_id
-        # high-water mark.  A legacy index (next_doc_id == -1, built before
-        # the HWM) may already contain a reused id — dead in base, re-minted
-        # in a segment — and pruning its tombstone would RESURRECT the dead
-        # base row.  Keep all tombstones there; correctness over compaction
-        # gain (ADVICE r04).
-        hwm_safe = B.load_manifest(index_dir).next_doc_id > 0
-        if dseg is not None and hwm_safe:
+        if dseg is not None:
             # prune tombstones of ids born in the folded segments: their
-            # rows were dropped above and the HWM guarantees no reuse —
-            # only base-targeting tombstones survive the merge
+            # rows were dropped above and the doc_id high-water mark
+            # guarantees no reuse — only base-targeting tombstones survive
             keep_ts = keep_ts.join(
                 dseg.select("doc_id"), "doc_id", "left_anti"
             )
@@ -1142,10 +1084,12 @@ def merge_segments(
     # survivors and surviving tombstone paths all take seg id `upto`, which
     # preserves the ordering invariant against segments > upto
     vseg = _read_all_segments(
-        spark, index_dir, VECTOR_SEG_DIR, keep_seg=True, upto=upto
+        spark, index_dir, VECTOR_SEG_DIR, keep_seg=True, upto=upto,
+        schema=VECTOR_SCHEMA,
     )
     vts = _read_all_segments(
-        spark, index_dir, VECTOR_TS_DIR, keep_seg=True, upto=upto
+        spark, index_dir, VECTOR_TS_DIR, keep_seg=True, upto=upto,
+        schema=VECTOR_TS_SCHEMA,
     )
     if vseg is not None:
         alive = vseg
@@ -1194,12 +1138,8 @@ def merge_segments(
     for tmp, live in moves:
         shutil.rmtree(live, ignore_errors=True)
         os.replace(tmp, live)
+    B.save_manifest(index_dir, manifest)
     os.remove(jpath)
-    # live content is unchanged — revalidate the diff-projection cache
-    # in place instead of forcing a rebuild scan on the next micro-batch
-    hit = _STORED_PROJ_CACHE.get(index_dir)
-    if hit is not None:
-        _STORED_PROJ_CACHE[index_dir] = (_index_state_token(index_dir), hit[1])
     # best-effort ANN maintenance (VERDICT r04 #7): absorb the merged
     # vector segment into the partition-pruned fold dirs so steady-state
     # tiered compaction keeps the semantic probe's union tail bounded.
@@ -1213,6 +1153,9 @@ def merge_segments(
             "ANN fold absorption failed for %s (probe stays correct, "
             "just less pruned)", index_dir, exc_info=True,
         )
+    # live content is unchanged — re-key the diff-projection cache
+    # instead of forcing a rebuild scan on the next micro-batch
+    _revalidate_stored_projection(spark, index_dir)
     return len(folded)
 
 
@@ -1223,22 +1166,22 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     stages, minus tokenization.  Bounded-frequency background work that
     restores zero read amplification; crash-safe via the segment journal
     (whole-directory staging + replace)."""
-    from bm25_index_tool_spark import build as B
-
     index_dir = os.path.abspath(index_dir)  # journaled paths must resolve
     recover_segments_if_needed(spark, index_dir)
     if not has_segments(index_dir):
         return
-    nb = B.load_manifest(index_dir).num_buckets
+    manifest = B.load_manifest(index_dir)
+    nb = manifest.num_buckets
     postings_path = os.path.join(index_dir, B.POSTINGS_DIR)
     termstats_path = os.path.join(index_dir, B.TERMSTATS_DIR)
     docs_path = os.path.join(index_dir, B.DOCS_DIR)
 
-    post = postings_view(spark, index_dir, spark.read.parquet(postings_path))
-    ts = termstats_view(spark, index_dir, spark.read.parquet(termstats_path))
-    docs = docs_view(spark, index_dir, spark.read.parquet(docs_path))
-    if "doc_pt" not in docs.columns:  # pre-doc_pt legacy base
-        docs = docs.withColumn("doc_pt", F.pmod(F.col("doc_id"), F.lit(nb)))
+    def _live(sub, view):
+        return view(spark, index_dir, B.read_table(spark, index_dir, sub, manifest))
+
+    post = _live(B.POSTINGS_DIR, postings_view)
+    ts = _live(B.TERMSTATS_DIR, termstats_view)
+    docs = _live(B.DOCS_DIR, docs_view)
 
     tmp_post = postings_path + ".compact-tmp"
     tmp_ts = termstats_path + ".compact-tmp"
@@ -1310,13 +1253,14 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
         _committed_seg_dirs(index_dir, VECTOR_SEG_DIR)
         or _committed_seg_dirs(index_dir, VECTOR_TS_DIR)
     ):
-        from bm25_index_tool_spark.vector import vector_view
+        from bm25_index_tool_spark import vector as V
 
         tmp_vec = vec_path + ".compact-tmp"
-        vector_view(spark, index_dir).write.mode("overwrite").parquet(tmp_vec)
-        meta_src = os.path.join(vec_path, "_meta.json")
-        if os.path.exists(meta_src):  # sidecar rides along with the swap
-            shutil.copyfile(meta_src, os.path.join(tmp_vec, "_meta.json"))
+        V.vector_view(spark, index_dir).write.mode("overwrite").parquet(tmp_vec)
+        # the sidecar rides along with the swap, recording the rewrite
+        V.write_vector_meta(
+            tmp_vec, V._load_vector_meta(index_dir), manifest.generation
+        )
         moves.append((tmp_vec, vec_path))
     jpath = os.path.join(index_dir, SEG_JOURNAL)
     with open(jpath + ".tmp", "w") as f:
@@ -1329,9 +1273,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
         os.replace(tmp, live)
     for d in _SEG_DIRS:
         shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
+    B.save_manifest(index_dir, manifest)
     os.remove(jpath)
-    # compaction preserves live content — revalidate the diff-projection
-    # cache in place (same as merge_segments)
-    hit = _STORED_PROJ_CACHE.get(index_dir)
-    if hit is not None:
-        _STORED_PROJ_CACHE[index_dir] = (_index_state_token(index_dir), hit[1])
+    # compaction preserves live content (same as merge_segments)
+    _revalidate_stored_projection(spark, index_dir)

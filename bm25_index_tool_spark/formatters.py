@@ -109,7 +109,8 @@ def format_info(meta: dict[str, Any]) -> str:
         f"Location: {meta['location']}",
         f"Created: {meta['created_at']}",
         f"Files: {meta['file_count']:,}",
-        f"Buckets: {meta['num_buckets']}  (index v{meta['index_version']})",
+        f"Buckets: {meta['num_buckets']}",
+        f"Format: {meta['format']}  (generation {meta['generation']})",
         f"Update segments: {meta.get('update_segments', 0)}"
         + ("  (run `compact` to fold)" if meta.get("update_segments") else ""),
         "",

@@ -7,9 +7,6 @@ search — and every read is a Spark DataFrame over that file, queried with
 DataFrame ops: `search` replicates the
 ``WHERE query LIKE '%pat%' ORDER BY timestamp DESC LIMIT n`` path
 (reference ``core/history.py:190-232``).
-
-Roots written before the JSONL log keep their history: parquet part files
-already in the directory are read alongside it.
 """
 
 from __future__ import annotations
@@ -18,7 +15,6 @@ import json
 import os
 import shutil
 import time
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -68,29 +64,10 @@ class SearchHistory:
         finally:
             os.close(fd)
 
-    def _legacy_parts(self) -> list[str]:
-        """Parquet part files written by the former one-job-per-search log."""
-        try:
-            names = os.listdir(self.dir)
-        except OSError:
-            return []
-        return [
-            os.path.join(self.dir, n)
-            for n in sorted(names)
-            if n.endswith(".parquet") and not n.startswith((".", "_"))
-        ]
-
     def df(self) -> DataFrame:
-        reader = self.spark.read.schema(HISTORY_SCHEMA)
-        frames = []
-        if os.path.exists(self.path):
-            frames.append(reader.json(self.path))
-        legacy = self._legacy_parts()
-        if legacy:
-            frames.append(reader.parquet(*legacy))
-        if not frames:
+        if not os.path.exists(self.path):
             return self.spark.createDataFrame([], HISTORY_SCHEMA)
-        return reduce(DataFrame.unionByName, frames)
+        return self.spark.read.schema(HISTORY_SCHEMA).json(self.path)
 
     def recent(self, n: int = 10) -> list:
         return (
@@ -111,8 +88,7 @@ class SearchHistory:
         return self.df().count()
 
     def clear(self) -> int:
-        """Permanently delete all history, JSONL and legacy parquet alike;
-        returns the number of entries deleted (reference
+        """Permanently delete all history; returns the number of entries deleted (reference
         ``core/history.py:234-249`` / ``commands/history.py:145-211``)."""
         n = self.count()
         shutil.rmtree(self.dir, ignore_errors=True)

@@ -34,6 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bm25_index_tool_spark import build as B
+from bm25_index_tool_spark import delta_store as DS
 from bm25_index_tool_spark.murmur import term_bucket
 from bm25_index_tool_spark.tokenize import tokenize_fts5_query
 
@@ -59,13 +60,12 @@ class LoadedIndex:
 
     @classmethod
     def open(cls, spark: SparkSession, index_dir: str) -> "LoadedIndex":
-        from bm25_index_tool_spark.delta_store import _index_state_token
-
+        m = B.load_manifest(index_dir)
         return cls(
             index_dir=index_dir,
-            _manifest=B.load_manifest(index_dir),
+            _manifest=m,
             spark=spark,
-            _version=_index_state_token(index_dir, spark),
+            _version=DS.index_token(index_dir, spark, m),
         )
 
     @property
@@ -77,87 +77,69 @@ class LoadedIndex:
         return self._manifest
 
     def _revalidate(self) -> None:
-        """Drop memoized/preloaded frames (and reload the manifest) if the
-        index was committed to since this handle last read it.  The token
-        is manifest stat + committed segment ids — the same discipline as
-        client._index_version — so the check costs one stat + one listdir,
-        and a handle held across an in-process update/compaction (e.g.
-        bench.py's) always serves the live committed index instead of a
-        pinned pre-swap file listing (or silently stale N/avgdl)."""
-        from bm25_index_tool_spark.delta_store import _index_state_token
-
-        ver = _index_state_token(self.index_dir, self.spark)
+        """Drop memoized/preloaded frames (and take the new manifest) if
+        the index was committed to since this handle last read it.  The
+        token is delta_store.index_token, so the check costs one manifest
+        read, and a handle held across an in-process update/compaction
+        (e.g. bench.py's) always serves the live committed index instead
+        of a pinned pre-swap file listing (or silently stale N/avgdl)."""
+        m = B.load_manifest(self.index_dir)
+        ver = DS.index_token(self.index_dir, self.spark, m)
         if ver == self._version:
             return
         self.unload()
         self._frames.clear()
-        self._manifest = B.load_manifest(self.index_dir)
+        self._manifest = m
         self._version = ver
 
     def _read(self, sub: str) -> DataFrame:
         """Live view of one index table: the base parquet dir, composed
-        with any LSM segments + tombstones from append-strategy updates
+        with any LSM segments + tombstones from append updates
         (delta_store.py) — bucket/doc_pt pruning pushes through the union
         and the broadcast anti-join, so downstream plans keep their shape.
 
-        The composed DataFrame is memoized per handle: its file listing and
-        parquet footer schema are resolved once, not per query (~0.1s/table
-        of interactive latency).  The memo is guarded by _revalidate(): the
-        on-disk file set for one committed index version is immutable, and
-        any commit changes the version token.  A scan racing a concurrent
-        writer's full-compaction base swap is caught and retried by
-        ``client._run_with_reopen``."""
-        import os
-
+        Every read declares its schema (no footer-inference job), and the
+        composed DataFrame is memoized per handle, so its file listing is
+        resolved once, not per query.  The memo is guarded by
+        _revalidate(): the on-disk file set for one committed generation is
+        immutable, and any commit moves the generation.  A scan racing a
+        concurrent writer's full-compaction base swap is caught and
+        retried by ``client._run_with_reopen``."""
         self._revalidate()
         if self._cached is not None and sub in self._cached:
             return self._cached[sub]
-        if sub in self._frames:
-            return self._frames[sub]
-        base = self.spark.read.parquet(os.path.join(self.index_dir, sub))
-        from bm25_index_tool_spark import delta_store as DS
-
-        out = base
-        if DS.has_segments(self.index_dir):
-            if sub == B.DOCS_DIR:
-                out = DS.docs_view(self.spark, self.index_dir, base)
-            elif sub == B.POSTINGS_DIR:
-                out = DS.postings_view(self.spark, self.index_dir, base)
-            elif sub == B.TERMSTATS_DIR:
-                out = DS.termstats_view(self.spark, self.index_dir, base)
-        self._frames[sub] = out
-        return out
+        if sub not in self._frames:
+            base = B.read_table(self.spark, self.index_dir, sub, self._manifest)
+            view = {
+                B.DOCS_DIR: DS.docs_view,
+                B.POSTINGS_DIR: DS.postings_view,
+                B.TERMSTATS_DIR: DS.termstats_view,
+            }[sub]
+            self._frames[sub] = view(self.spark, self.index_dir, base)
+        return self._frames[sub]
 
     def blocks(self) -> DataFrame:
         """Block-store frame, memoized like the other tables so repeated
-        WAND queries skip the per-query parquet file listing + footer
-        resolution (~80 ms at 32 shards, growing with shard count).  The
-        memo key adds blocks_meta.json's stat to the index-version token:
-        build_blocks/update_blocks commit a rebuilt store WITHOUT touching
-        the manifest, and both rewrite the meta file last.  Without a
-        readable meta file there is no token, so nothing is memoized: a
-        pinned file listing could otherwise be served forever."""
+        WAND queries skip the per-query parquet file listing (~80 ms at 32
+        shards, growing with shard count).  build_blocks and every update
+        that rewrites blocks end with a manifest save, so the generation
+        guards this memo too."""
         import os
 
+        from bm25_index_tool_spark.blocks import SHARDED_BLOCKS_SCHEMA
+
         self._revalidate()
-        try:
-            st = os.stat(os.path.join(self.index_dir, "blocks_meta.json"))
-            btok = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            btok = None
-        hit = self._frames.get("_blocks")
-        if btok is not None and hit is not None and hit[0] == btok:
-            return hit[1]
-        bp = os.path.join(self.index_dir, B.BLOCKS_DIR)
-        if not os.path.exists(bp):
-            raise ValueError(
-                f"Block engine store not built for index at {self.index_dir}; "
-                "run blocks.build_blocks (or create_index(build_block_engine=True))"
-            )
-        df = self.spark.read.parquet(bp)
-        if btok is not None:
-            self._frames["_blocks"] = (btok, df)
-        return df
+        if "_blocks" not in self._frames:
+            bp = os.path.join(self.index_dir, B.BLOCKS_DIR)
+            if not os.path.exists(bp):
+                raise ValueError(
+                    f"Block engine store not built for index at {self.index_dir}; "
+                    "run blocks.build_blocks (or create_index(build_block_engine=True))"
+                )
+            self._frames["_blocks"] = self.spark.read.schema(
+                SHARDED_BLOCKS_SCHEMA
+            ).parquet(bp)
+        return self._frames["_blocks"]
 
     def docs(self) -> DataFrame:
         return self._read(B.DOCS_DIR)
@@ -217,9 +199,7 @@ class LoadedIndex:
                 df = self._read(sub).cache()  # live view (incl. segments)
                 df.count()  # materialize
                 cached[sub] = df
-            from bm25_index_tool_spark.delta_store import _index_state_token
-
-            if _index_state_token(self.index_dir, self.spark) == v0:
+            if DS.index_token(self.index_dir, self.spark) == v0:
                 # a prior preload's frames this call didn't re-request
                 # (e.g. a docs cache) must not stay persisted
                 # unreachably; frames re-requested at the same version
@@ -281,11 +261,11 @@ def bm25_partial(
     return F.expr(bm25_partial_sql(tf, dl, idf, k1, b, avgdl))
 
 
-def doc_pt_sql(doc_id: str, num_buckets: int, type_name: str) -> str:
-    """The docs table's partition key of ``doc_id`` — the build-side twin
-    of build.py's doc_pt assignment (pmod(doc_id, num_buckets)); a
-    mismatch would silently drop winners."""
-    return f"CAST(pmod({doc_id}, {int(num_buckets)}) AS {type_name})"
+def doc_pt_sql(doc_id: str, num_buckets: int) -> str:
+    """The docs table's partition key of ``doc_id`` in its type (int) —
+    the build-side twin of build.py's doc_pt assignment (pmod(doc_id,
+    num_buckets)); a mismatch would silently drop winners."""
+    return f"CAST(pmod({doc_id}, {int(num_buckets)}) AS int)"
 
 
 def score_query(
@@ -305,24 +285,12 @@ def score_query(
     return score_tokens(index, tokens, top_k, include_content=include_content)
 
 
-def with_winner_doc_pt(
-    topk: DataFrame, docs: DataFrame, num_buckets: int
-) -> tuple[DataFrame, list[str]]:
-    """Derive the docs table's partition key on a ≤k-row winners frame and
-    return (winners, join_keys): joining the broadcast winners on
-    (doc_id, doc_pt) makes Catalyst emit DynamicPartitionPruning on the
-    docs scan — the content fetch reads ≤k partitions instead of the whole
-    table (VERDICT r04 #5).  The formula is doc_pt_sql's.  Legacy
-    pre-doc_pt bases join on doc_id alone."""
-    if "doc_pt" not in docs.columns:
-        return topk, ["doc_id"]
-    pt_type = docs.schema["doc_pt"].dataType.simpleString()
-    return (
-        topk.withColumn(
-            "doc_pt", F.expr(doc_pt_sql("doc_id", num_buckets, pt_type))
-        ),
-        ["doc_id", "doc_pt"],
-    )
+def with_winner_doc_pt(topk: DataFrame, num_buckets: int) -> DataFrame:
+    """Derive the docs table's partition key on a ≤k-row winners frame:
+    joining the broadcast winners on (doc_id, doc_pt) makes Catalyst emit
+    DynamicPartitionPruning on the docs scan — the content fetch reads ≤k
+    partitions instead of the whole table (VERDICT r04 #5)."""
+    return topk.withColumn("doc_pt", F.expr(doc_pt_sql("doc_id", num_buckets)))
 
 
 def fetch_winner_docs(
@@ -335,10 +303,9 @@ def fetch_winner_docs(
     pruned to ≤k partitions.  The single-query statement states the same
     join in SQL.  Returns winners' columns + ``doc_cols`` from the docs
     side."""
-    docs = index.docs()
-    w, keys = with_winner_doc_pt(winners, docs, index.manifest.num_buckets)
-    sel = ["doc_id", *doc_cols] + (["doc_pt"] if "doc_pt" in keys else [])
-    return F.broadcast(w).join(docs.select(*sel), keys).drop("doc_pt")
+    w = with_winner_doc_pt(winners, index.manifest.num_buckets)
+    docs = index.docs().select("doc_id", *doc_cols, "doc_pt")
+    return F.broadcast(w).join(docs, ["doc_id", "doc_pt"]).drop("doc_pt")
 
 
 def score_stage_frames(
@@ -436,19 +403,13 @@ topk AS (
     else:
         # broadcast the ≤k winners into docs on (doc_id, doc_pt): Catalyst
         # emits DynamicPartitionPruning on the docs scan, so the content
-        # fetch reads ≤k partitions (VERDICT r04 #5); legacy pre-doc_pt
-        # bases join on doc_id alone
-        if "doc_pt" in docs.columns:
-            pt_type = docs.schema["doc_pt"].dataType.simpleString()
-            pt = f", {doc_pt_sql('doc_id', m.num_buckets, pt_type)} AS doc_pt"
-            on_pt = " AND w.doc_pt = d.doc_pt"
-        else:
-            pt = on_pt = ""
+        # fetch reads ≤k partitions (VERDICT r04 #5)
+        pt = doc_pt_sql("doc_id", m.num_buckets)
         content = ", d.content" if include_content else ""
         text += f"""SELECT /*+ BROADCAST(w) */ w.doc_id, d.full_path AS path,
        d.filename, d.content_sha256, w.score{content}
-FROM (SELECT doc_id, score{pt} FROM topk) w
-JOIN {{docs}} d ON w.doc_id = d.doc_id{on_pt}
+FROM (SELECT doc_id, score, {pt} AS doc_pt FROM topk) w
+JOIN {{docs}} d ON w.doc_id = d.doc_id AND w.doc_pt = d.doc_pt
 ORDER BY w.score DESC, w.doc_id ASC"""
     return index.spark.sql(
         text,

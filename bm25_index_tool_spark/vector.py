@@ -289,16 +289,15 @@ def build_vector_index(
     built the store (the search path embeds queries with the same model).
     The default embedder is the deterministic stand-in — see module
     docstring."""
-    import json
     import os
 
     from bm25_index_tool_spark import build as B
-
-    docs = spark.read.parquet(os.path.join(index_dir, B.DOCS_DIR))
     from bm25_index_tool_spark import delta_store as DS
 
-    if DS.has_segments(index_dir):  # live view when LSM segments exist
-        docs = DS.docs_view(spark, index_dir, docs)
+    manifest = B.load_manifest(index_dir)
+    docs = DS.docs_view(
+        spark, index_dir, B.read_table(spark, index_dir, B.DOCS_DIR, manifest)
+    )
     chunks = chunk_documents(
         docs.select(F.col("full_path").alias("path"), "content"),
         id_cols=["path"],
@@ -313,8 +312,8 @@ def build_vector_index(
     # in-place overwrite first DELETES the live dir, so a crash mid-write
     # (or a reader racing the job) saw a truncated store with no
     # _meta.json — the same hazard compact_index stages .compact-tmp for.
-    # The meta file is written (tmp+fsync) INTO the staged dir, so the
-    # swap is the single commit point for data + metadata together.
+    # The meta file is written INTO the staged dir, so the swap is the
+    # single commit point for data + metadata together.
     tmp_path = out_path + ".build-tmp"
     from pyspark.sql import Observation
 
@@ -336,15 +335,10 @@ def build_vector_index(
         "chunk_overlap": chunk_overlap,
         "max_chars": max_chars,
     }
-    mp = os.path.join(tmp_path, "_meta.json")
-    with open(mp + ".tmp", "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(mp + ".tmp", mp)
-    import shutil as _sh
+    meta = write_vector_meta(tmp_path, meta, manifest.generation)
+    import shutil
 
-    _sh.rmtree(out_path, ignore_errors=True)
+    shutil.rmtree(out_path, ignore_errors=True)
     os.replace(tmp_path, out_path)
     # the new base was built from the LIVE view (base ∪ segments ⟖
     # tombstones), so outstanding vector segments are now folded in —
@@ -353,15 +347,28 @@ def build_vector_index(
     # doc).  Clearing them is safe under the write lock; a crash between
     # the base write and these removes only re-creates the pre-existing
     # duplicate window, which re-running the build heals.
-    import shutil
-
     for seg_root in (DS.VECTOR_SEG_DIR, DS.VECTOR_TS_DIR):
         shutil.rmtree(os.path.join(index_dir, seg_root), ignore_errors=True)
-    # a rebuild changes the base without touching the manifest/segments,
-    # so the memoized fingerprint (keyed by the index-state token) would
-    # go stale in THIS process — drop it; other processes see the change
-    # through the _meta.json stat in the memo key
-    _FP_CACHE.pop(index_dir, None)
+    B.save_manifest(index_dir, manifest)
+    return meta
+
+
+def write_vector_meta(store_dir: str, meta: dict, generation: int) -> dict:
+    """Write a vector base's ``_meta.json`` (tmp + fsync + replace) into the
+    staged store dir.  ``base_generation`` is the index generation the
+    rewrite started from: every base rewrite (build, compaction) records a
+    new one and ends with a manifest save, so an ANN index is fresh iff it
+    recorded the same value; a segment append leaves it alone."""
+    import json
+    import os
+
+    meta = {**meta, "base_generation": generation}
+    mp = os.path.join(store_dir, "_meta.json")
+    with open(mp + ".tmp", "w") as f:
+        json.dump(meta, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(mp + ".tmp", mp)
     return meta
 
 
@@ -370,28 +377,20 @@ def _load_vector_meta(index_dir: str) -> dict:
     _meta.json is treated as corrupt (code-review r05): silently falling
     back to defaults would let the next incremental refresh chunk with the
     wrong params and embed with the stand-in model — permanently mixing
-    models in one store with no error anywhere.  Missing-field defaults
-    still apply for metas written before a field existed."""
+    models in one store with no error anywhere."""
     import json
     import os
 
     meta_path = os.path.join(index_dir, VECTOR_DIR, "_meta.json")
-    meta = {
-        "embedder": DEFAULT_EMBEDDER,
-        "dim": FAKE_EMBED_DIM,
-        "chunk_size": DEFAULT_CHUNK_SIZE,
-        "chunk_overlap": DEFAULT_CHUNK_OVERLAP,
-        "max_chars": 48_000,
-    }
-    if not os.path.exists(meta_path):
+    try:
+        with open(meta_path) as f:
+            return json.load(f)
+    except FileNotFoundError:
         raise ValueError(
             f"vector store at {os.path.dirname(meta_path)} has no "
             "_meta.json (corrupt or interrupted build) — re-run "
             "build_vector_index"
-        )
-    with open(meta_path) as f:
-        meta.update(json.load(f))
-    return meta
+        ) from None
 
 
 def _seg_ordered_alive(rows: DataFrame, ts, seg_col: str) -> DataFrame:
@@ -417,29 +416,12 @@ def _seg_ordered_alive(rows: DataFrame, ts, seg_col: str) -> DataFrame:
     )
 
 
-# Memoized composed view per (app, committed index version, vector-base
-# rebuild): the exact-scan path re-resolved the vector base's parquet
-# listing + segment dirs on EVERY query (~0.1 s of driver latency).  The
-# token is the same pair the ANN freshness fingerprint uses — the index
-# state token moves on any segment/tombstone commit, the _meta.json stat
-# on any base rebuild — so a memo hit can only serve the identical view.
+# Memoized composed view per index_token: the exact-scan path re-resolved
+# the vector base's parquet listing + segment dirs on EVERY query (~0.1 s
+# of driver latency).  Every vector writer (base rebuild, segment refresh,
+# compaction) ends with a manifest save, so a memo hit can only serve the
+# identical view.
 _VIEW_CACHE: dict[str, tuple] = {}
-
-
-def _vector_view_token(spark, index_dir: str):
-    import os
-
-    from bm25_index_tool_spark.delta_store import _index_state_token
-
-    try:
-        mst = os.stat(os.path.join(index_dir, VECTOR_DIR, "_meta.json"))
-        meta_stat = (mst.st_mtime_ns, mst.st_size)
-    except OSError:
-        meta_stat = None
-    state = _index_state_token(index_dir, spark)
-    if state is None or meta_stat is None:
-        return None
-    return (spark.sparkContext.applicationId, state, meta_stat)
 
 
 def vector_view(spark, index_dir: str) -> DataFrame:
@@ -454,26 +436,31 @@ def vector_view(spark, index_dir: str) -> DataFrame:
 
     from bm25_index_tool_spark import delta_store as DS
 
-    tok = _vector_view_token(spark, index_dir)
+    tok = DS.index_token(index_dir, spark)
     hit = _VIEW_CACHE.get(index_dir)
-    if hit is not None and tok is not None and hit[0] == tok:
+    if hit is not None and hit[0] == tok:
         return hit[1]
 
-    base = spark.read.parquet(os.path.join(index_dir, VECTOR_DIR))
+    base = spark.read.schema(DS.VECTOR_SCHEMA).parquet(
+        os.path.join(index_dir, VECTOR_DIR)
+    )
     cols = base.columns
     seg = DS._read_all_segments(
-        spark, index_dir, DS.VECTOR_SEG_DIR, keep_seg=True
+        spark, index_dir, DS.VECTOR_SEG_DIR, keep_seg=True,
+        schema=DS.VECTOR_SCHEMA,
     )
     out = base.withColumn("_seg", F.lit(0))
     if seg is not None:
         out = out.unionByName(
             seg.select(*cols, F.col("seg").cast("int").alias("_seg"))
         )
-    ts = DS._read_all_segments(spark, index_dir, DS.VECTOR_TS_DIR, keep_seg=True)
+    ts = DS._read_all_segments(
+        spark, index_dir, DS.VECTOR_TS_DIR, keep_seg=True,
+        schema=DS.VECTOR_TS_SCHEMA,
+    )
     out = _seg_ordered_alive(out, ts, "_seg")
     out = out.drop("_seg").select(*cols)
-    if tok is not None:
-        _VIEW_CACHE[index_dir] = (tok, out)
+    _VIEW_CACHE[index_dir] = (tok, out)
     return out
 
 
@@ -537,62 +524,23 @@ def stage_vector_refresh(
 # The probe is exact IVF-Flat (full vectors stored in the index → exact
 # cosines; only candidate RECALL is approximate, recall→1 as nprobe→m).
 # Appends never touch the ANN index (base is immutable between
-# compactions); `compact_index` rewrites the base, which the recorded
-# os-level fingerprint detects — `method="auto"` then falls back to the
-# exact scan until `build_vector_ann` is re-run, so results are ALWAYS
-# correct, never silently stale.
+# compactions); `compact_index` rewrites the base and records a new
+# ``base_generation`` in vector/_meta.json, which the ANN meta's recorded
+# value then no longer matches — `method="auto"` falls back to the exact
+# scan until `build_vector_ann` is re-run, so results are ALWAYS correct,
+# never silently stale.
 # ---------------------------------------------------------------------------
 
 VECTOR_ANN_DIR = "vector_ann"
 VECTOR_ANN_FOLDS_DIR = "vector_ann_folds"
 
 
-# fingerprint memo keyed by the cheap os-level index-state token (manifest
-# stat + segment ids): `method="auto"` consults the fingerprint on EVERY
-# semantic query, and re-walking + stat'ing the whole base chunk table per
-# query is thousands of driver-side syscalls at scale.  The token changes
-# on any commit (slightly over-invalidating — segment appends don't move
-# the base), so the walk runs once per commit instead of once per query.
-_FP_CACHE: dict[str, tuple] = {}
-
-
-def _vector_base_fingerprint(index_dir: str) -> str:
-    """os-level identity of the base chunk table (relpath, size, mtime of
-    every parquet file) — changes exactly when compaction/rebuild rewrites
-    the base, never on segment appends."""
-    import hashlib
-    import json
-    import os
-
-    from bm25_index_tool_spark.delta_store import _index_state_token
-
-    # the index-state token alone misses a vector-base REBUILD
-    # (build_vector_index rewrites vector/ without touching the manifest
-    # or segments) — _meta.json is rewritten by every rebuild, so its
-    # stat in the key catches rebuilds from other processes too
-    try:
-        mst = os.stat(os.path.join(index_dir, VECTOR_DIR, "_meta.json"))
-        meta_stat = (mst.st_mtime_ns, mst.st_size)
-    except OSError:
-        meta_stat = None
-    tok = (_index_state_token(index_dir), meta_stat)
-    hit = _FP_CACHE.get(index_dir)
-    if hit is not None and hit[0] == tok and tok[0] is not None:
-        return hit[1]
-
-    root = os.path.join(index_dir, VECTOR_DIR)
-    items = []
-    for dp, _d, fs in os.walk(root):
-        for fn in fs:
-            if fn.endswith(".parquet"):
-                p = os.path.join(dp, fn)
-                st = os.stat(p)
-                items.append(
-                    (os.path.relpath(p, root), st.st_size, st.st_mtime_ns)
-                )
-    fp = hashlib.sha256(json.dumps(sorted(items)).encode()).hexdigest()
-    _FP_CACHE[index_dir] = (tok, fp)
-    return fp
+def _ann_fresh(ann: dict | None, vector_meta: dict) -> bool:
+    """The ANN index (its ``_ann_meta.json``) was built over the current
+    vector base (its ``vector/_meta.json``)."""
+    return ann is not None and (
+        ann["base_generation"] == vector_meta["base_generation"]
+    )
 
 
 @_locked
@@ -606,15 +554,21 @@ def build_vector_ann(
 ) -> dict:
     """Materialize an IVF-Flat index over the BASE chunk-vector table:
     every chunk row tagged with its coarse cell, ``partitionBy(cell)`` so a
-    probe reads exactly nprobe partitions; centroids + the base fingerprint
-    persist in ``_ann_meta.json``.  Re-run after ``compact_index`` (the
-    fingerprint gate makes a stale index fall back to the exact scan)."""
+    probe reads exactly nprobe partitions; centroids + the vector base's
+    generation persist in ``_ann_meta.json``.  Re-run after
+    ``compact_index`` (the generation gate makes a stale index fall back to
+    the exact scan)."""
     import json
     import os
 
+    from bm25_index_tool_spark import build as B
+    from bm25_index_tool_spark import delta_store as DS
     from bm25_index_tool_spark.pipeline import simsearch as SS
 
-    base = spark.read.parquet(os.path.join(index_dir, VECTOR_DIR))
+    manifest = B.load_manifest(index_dir)
+    base = spark.read.schema(DS.VECTOR_SCHEMA).parquet(
+        os.path.join(index_dir, VECTOR_DIR)
+    )
     n = base.count()
     if n == 0:
         raise ValueError("vector store is empty; nothing to index")
@@ -685,13 +639,14 @@ def build_vector_ann(
         "centroids": cents,
         "absorbed": [],
         "absorbed_dirs": [],
-        "base_fingerprint": _vector_base_fingerprint(index_dir),
+        "base_generation": _load_vector_meta(index_dir)["base_generation"],
         "nprobe_default": npro,
         "expected_recall_at_default": exp_recall,
         "n_chunks": n,
     }
     with open(os.path.join(ann_path, "_ann_meta.json"), "w") as f:
         json.dump(meta, f)
+    B.save_manifest(index_dir, manifest)
     return meta
 
 
@@ -716,21 +671,21 @@ def absorb_merged_segment_into_ann(
     unions the folded segment like any other — correct, just less pruned.
     A merge folds from the oldest id up, so each absorption supersedes all
     previous fold dirs (their rows are inside the new merged segment);
-    superseded dirs are removed after the meta swap.  FULL compaction
-    rewrites the base and still requires ``build_vector_ann`` (the
-    fingerprint gate falls back to the exact scan until then)."""
+    superseded dirs are removed after the meta swap, and a manifest save
+    ends the absorption.  FULL compaction rewrites the base and still
+    requires ``build_vector_ann`` (the generation gate falls back to the
+    exact scan until then)."""
     import json
     import os
     import shutil
 
+    from bm25_index_tool_spark import build as B
     from bm25_index_tool_spark import delta_store as DS
     from bm25_index_tool_spark.pipeline import simsearch as SS
 
     meta = _load_ann_meta(index_dir)
-    if meta is None:
-        return 0
-    if meta.get("base_fingerprint") != _vector_base_fingerprint(index_dir):
-        return 0  # stale ANN: probe already falls back; nothing to absorb
+    if meta is None or not _ann_fresh(meta, _load_vector_meta(index_dir)):
+        return 0  # no or stale ANN: probe already falls back; nothing to absorb
     folds_root = os.path.join(index_dir, VECTOR_ANN_FOLDS_DIR)
     final = os.path.join(folds_root, f"fold={fold_seg}")
     staging = final + ".staging"
@@ -752,7 +707,8 @@ def absorb_merged_segment_into_ann(
                     )
 
     seg = DS._read_all_segments(
-        spark, index_dir, DS.VECTOR_SEG_DIR, keep_seg=True
+        spark, index_dir, DS.VECTOR_SEG_DIR, keep_seg=True,
+        schema=DS.VECTOR_SCHEMA,
     )
     prior_dirs = list(meta.get("absorbed_dirs") or [])
     rows = None
@@ -787,6 +743,7 @@ def absorb_merged_segment_into_ann(
             shutil.rmtree(
                 os.path.join(folds_root, f"fold={s}"), ignore_errors=True
             )
+    B.save_manifest(index_dir, B.load_manifest(index_dir))
     return n
 
 
@@ -801,33 +758,27 @@ def _load_ann_meta(index_dir: str) -> dict | None:
         return json.load(f)
 
 
-# Memoized base-ANN frame per (app, ann build): resolving the
-# cell-partitioned ANN dir costs a file listing + footer read over m
-# partition dirs (~0.2 s at m=64, growing with m) and was paid by EVERY
-# probe; the dir's content changes only when build_vector_ann rewrites it,
-# and every writer (build + fold absorption) rewrites _ann_meta.json last,
-# so its stat is the invalidation token — the same discipline as
-# ``_FP_CACHE`` above.  Over-invalidating on fold absorption is harmless.
+# Memoized base-ANN frame per index_token: resolving the cell-partitioned
+# ANN dir costs a file listing over m partition dirs (~0.2 s at m=64,
+# growing with m) and was paid by EVERY probe.  ANN build and fold
+# absorption end with a manifest save; over-invalidating on other commits
+# is harmless.
 _ANN_FRAME_CACHE: dict[str, tuple] = {}
 
 
 def _ann_frame(spark, index_dir: str):
     import os
 
-    p = os.path.join(index_dir, VECTOR_ANN_DIR)
-    try:
-        st = os.stat(os.path.join(p, "_ann_meta.json"))
-        tok = (
-            spark.sparkContext.applicationId, st.st_mtime_ns, st.st_size
-        )
-    except OSError:
-        tok = None
+    from bm25_index_tool_spark import delta_store as DS
+
+    tok = DS.index_token(index_dir, spark)
     hit = _ANN_FRAME_CACHE.get(index_dir)
-    if hit is not None and tok is not None and hit[0] == tok:
+    if hit is not None and hit[0] == tok:
         return hit[1]
-    df = spark.read.parquet(p)
-    if tok is not None:
-        _ANN_FRAME_CACHE[index_dir] = (tok, df)
+    df = spark.read.schema("cell INT, " + DS.VECTOR_SCHEMA).parquet(
+        os.path.join(index_dir, VECTOR_ANN_DIR)
+    )
+    _ANN_FRAME_CACHE[index_dir] = (tok, df)
     return df
 
 
@@ -846,11 +797,13 @@ def _live_segment_rows(
     seg = DS._read_all_segments(
         spark, index_dir, DS.VECTOR_SEG_DIR, keep_seg=True,
         after=after_seg if after_seg >= 0 else None,
+        schema=DS.VECTOR_SCHEMA,
     )
     if seg is None:
         return None
     ts = DS._read_all_segments(
-        spark, index_dir, DS.VECTOR_TS_DIR, keep_seg=True
+        spark, index_dir, DS.VECTOR_TS_DIR, keep_seg=True,
+        schema=DS.VECTOR_TS_SCHEMA,
     )
     return _seg_ordered_alive(seg, ts, "seg").select(*cols)
 
@@ -875,6 +828,9 @@ def semantic_search_index(
     ``nprobe == m`` the ivf path is result-identical to the scan."""
     import os
 
+    from bm25_index_tool_spark import build as B
+
+    B.load_manifest(index_dir)  # refuses an index of another format
     path = os.path.join(index_dir, VECTOR_DIR)
     if not os.path.exists(path):
         raise ValueError(
@@ -908,9 +864,7 @@ def semantic_search_index(
         # fold=f1 dir would double-count every never-tombstoned path.
         # Degrade to ignoring the folds (correct, just less pruned).
         fold_ok = set(ann["absorbed"]) <= set(DS.segment_ids(index_dir))
-    fresh = ann is not None and ann.get(
-        "base_fingerprint"
-    ) == _vector_base_fingerprint(index_dir)
+    fresh = _ann_fresh(ann, meta)
     if ann is not None and not fold_ok:
         ann = dict(ann)
         ann["absorbed"] = []
@@ -949,9 +903,8 @@ def semantic_search_index(
     absorbed = sorted(int(s) for s in (ann.get("absorbed") or []))
     for s in ann.get("absorbed_dirs") or []:
         fold = (
-            spark.read.parquet(
-                os.path.join(index_dir, VECTOR_ANN_FOLDS_DIR, f"fold={s}")
-            )
+            spark.read.schema("cell INT, " + DS.VECTOR_SCHEMA)
+            .parquet(os.path.join(index_dir, VECTOR_ANN_FOLDS_DIR, f"fold={s}"))
             .where(F.col("cell").isin(probe))
             .drop("cell")
             .withColumn("_aseg", F.lit(int(s)))
@@ -959,7 +912,8 @@ def semantic_search_index(
         cand = cand.unionByName(fold)
     cols = [c for c in cand.columns if c != "_aseg"]
     ts = DS._read_all_segments(
-        spark, index_dir, DS.VECTOR_TS_DIR, keep_seg=True
+        spark, index_dir, DS.VECTOR_TS_DIR, keep_seg=True,
+        schema=DS.VECTOR_TS_SCHEMA,
     )
     # seg-ordered aliveness (the vector_view rule, one owner): a tombstone
     # kills base + older absorbed copies but never the newer absorbed row

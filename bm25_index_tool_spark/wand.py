@@ -55,10 +55,8 @@ def choose_engine(index_dir: str, *, df_threshold: int | None = None) -> str:
     mp = os.path.join(index_dir, "blocks_meta.json")
     try:
         with open(mp) as f:
-            max_df = json.load(f).get("max_df")
+            max_df = json.load(f)["max_df"]
     except (OSError, ValueError):
-        return "join"
-    if max_df is None:  # pre-max_df block store: stay on the default plan
         return "join"
     return "blocks" if max_df >= thr else "join"
 

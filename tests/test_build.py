@@ -128,8 +128,9 @@ def test_checkpoint_resume(spark, tmp_path):
 
 def test_resume_over_pre_r02_termstats_checkpoint(spark, tmp_path):
     """ADVICE r02: a 'termstats' stage checkpoint written before
-    total_tokens was recorded ({rows} only) must not KeyError on resume —
-    total_tokens is recomputed from the written postings."""
+    total_tokens was recorded ({rows} only, and no index format) must not
+    KeyError on resume — a checkpoint of another format is not trusted, so
+    its stage re-runs and records total_tokens."""
     import json
     import os
 
@@ -148,8 +149,10 @@ def test_resume_over_pre_r02_termstats_checkpoint(spark, tmp_path):
     with open(p) as f:
         j = json.load(f)
     j.pop("total_tokens")
+    j.pop("format")
     with open(p, "w") as f:
         json.dump(j, f)
+    assert not ckpt.is_complete("termstats")
 
     m1 = B.build_index(spark, df, broken, num_buckets=4, resume=True)
     m2 = B.build_index(spark, df, str(tmp_path / "clean"), num_buckets=4)

@@ -346,19 +346,35 @@ def test_append_crash_rolls_forward(spark, tmp_path, monkeypatch, window):
 
 def test_legacy_merge_journal_fails_clearly(spark, tmp_path):
     """A crashed merge-and-swap update (a writer that no longer exists)
-    leaves ``_update.journal`` and possibly half-swapped partitions:
-    every writer refuses the index and names the file, rather than
-    serving it."""
+    leaves ``_update.journal`` and possibly half-swapped partitions in a
+    format-1 index: every writer refuses the index with an error that says
+    to rebuild, rather than serving it, and leaves the journal in place."""
+    import json
+
     client = BM25SparkClient(spark, str(tmp_path / "root"))
     client.create_index(
         "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=4
     )
     idx_dir = client._index_dir("a")
-    with open(os.path.join(idx_dir, "_update.journal"), "w") as f:
+    mp = os.path.join(idx_dir, B.MANIFEST)
+    with open(mp) as f:
+        m = json.load(f)
+    m["index_version"] = 1
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    journal = os.path.join(idx_dir, "_update.journal")
+    with open(journal, "w") as f:
         f.write("{}")
     cur = spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
-    with pytest.raises(ValueError, match=r"_update\.journal.*rebuild"):
-        client.update_index("a", cur)
+    for write in (
+        lambda: client.update_index("a", cur),
+        lambda: DS.apply_update_append(spark, idx_dir, cur),
+        lambda: DS.merge_segments(spark, idx_dir),
+        lambda: DS.compact_index(spark, idx_dir),
+    ):
+        with pytest.raises(ValueError, match=r"format 1 .*overwrite=True"):
+            write()
+    assert os.path.exists(journal)
     assert DS.segment_ids(idx_dir) == []
     # the rebuild the error asks for clears it
     client.create_index(
@@ -367,6 +383,140 @@ def test_legacy_merge_journal_fails_clearly(spark, tmp_path):
     )
     client.update_index("a", cur)
     assert DS.segment_ids(idx_dir) == [1]
+
+
+def _tree_state(root):
+    return sorted(
+        (os.path.relpath(os.path.join(dp, n), root), st.st_size, st.st_mtime_ns)
+        for dp, dns, fns in os.walk(root)
+        for n in dns + fns
+        for st in [os.stat(os.path.join(dp, n))]
+    )
+
+
+def _mark_format_1(idx_dir, drop=("generation", "build_id", "docs_schema")):
+    """Rewrite the manifest as a format-1 engine wrote it: version 1 and
+    without the fields that format 2 added (plus any in ``drop``)."""
+    import json
+
+    mp = os.path.join(idx_dir, B.MANIFEST)
+    with open(mp) as f:
+        m = json.load(f)
+    m["index_version"] = 1
+    for k in drop:
+        m.pop(k, None)
+    with open(mp, "w") as f:
+        json.dump(m, f)
+
+
+def _assert_format_1_refused_untouched(spark, client, idx_dir):
+    """Every reader and writer refuses the index with the rebuild error,
+    and no file under it is created, removed or rewritten."""
+    state = _tree_state(idx_dir)
+    cur = spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
+    client._open.pop("a", None)
+    for call in (
+        lambda: client.search("a", "apple", use_cache=False),
+        lambda: client.update_index("a", cur),
+        lambda: client.compact_index("a"),
+        lambda: DS.apply_update_append(spark, idx_dir, cur),
+        lambda: DS.merge_segments(spark, idx_dir),
+    ):
+        with pytest.raises(ValueError, match=r"format 1 .*overwrite=True"):
+            call()
+    assert _tree_state(idx_dir) == state
+
+
+def _rebuild_and_update(spark, client, idx_dir):
+    """The rebuild the error asks for gives a format-2 index that takes
+    append updates and matches the FTS5 oracle."""
+    client.create_index(
+        "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA),
+        num_buckets=4, overwrite=True,
+    )
+    m = client.update_index(
+        "a", spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
+    )
+    assert m.index_version == B.INDEX_FORMAT_VERSION
+    assert DS.segment_ids(idx_dir) == [1]
+    client._open.pop("a", None)
+    _assert_oracle_identical(client, "a", _delta_rows(), QUERIES)
+
+
+def test_append_legacy_manifest_id_fallback(spark, tmp_path):
+    """A manifest written before ``next_doc_id`` existed (format 1) is no
+    longer read through a max(doc_id) fallback: every reader and writer
+    refuses the index before touching it, and the rebuild mints ids from
+    the manifest's ``next_doc_id``."""
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    client.create_index(
+        "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=4
+    )
+    idx_dir = client._index_dir("a")
+    _mark_format_1(
+        idx_dir, drop=("next_doc_id", "generation", "build_id", "docs_schema")
+    )
+    _assert_format_1_refused_untouched(spark, client, idx_dir)
+    _rebuild_and_update(spark, client, idx_dir)
+    ids = _doc_ids_by_path(client, "a")
+    assert B.load_manifest(idx_dir).next_doc_id == max(ids.values()) + 1
+
+
+def test_append_onto_legacy_flat_docs_table(spark, tmp_path):
+    """A format-1 index whose docs table predates doc_pt partitioning (flat
+    parquet) is refused by every reader and writer, rather than appended
+    onto; the rebuild restores the partitioned docs base."""
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    client.create_index(
+        "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=4
+    )
+    idx_dir = client._index_dir("a")
+    docs_path = os.path.join(idx_dir, B.DOCS_DIR)
+    flat = spark.read.parquet(docs_path).drop("doc_pt").localCheckpoint(True)
+    flat.write.parquet(docs_path + ".flat")
+    os.rename(docs_path, docs_path + ".partitioned")
+    os.rename(docs_path + ".flat", docs_path)
+    assert not any(n.startswith("doc_pt=") for n in os.listdir(docs_path))
+    _mark_format_1(idx_dir)
+    _assert_format_1_refused_untouched(spark, client, idx_dir)
+    _rebuild_and_update(spark, client, idx_dir)
+    assert any(n.startswith("doc_pt=") for n in os.listdir(docs_path))
+
+
+def test_legacy_partitioned_segment_reads_beside_flat_one(spark, tmp_path):
+    """A format-1 index holding a segment in the older bucket=/doc_pt=
+    layout beside a flat one is refused by every reader and writer (no
+    diff, search or merge reads it); the rebuild writes flat segments."""
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    rows = _base_rows()
+    client.create_index(
+        "a", spark.createDataFrame(rows, C.CORPUS_SCHEMA), num_buckets=4
+    )
+    idx_dir = client._index_dir("a")
+    waves = _waves(rows, 2)
+    for cur in waves:
+        DS.apply_update_append(
+            spark, idx_dir, spark.createDataFrame(cur, C.CORPUS_SCHEMA),
+            auto_compact_segments=None,
+        )
+    assert DS.segment_ids(idx_dir) == [1, 2]
+    for table, part_col in (
+        (DS.POSTINGS_SEG_DIR, "bucket"),
+        (DS.TERMSTATS_SEG_DIR, "bucket"),
+        (DS.DOCS_SEG_DIR, "doc_pt"),
+    ):
+        d = os.path.join(idx_dir, table, "seg=1")
+        seg = spark.read.parquet(d).localCheckpoint(eager=True)
+        seg.repartition(2, part_col).write.partitionBy(part_col).parquet(
+            d + ".old"
+        )
+        os.rename(d, d + ".flat")
+        os.rename(d + ".old", d)
+        assert any(n.startswith(f"{part_col}=") for n in os.listdir(d))
+    _mark_format_1(idx_dir)
+    _assert_format_1_refused_untouched(spark, client, idx_dir)
+    _rebuild_and_update(spark, client, idx_dir)
+    _assert_flat_segment(idx_dir, 1)
 
 
 def test_compact_crash_rolls_forward(spark, tmp_path, monkeypatch):
@@ -708,76 +858,6 @@ def test_append_never_remints_tombstoned_ids(spark, tmp_path):
     client._open.pop("a", None)
     assert len(_doc_ids_by_path(client, "a")) == len(wave2)
     _assert_oracle_identical(client, "a", wave2, QUERIES)
-
-
-def test_append_legacy_manifest_id_fallback(spark, tmp_path):
-    """Manifests written before ``next_doc_id`` existed: the fallback
-    derives the high-water mark from base ∪ segments BEFORE the tombstone
-    anti-join, so retired max-ids still count."""
-    import json as J
-
-    client = BM25SparkClient(spark, str(tmp_path / "root"))
-    rows = _base_rows()[:12]
-    client.create_index(
-        "a", spark.createDataFrame(rows, C.CORPUS_SCHEMA), num_buckets=4
-    )
-    idx_dir = client._index_dir("a")
-    ids0 = _doc_ids_by_path(client, "a")
-    max_ever = max(ids0.values())
-
-    def _strip_hwm():
-        mp = os.path.join(idx_dir, B.MANIFEST)
-        with open(mp) as f:
-            d = J.load(f)
-        d.pop("next_doc_id", None)
-        with open(mp, "w") as f:
-            J.dump(d, f)
-
-    _strip_hwm()
-    top_path = max(ids0, key=ids0.get)
-    wave1 = [r for r in rows if f"{r[0]}/{r[1]}" != top_path]
-    client.update_index("a", spark.createDataFrame(wave1, C.CORPUS_SCHEMA))
-    client._open.pop("a", None)
-
-    _strip_hwm()  # next update must fall back again — tombstoned max counts
-    added = C.generate_rows(13, seed=55)[12:]
-    wave2 = wave1 + added
-    m = client.update_index("a", spark.createDataFrame(wave2, C.CORPUS_SCHEMA))
-    client._open.pop("a", None)
-    ids2 = _doc_ids_by_path(client, "a")
-    assert len(ids2) == m.num_docs == len(wave2)
-    assert ids2[f"{added[0][0]}/{added[0][1]}"] > max_ever
-    _assert_oracle_identical(client, "a", wave2, QUERIES)
-
-
-def test_append_onto_legacy_flat_docs_table(spark, tmp_path):
-    """An index whose docs table predates doc_pt partitioning (flat
-    parquet) must accept append updates: the segment still carries doc_pt
-    and the view composes on the shared columns."""
-    import shutil
-
-    client = BM25SparkClient(spark, str(tmp_path / "root"))
-    client.create_index(
-        "a", spark.createDataFrame(_base_rows(), C.CORPUS_SCHEMA), num_buckets=4
-    )
-    idx_dir = client._index_dir("a")
-    docs_path = os.path.join(idx_dir, B.DOCS_DIR)
-    flat = spark.read.parquet(docs_path).drop("doc_pt").localCheckpoint(True)
-    shutil.rmtree(docs_path)
-    flat.write.mode("overwrite").parquet(docs_path)
-    client._open.pop("a", None)
-
-    client.update_index(
-        "a", spark.createDataFrame(_delta_rows(), C.CORPUS_SCHEMA)
-    )
-    client._open.pop("a", None)
-    _assert_oracle_identical(client, "a", _delta_rows(), QUERIES)
-    # compaction restores the partitioned layout
-    client.compact_index("a")
-    assert any(
-        n.startswith("doc_pt=") for n in os.listdir(docs_path)
-    )
-    _assert_oracle_identical(client, "a", _delta_rows(), QUERIES)
 
 
 def test_client_tiered_compact(spark, tmp_path):
@@ -1217,69 +1297,3 @@ def test_segments_are_flat_sorted_files_pruned_by_pushed_filters(
         assert "In(bucket" in pushed or "EqualTo(bucket" in pushed, b
     for b in base_scans:
         assert "bucket" in _plan_line(b, "PartitionFilters"), b
-
-
-def _to_legacy_layout(spark, idx_dir, seg):
-    """Rewrite one flat segment in the older partitioned layout, with the
-    old stage writer's shape: repartition, then partitionBy(bucket|doc_pt)."""
-    import shutil
-
-    for table, part_col in (
-        (DS.POSTINGS_SEG_DIR, "bucket"),
-        (DS.TERMSTATS_SEG_DIR, "bucket"),
-        (DS.DOCS_SEG_DIR, "doc_pt"),
-    ):
-        d = os.path.join(idx_dir, table, f"seg={seg}")
-        rows = spark.read.parquet(d).localCheckpoint(eager=True)
-        shutil.rmtree(d)
-        rows.repartition(2, part_col).write.partitionBy(part_col).parquet(d)
-        assert any(n.startswith(f"{part_col}=") for n in os.listdir(d))
-
-
-def test_legacy_partitioned_segment_reads_beside_flat_one(spark, tmp_path):
-    """A segment staged in the older bucket=/doc_pt= layout stays readable
-    beside a flat one (by the update's diff and by search); the next
-    tiered merge folds both into the flat layout, and compaction still
-    restores the partitioned base."""
-    client = BM25SparkClient(spark, str(tmp_path / "root"))
-    rows = _base_rows()
-    client.create_index(
-        "a", spark.createDataFrame(rows, C.CORPUS_SCHEMA), num_buckets=4
-    )
-    idx_dir = client._index_dir("a")
-    waves = _waves(rows, 2)
-    DS.apply_update_append(
-        spark, idx_dir, spark.createDataFrame(waves[0], C.CORPUS_SCHEMA),
-        auto_compact_segments=None,
-    )
-    _to_legacy_layout(spark, idx_dir, 1)
-    # the next diff reads the legacy docs segment, not a cached projection
-    DS.invalidate_stored_projection(idx_dir)
-    DS.apply_update_append(
-        spark, idx_dir, spark.createDataFrame(waves[1], C.CORPUS_SCHEMA),
-        auto_compact_segments=None,
-    )
-    _assert_flat_segment(idx_dir, 2)
-    final = waves[-1]
-    qs = QUERIES + ["tiermark0", "tiermark1"]
-    client._open.pop("a", None)
-    _assert_oracle_identical(client, "a", final, qs)
-
-    assert DS.merge_segments(spark, idx_dir) == 2
-    assert DS.segment_ids(idx_dir) == [2]
-    _assert_flat_segment(idx_dir, 2)
-    client._open.pop("a", None)
-    _assert_oracle_identical(client, "a", final, qs)
-
-    client.compact_index("a")
-    assert not DS.has_segments(idx_dir)
-    for sub, part_col in (
-        (B.POSTINGS_DIR, "bucket"),
-        (B.TERMSTATS_DIR, "bucket"),
-        (B.DOCS_DIR, "doc_pt"),
-    ):
-        assert any(
-            n.startswith(f"{part_col}=")
-            for n in os.listdir(os.path.join(idx_dir, sub))
-        ), sub
-    _assert_oracle_identical(client, "a", final, qs)

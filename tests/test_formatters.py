@@ -81,7 +81,7 @@ def test_format_info_and_semantic():
 
     meta = {
         "name": "x", "location": "/tmp/x", "created_at": "t", "file_count": 12,
-        "num_buckets": 8, "index_version": 1,
+        "num_buckets": 8, "format": 2, "generation": 7,
         "bm25_params": {"k1": 1.2, "b": 0.75},
         "tokenization": {"profile": "unicode61", "stemmer": None, "stopwords": "s"},
         "engines": {"join": True, "blocks": False},
@@ -89,6 +89,7 @@ def test_format_info_and_semantic():
     }
     out = format_info(meta)
     assert "Index: x" in out and "k1: 1.2" in out and "Vector Search:" in out
+    assert "Format: 2  (generation 7)" in out
     sem = format_semantic(
         [{"path": "a", "score": 0.5, "chunk_text": "hello world", "chunk_index": 1}], "q"
     )

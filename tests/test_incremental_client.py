@@ -207,43 +207,26 @@ def test_history_concurrent_appends_from_two_processes(spark, tmp_path):
     assert got == want
 
 
-def test_history_reads_legacy_parquet_alongside_jsonl(spark, tmp_path):
-    """A root written by the former parquet-append log keeps its history:
-    legacy part files show in recent/count/stats beside new JSONL entries,
-    and clear() deletes both."""
+def test_history_ignores_legacy_parquet_parts(spark, tmp_path):
+    """Parquet part files left in the history dir by the former
+    one-job-per-search log are not read: history is the JSONL log alone,
+    and clear() still removes the whole dir."""
     import os
 
     from bm25_index_tool_spark.history import HISTORY_SCHEMA, SearchHistory
 
     hdir = str(tmp_path / "_history")
-    legacy = [
-        (1, "2024-01-01T00:00:00", '["old"]', "legacy query", 10, 3, 0.5,
-         "[]", "[]"),
-        (2, "2024-01-02T00:00:00", '["old"]', "legacy query", 10, 2, 1.5,
-         "[]", "[]"),
-    ]
-    for row in legacy:  # the former log's write shape, one file per search
-        spark.createDataFrame([row], HISTORY_SCHEMA).write.mode(
-            "append"
-        ).parquet(hdir)
+    legacy = (1, "2024-01-01T00:00:00", '["old"]', "legacy query", 10, 3, 0.5,
+              "[]", "[]")
+    spark.createDataFrame([legacy], HISTORY_SCHEMA).write.parquet(hdir)
     h = SearchHistory(spark, hdir)
-    assert h.count() == 2
-    h.log(["new"], "fresh query", 5, 1, 0.25)
-    assert h.count() == 3
-    assert [r["query"] for r in h.recent(10)] == [
-        "fresh query", "legacy query", "legacy query",
-    ]
-    assert [r["id"] for r in h.search("legacy", 10)] == [2, 1]
-    st = h.stats(top_n=5)
-    assert st["total"] == 3
-    assert st["top_queries"][0] == {
-        "query": "legacy query", "count": 2, "avg_elapsed_seconds": 1.0,
-    }
-    assert h.clear() == 3
     assert h.count() == 0
+    h.log(["new"], "fresh query", 5, 1, 0.25)
+    assert [r["query"] for r in h.recent(10)] == ["fresh query"]
+    assert h.search("legacy", 10) == []
+    assert h.stats(top_n=5)["total"] == 1
+    assert h.clear() == 1
     assert not os.path.exists(hdir)
-    h.log(["new"], "after clear", 5, 0, 0.1)
-    assert [r["query"] for r in h.recent()] == ["after clear"]
 
 
 def test_client_block_engine(spark, client):

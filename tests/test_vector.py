@@ -292,9 +292,9 @@ def test_vector_ann_semantic_search(spark, tmp_path):
     ]
     client.update_index("v", spark.createDataFrame(cur, C.CORPUS_SCHEMA))
     ann_meta2 = V._load_ann_meta(idx_dir)
-    assert ann_meta2["base_fingerprint"] == V._vector_base_fingerprint(
-        idx_dir
-    ), "append update must not rewrite the vector base"
+    assert ann_meta2["base_generation"] == V._load_vector_meta(idx_dir)[
+        "base_generation"
+    ], "append update must not rewrite the vector base"
     top = client.search_semantic("v", hot_new, top_k=1)
     assert top[0]["path"] == "rv/keep/b.txt"
     assert top[0]["score"] == pytest.approx(1.0)
@@ -485,7 +485,7 @@ def test_vector_rebuild_clears_segments_and_fingerprint(spark, tmp_path):
         num_buckets=4, build_vector_index=True,
     )
     idx_dir = client._index_dir("rvx")
-    fp0 = V._vector_base_fingerprint(idx_dir)
+    gen0 = V._load_vector_meta(idx_dir)["base_generation"]
 
     # append update: 1 modified + 1 added -> vector segments appear
     r2 = [
@@ -502,7 +502,7 @@ def test_vector_rebuild_clears_segments_and_fingerprint(spark, tmp_path):
     V.build_vector_index(spark, idx_dir)
     assert not os.path.isdir(os.path.join(idx_dir, DS.VECTOR_SEG_DIR))
     assert not os.path.isdir(os.path.join(idx_dir, DS.VECTOR_TS_DIR))
-    assert V._vector_base_fingerprint(idx_dir) != fp0
+    assert V._load_vector_meta(idx_dir)["base_generation"] != gen0
 
     view = V.vector_view(spark, idx_dir)
     dup = (

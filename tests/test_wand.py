@@ -261,9 +261,7 @@ def test_choose_engine_heuristic(tmp_path):
     assert choose_engine(d, df_threshold=10**9) == "join"
     put({"max_df": 50})
     assert choose_engine(d, df_threshold=10) == "blocks"
-    # legacy meta without max_df / corrupt file → safe default
-    put({"n_blocks": 3})
-    assert choose_engine(d) == "join"
+    # corrupt file → safe default
     put("not json")
     assert choose_engine(d) == "join"
 
@@ -335,37 +333,3 @@ def test_blocks_survive_full_delete_and_refill(spark, tmp_path):
     got = client.search("fd", "apple", top_k=5, engine="blocks", use_cache=False)
     exp = client.search("fd", "apple", top_k=5, engine="join", use_cache=False)
     assert [r["path"] for r in got] == [e["path"] for e in exp] and got
-
-
-def test_blocks_memo_needs_a_meta_token(spark, tmp_path):
-    """LoadedIndex.blocks() memoizes under blocks_meta.json's stat.  When
-    the meta cannot be stat'd there is no token, so nothing may be
-    memoized: a memo under None would serve its pinned file listing
-    forever, missing every later change to the store."""
-    import glob
-    import os
-    import shutil
-
-    from bm25_index_tool_spark import build as B
-    from bm25_index_tool_spark import corpus as C
-    from bm25_index_tool_spark.score import LoadedIndex
-
-    idx = str(tmp_path / "idx")
-    B.build_index(
-        spark,
-        spark.createDataFrame(C.generate_rows(40, seed=3), C.CORPUS_SCHEMA),
-        idx,
-        num_buckets=4,
-    )
-    build_blocks(spark, idx, num_shards=2)
-    loaded = LoadedIndex.open(spark, idx)
-    assert loaded.blocks() is loaded.blocks()  # memoized under the token
-
-    os.remove(os.path.join(idx, "blocks_meta.json"))
-    n0 = loaded.blocks().count()
-    # one more part file lands in the store, with no meta write
-    src = sorted(glob.glob(os.path.join(idx, B.BLOCKS_DIR, "*", "*.parquet")))[0]
-    extra = spark.read.parquet(src).count()
-    shutil.copyfile(src, os.path.join(os.path.dirname(src), "part-extra.parquet"))
-    assert extra > 0
-    assert loaded.blocks().count() == n0 + extra

@@ -258,7 +258,8 @@ def main() -> None:
 
     lsm_dir = lsm_client._index_dir("lsm")
     docs_live = DSM.docs_view(
-        spark, lsm_dir, spark.read.parquet(os.path.join(lsm_dir, B.DOCS_DIR))
+        spark, lsm_dir,
+        B.read_table(spark, lsm_dir, B.DOCS_DIR, B.load_manifest(lsm_dir)),
     )
     stored = docs_live.select(
         "full_path", F.col("content_md5").alias("_s"), "doc_id"
@@ -435,9 +436,9 @@ def main() -> None:
 
     wq = wand_search(index, "kubernetes networking", 10)
     _docs_full = index.docs()
-    _w, _jk = with_winner_doc_pt(wq, _docs_full, index.manifest.num_buckets)
+    _w = with_winner_doc_pt(wq, index.manifest.num_buckets)
     wc = F.broadcast(_w).join(
-        _docs_full.select("doc_id", "content", "doc_pt"), _jk
+        _docs_full.select("doc_id", "content", "doc_pt"), ["doc_id", "doc_pt"]
     )
     wc.collect()
     wbuf = io.StringIO()
