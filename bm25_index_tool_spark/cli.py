@@ -204,11 +204,24 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{name}{suffix}")
         return 0
 
+    client = _client(args)
+    try:
+        _dispatch(p, args, client)
+    except ValueError as e:
+        # the client's refusals (an index of another format, a missing
+        # index, a query with no searchable tokens) are messages for the
+        # user, not tracebacks
+        print(f"error: {e}", file=sys.stderr)
+        return 1
+    finally:
+        _stop(client)
+    return 0
+
+
+def _dispatch(p: argparse.ArgumentParser, args, client) -> None:
     import json
 
     from bm25_index_tool_spark import formatters as FMT
-
-    client = _client(args)
 
     if args.cmd == "create":
         from bm25_index_tool_spark.build import BM25Params
@@ -260,16 +273,14 @@ def main(argv: list[str] | None = None) -> int:
                     names[0], query, args.top, engine=args.engine
                 )
             )
-            _stop(client)
-            return 0
+            return
         if args.semantic:
             if len(names) == 1:
                 results = client.search_semantic(names[0], query, args.top)
             else:
                 results = client.search_semantic_multi(names, query, args.top)
             print(FMT.format_semantic(results, query))
-            _stop(client)
-            return 0
+            return
         if args.related_to:
             results = client.search_related(names[0], args.related_to, args.top)
         elif len(names) == 1:
@@ -367,8 +378,6 @@ def main(argv: list[str] | None = None) -> int:
             )
             for r in rows:
                 print(f"{r['timestamp']}  {r['query']!r}  ({r['result_count']} results, {r['elapsed_seconds']:.2f}s)")
-    _stop(client)
-    return 0
 
 
 if __name__ == "__main__":

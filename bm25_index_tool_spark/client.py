@@ -502,9 +502,11 @@ class BM25SparkClient:
                         fetch_winner_docs,
                     )
 
-                    base = fetch_winner_docs(
-                        idx, base, ["content"]
-                    ).orderBy(F.desc("score"), F.asc("doc_id"))
+                    base = (
+                        fetch_winner_docs(idx, base, ["content"])
+                        .orderBy(F.desc("score"), F.asc("doc_id"))
+                        .limit(top_k)
+                    )
                 return base.collect()
             return score_query(
                 idx, query, top_k, include_content=need_content

@@ -21,6 +21,14 @@ with one parameterised ``spark.sql`` statement over the live index frames
       → conjunctive filter  count == |distinct query terms|
       → TakeOrderedAndProject(score DESC, doc_id ASC, limit k)
       → broadcast join of the ≤k winners back to the docs table
+      → TakeOrderedAndProject(score DESC, doc_id ASC, limit k)
+
+The final sort is a top-k too, so sorting the ≤k result rows costs no
+range-partitioning Exchange and no sampling job.  A query with ONE
+distinct term skips the aggregation and its filter: the live postings
+view holds one row per (term, doc_id), so its scores are a projection of
+partial × multiplicity, and the first top-k runs straight over the pruned
+scan with no shuffle at all.
 
 Exact FTS5 ``bm25()`` semantics (verified empirically, SURVEY.md §2.4):
 k1=1.2 b=0.75; idf = ln((N−df+0.5)/(df+0.5)) clamped to 1e-6 when ≤ 0;
@@ -314,8 +322,9 @@ def score_stage_frames(
     """Diagnostic sub-plans of the scorer for stage attribution (bench.py
     query_stage_*; VERDICT r04 #5), cut from the same statement text.
     Each frame re-runs its upstream when actioned, so interpret timings as
-    deltas: ``scored_count`` ≈ postings scan + broadcast join +
-    conjunctive agg over ALL matches; ``topk`` − that ≈ global top-k;
+    deltas: ``scored_count`` ≈ postings scan + broadcast join (+ the
+    conjunctive agg of a multi-term query) over ALL matches; ``topk`` −
+    that ≈ global top-k;
     ``full`` − ``topk`` ≈ the winners/docs fetch."""
     tokens = tokenize_fts5_query(query)
 
@@ -380,17 +389,23 @@ def _score_statement(
     partial = bm25_partial_sql(
         "p.tf", "p.dl", idf_sql("s.df", m.num_docs), k1, b, m.avgdl
     )
+    score = f"({partial}) * (CASE p.term {q_mult} END)"
+    group = ""
+    # one term needs no aggregation only because the live postings view
+    # holds one row per (term, doc_id); the conjunctive count relies on it
+    # too (tests/test_score_plan.py)
+    if len(terms) > 1:
+        score = f"sum({score})"
+        group = f"\n  GROUP BY p.doc_id\n  HAVING count(*) = {len(terms)}"
     text = f"""
 WITH scored AS (
   SELECT /*+ BROADCAST(s) */ p.doc_id,
-         sum(({partial}) * (CASE p.term {q_mult} END)) AS score
+         {score} AS score
   FROM {{post}} p
   JOIN (SELECT term, df FROM {{stats}}
         WHERE bucket IN ({buckets}) AND term IN ({markers})) s
     ON p.term = s.term
-  WHERE p.bucket IN ({buckets}) AND p.term IN ({markers})
-  GROUP BY p.doc_id
-  HAVING count(*) = {len(terms)}
+  WHERE p.bucket IN ({buckets}) AND p.term IN ({markers}){group}
 ),
 topk AS (
   SELECT doc_id, score FROM scored
@@ -410,7 +425,7 @@ topk AS (
        d.filename, d.content_sha256, w.score{content}
 FROM (SELECT doc_id, score, {pt} AS doc_pt FROM topk) w
 JOIN {{docs}} d ON w.doc_id = d.doc_id AND w.doc_pt = d.doc_pt
-ORDER BY w.score DESC, w.doc_id ASC"""
+ORDER BY w.score DESC, w.doc_id ASC LIMIT {int(top_k)}"""
     return index.spark.sql(
         text,
         args=args,

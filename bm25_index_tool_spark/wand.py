@@ -285,5 +285,6 @@ def wand_search(index: LoadedIndex, query: str, top_k: int = 10):
                                         "content_sha256"])
         .withColumnRenamed("full_path", "path")
         .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(top_k)
         .select("doc_id", "path", "filename", "content_sha256", "score")
     )

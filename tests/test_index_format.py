@@ -258,3 +258,21 @@ def test_format_1_index_is_refused(spark, tmp_path):
     client.update_index("a", _frame(spark, _delta_rows()))
     assert client.info("a")["generation"] == 2
     _assert_oracle_identical(client, "a", _delta_rows(), QUERIES)
+
+
+def test_cli_reports_format_1_without_traceback(spark, tmp_path, capsys):
+    """The CLI turns the client's refusal of a format-1 index into one
+    ``error:`` line on stderr and a non-zero exit, not a traceback."""
+    from bm25_index_tool_spark.cli import main
+    from tests.test_delta_store import _mark_format_1
+
+    root = str(tmp_path / "root")
+    client = BM25SparkClient(spark, root)
+    client.create_index("a", _frame(spark, C.generate_rows(10, seed=3)), num_buckets=2)
+    _mark_format_1(client._index_dir("a"))
+    capsys.readouterr()
+    assert main(["--root", root, "query", "a", "apple"]) != 0
+    err = capsys.readouterr().err
+    assert "error: index format 1 is not readable" in err
+    assert "create_index(..., overwrite=True)" in err
+    assert "Traceback" not in err

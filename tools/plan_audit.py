@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -55,6 +56,15 @@ def main() -> None:
         q.explain()  # simple mode: codegen stages appear as *(N) markers
     simple_plan = buf2.getvalue()
 
+    # a one-term query: no aggregation, so no shuffle of any kind (the
+    # broadcasts stay); \bExchange\b skips BroadcastExchange/ReusedExchange
+    oq = score_query(index, "kubernetes", 10, include_content=False)
+    oq.collect()
+    obuf = io.StringIO()
+    with redirect_stdout(obuf):
+        oq.explain("formatted")
+    oplan = obuf.getvalue()
+
     checks = {
         "bucket partition pruning (PartitionFilters with bucket IN ...)": (
             "bucket" in plan and ("PartitionFilters" in plan or "partition" in plan.lower())
@@ -63,6 +73,13 @@ def main() -> None:
         or "PushedFilters: [Is" in plan,
         "broadcast joins (BroadcastHashJoin/BroadcastExchange)": "BroadcastHashJoin" in plan,
         "distributed top-k (TakeOrderedAndProject)": "TakeOrderedAndProject" in plan,
+        "single-query result is a top-k (no range Exchange)": (
+            "rangepartitioning" not in plan.lower()
+        ),
+        "one-term query has no shuffle": (
+            "TakeOrderedAndProject" in oplan
+            and re.search(r"\bExchange\b", oplan) is None
+        ),
         "whole-stage codegen spans (*(N) markers in simple plan)": "*(" in simple_plan,
         "column pruning (postings scan reads only needed cols)": "ReadSchema" in plan,
     }
@@ -600,6 +617,12 @@ def main() -> None:
         "",
         "```",
         plan.strip(),
+        "```",
+        "",
+        "## One-term query `\"kubernetes\"` `explain(\"formatted\")`",
+        "",
+        "```",
+        oplan.strip(),
         "```",
         "",
     ]
