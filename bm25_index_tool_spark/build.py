@@ -207,6 +207,15 @@ def assign_doc_ids(
     num_partitions: int | None = None,
     cleanup: list | None = None,
 ) -> DataFrame:
+    """``corpus`` with its doc_ids; see ``_assign_doc_ids``."""
+    return _assign_doc_ids(corpus, num_partitions, cleanup)[0]
+
+
+def _assign_doc_ids(
+    corpus: DataFrame,
+    num_partitions: int | None = None,
+    cleanup: list | None = None,
+) -> tuple[DataFrame, int]:
     """Deterministic contiguous ``doc_id`` (1-based, FTS5-rowid-like) without
     a driver bottleneck or an extra shuffle:
 
@@ -228,6 +237,8 @@ def assign_doc_ids(
        round-trip and the Python-worker pool spin-up were pure overhead),
     5. hash-join (repo, path, doc_id, derived cols) back to the full corpus
        — a plain JVM shuffle join that scales with cores/executors.
+
+    Returns the joined frame and its row count (the counts job's sum).
     """
     keys, total, persisted = _narrow_ids(
         with_derived_columns(corpus.select("repo", "path")), num_partitions
@@ -243,7 +254,7 @@ def assign_doc_ids(
     # threshold a plain shuffle join takes over — the 10^12-file regime.
     if total <= BROADCAST_IDS_THRESHOLD:
         keys = F.broadcast(keys)
-    return corpus.join(keys, ["repo", "path"])
+    return corpus.join(keys, ["repo", "path"]), total
 
 
 def _narrow_ids(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -299,6 +310,21 @@ def _narrow_ids(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
         acc,
         df,  # the persisted frame, for the caller's deferred unpersist
     )
+
+
+def sized_parallelism(
+    spark, n_rows: int | None, rows_per_task: int = 2048
+) -> int:
+    """THE fan-out rule of the build and the update path (guide §2): one
+    task per ``rows_per_task`` rows, capped at defaultParallelism, so a
+    few hundred docs do not fan out into defaultParallelism near-empty
+    tasks (each pays Python-worker handshake + conf deserialization),
+    while a million-doc corpus or delta still uses the full core count.
+    ``None`` (unknown size) keeps full parallelism."""
+    full = spark.sparkContext.defaultParallelism
+    if n_rows is None:
+        return full
+    return max(1, min(full, n_rows // rows_per_task + 1))
 
 
 # ---------------------------------------------------------------------------
@@ -526,6 +552,13 @@ def _build(
             raise RuntimeError(f"injected failure after stage {stage}")
         return ckpt.read(stage)
 
+    def _tasks(n_docs: int) -> int:
+        """Fan-out of the docs, postings and termstats writes: sized to the
+        corpus (an explicit ``num_partitions`` overrides), and never more
+        tasks than partition dirs — each dir is written by one task, so it
+        holds one file."""
+        return min(num_buckets, num_partitions or sized_parallelism(spark, n_docs))
+
     # -- stage 1: docs table with deterministic doc_id + invariants ---------
     # The docs table is partitioned by doc_pt = pmod(doc_id, num_buckets):
     # incremental updates rewrite only the partitions containing changed
@@ -534,20 +567,23 @@ def _build(
     def _docs() -> dict:
         t_ids0 = time.monotonic()
         _id_cache: list = []
-        ids = assign_doc_ids(corpus, num_partitions, cleanup=_id_cache)
+        ids, n_ids = _assign_doc_ids(corpus, num_partitions, cleanup=_id_cache)
         # sub-timing: assign_doc_ids runs the range-sample + counts jobs
         # eagerly; everything after is the derived-column + write job
         ids_sec = round(time.monotonic() - t_ids0, 4)
-        # defensive: a low-split source (tiny parquet, driver-created DF)
-        # would serialize the hash/write work below into a handful of tasks
-        target_p = num_partitions or spark.sparkContext.defaultParallelism
-        if ids.rdd.getNumPartitions() < target_p:
-            ids = ids.repartition(target_p, "doc_id")
-        # doc_pt as int, the type a partitioned read gives it, so the
-        # declared schema also fits the flat table of an empty corpus
-        out = docs_derived_columns(ids).withColumn(
-            "doc_pt", F.pmod(F.col("doc_id"), F.lit(num_buckets)).cast("int")
+        tasks = _tasks(n_ids)
+        # The content crosses the network once: the doc_pt exchange, sized
+        # to the corpus.  The content-derived columns are computed after it,
+        # so a low-split source (one parquet file, a driver-created frame)
+        # still hashes in `tasks` tasks.  doc_pt as int, the type a
+        # partitioned read gives it, so the declared schema also fits the
+        # flat table of an empty corpus; it stays the last column.
+        out = docs_derived_columns(
+            ids.withColumn(
+                "doc_pt", F.pmod(F.col("doc_id"), F.lit(num_buckets)).cast("int")
+            ).repartition(tasks, "doc_pt")
         )
+        out = out.select(*[c for c in out.columns if c != "doc_pt"], "doc_pt")
         # Observation: row count rides along with the write — no read-back
         # job and no up-front emptiness probe (isEmpty would re-run the id
         # assignment).  A dynamic partitionBy write of an empty relation
@@ -560,12 +596,7 @@ def _build(
         # no sortWithinPartitions here: sorting full content rows costs real
         # CPU+spill and nothing reads docs in doc_id order (lookups prune by
         # doc_pt; top-k joins broadcast)
-        (
-            out.repartition(num_buckets, "doc_pt")
-            .write.mode("overwrite")
-            .partitionBy("doc_pt")
-            .parquet(docs_path)
-        )
+        out.write.mode("overwrite").partitionBy("doc_pt").parquet(docs_path)
         rows = obs.get["rows"]
         for _p in _id_cache:  # docs parquet is written; key cache done
             _p.unpersist()
@@ -576,10 +607,11 @@ def _build(
         schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in out.schema
         )
-        return {"rows": rows, "ids_sec": ids_sec, "schema": schema}
+        return {"rows": rows, "ids_sec": ids_sec, "schema": schema, "tasks": tasks}
 
     m_docs = _stage("docs", _docs)
     num_docs = m_docs["rows"]
+    tasks = _tasks(num_docs)
     docs = spark.read.schema(m_docs["schema"]).parquet(docs_path)
 
     # -- stages 2-3: ONE tokenize pass; termstats derive from the postings
@@ -589,14 +621,10 @@ def _build(
     # (the dominant CPU cost) still runs exactly once over the corpus.
     from bm25_index_tool_spark.arrow_tokenize import doc_term_freqs
 
-    # Explicit repartition before the tokenizer: a small docs table read back
-    # from parquet may coalesce into 1-2 input splits (file packing), which
-    # would serialize the CPU-heavy tokenize stage.  At 100 TB the scan has
-    # ample natural splits and this is a cheap even-out; locally it is the
-    # difference between 1 core and all cores tokenizing.
-    tokenize_parallelism = num_partitions or max(
-        num_buckets, spark.sparkContext.defaultParallelism
-    )
+    # The tokenizer reads the docs base as it lies: each doc is one row, and
+    # the scan's file packing already sizes its splits by bytes (about
+    # defaultParallelism splits for a small base, more for a large one), so
+    # a doc_id shuffle in front of it would only move the content again.
     # Tokenize + per-doc tf entirely in Arrow C++ (arrow_tokenize.py): each
     # doc lives in one row, so (doc_id, term, tf) leaves the map already
     # aggregated — no JVM explode, no 10^2-tokens-per-doc shuffle blow-up.
@@ -606,17 +634,16 @@ def _build(
     # profiles keep the general pandas-UDF fallback.
     from bm25_index_tool_spark.arrow_tokenize import ARROW_PROFILES
 
-    repart = docs.repartition(tokenize_parallelism, "doc_id")
     if tokenizer_profile in ARROW_PROFILES:
         # dl arrives denormalized from the Arrow worker (each doc is one
         # input row → its total token count is complete in-batch): postings
         # need NO doc_id shuffle at all downstream of the tokenizer.
-        tfs = doc_term_freqs(repart, _fts_document(), profile=tokenizer_profile)
+        tfs = doc_term_freqs(docs, _fts_document(), profile=tokenizer_profile)
     else:
         from pyspark.sql.window import Window
 
         tfs = (
-            repart.select("doc_id", F.explode(tok(_fts_document())).alias("term"))
+            docs.select("doc_id", F.explode(tok(_fts_document())).alias("term"))
             .groupBy("doc_id", "term")
             .agg(F.count("*").cast("int").alias("tf"))
             .withColumn(
@@ -638,15 +665,15 @@ def _build(
             # dynamic partitionBy writes no files for an empty relation,
             # leaving an unreadable dir — write a schema'd empty parquet
             post.write.mode("overwrite").parquet(postings_path)
-            return {"rows": 0, "per_bucket_rows": {}}
+            return {"rows": 0, "per_bucket_rows": {}, "tasks": tasks}
         t_w0 = time.monotonic()
         (
             # "bucket" sort prefix: satisfies the dynamic-partition writer's
             # required ordering (partition cols first), so the writer adds
             # NO second sort — one sort pass instead of two over the full
             # postings relation.  Within each bucket= dir the file order is
-            # (term, doc_id), exactly as before.
-            post.repartition(num_buckets, "bucket")
+            # (term, doc_id).
+            post.repartition(tasks, "bucket")
             .sortWithinPartitions("bucket", "term", "doc_id")
             .write.mode("overwrite")
             .partitionBy("bucket")
@@ -666,6 +693,7 @@ def _build(
             "rows": sum(per_bucket.values()),
             "per_bucket_rows": per_bucket,
             "write_sec": write_sec,
+            "tasks": tasks,
         }
 
     _stage("postings", _postings)
@@ -691,10 +719,10 @@ def _build(
             stats.select("term", "df", "bucket").write.mode(
                 "overwrite"
             ).parquet(termstats_path)
-            return {"rows": 0, "total_tokens": 0}
+            return {"rows": 0, "total_tokens": 0, "tasks": tasks}
         obs = Observation("termstats_metrics")
         (
-            stats.repartition(num_buckets, "bucket")
+            stats.repartition(tasks, "bucket")
             .sortWithinPartitions("bucket", "term")
             .observe(
                 obs,
@@ -707,7 +735,11 @@ def _build(
             .parquet(termstats_path)
         )
         got = obs.get
-        return {"rows": got["rows"], "total_tokens": int(got["total_tokens"] or 0)}
+        return {
+            "rows": got["rows"],
+            "total_tokens": int(got["total_tokens"] or 0),
+            "tasks": tasks,
+        }
 
     m_ts = _stage("termstats", _termstats)
     # FTS5 avgdl = total_tokens / nRow over ALL docs — zero-token documents

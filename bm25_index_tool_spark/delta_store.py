@@ -519,21 +519,6 @@ def recover_segments_if_needed(spark: SparkSession, index_dir: str) -> bool:
     return True
 
 
-def _sized_parallelism(
-    spark, n_rows: int | None, rows_per_task: int = 2048
-) -> int:
-    """Scale-adaptive task count for delta-sized jobs (guide §2): a
-    micro-batch of a few hundred docs must not fan out into
-    defaultParallelism near-empty tasks (each task pays Python-worker
-    handshake + conf deserialization), while a million-doc delta still
-    uses the full core count.  ``None`` (unknown size) keeps full
-    parallelism."""
-    full = spark.sparkContext.defaultParallelism
-    if n_rows is None:
-        return full
-    return max(1, min(full, n_rows // rows_per_task + 1))
-
-
 # sort keys of the flat segment files: the bucket/doc_pt prefix keeps each
 # row group's min/max tight, so a query's bucket IN (...) skips the rest
 _POSTINGS_SORT = ("bucket", "term", "doc_id")
@@ -563,7 +548,7 @@ def _tokenize_rows(
     sizes the tokenize fan-out to the delta instead of the cluster."""
     from bm25_index_tool_spark.arrow_tokenize import ARROW_PROFILES
 
-    parallelism = _sized_parallelism(spark, n_rows)
+    parallelism = B.sized_parallelism(spark, n_rows)
     repart = rows.repartition(parallelism, "doc_id")
     if profile in ARROW_PROFILES:
         from bm25_index_tool_spark.arrow_tokenize import doc_term_freqs
@@ -772,7 +757,7 @@ def apply_update_append(
     delta_full = B.with_derived_columns(
         B.assign_doc_ids(
             delta_src,
-            num_partitions=_sized_parallelism(spark, n_delta, 65_536),
+            num_partitions=B.sized_parallelism(spark, n_delta, 65_536),
             cleanup=_id_cache,
         )
         .withColumn("doc_id", F.col("doc_id") + F.lit(max_id))
@@ -851,7 +836,7 @@ def apply_update_append(
     # segment writes are delta-sized: fan out to the delta, not to nb tasks
     # of a few rows each (guide §2/§6 — a micro-batch segment is a handful
     # of sorted files, one per task).  Large deltas still spread.
-    n_stage_tasks = _sized_parallelism(spark, n_delta, 50_000)
+    n_stage_tasks = B.sized_parallelism(spark, n_delta, 50_000)
 
     def _stage(df: DataFrame, table_dir: str, sort_cols: tuple) -> None:
         final = _seg_path(index_dir, table_dir, seg)

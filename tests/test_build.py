@@ -195,3 +195,67 @@ def test_mime_type_column_and_stats(spark, tmp_path):
     assert list(st["by_mime"].values()) == sorted(
         st["by_mime"].values(), reverse=True
     )
+
+
+# A build of the 200-doc one-file corpus below, at num_buckets=8 on
+# local[4], when every stage fanned out to max(num_buckets,
+# defaultParallelism) and the content was shuffled by doc_id before the
+# docs write and again before the tokenizer: 18 Spark jobs, whose stages
+# held 134 tasks.
+FANNED_OUT_JOBS = 18
+FANNED_OUT_TASKS = 134
+DOCS_SCHEMA = (
+    "`repo` string, `path` string, `commit` string, `lang` string, "
+    "`content` string, `full_path` string, `filename` string, "
+    "`doc_id` bigint, `content_sha256` string, `content_md5` string, "
+    "`size` bigint, `mime_type` string, `indexed_at` timestamp, `doc_pt` int"
+)
+
+
+def test_build_fans_out_to_the_data(spark, small_rows, tmp_path):
+    """The build sizes its docs, postings and termstats writes to the
+    corpus with the update path's rule, moves the content through one
+    shuffle, and still writes one sorted file per partition dir."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(small_rows, C.CORPUS_SCHEMA).coalesce(1).write.parquet(src)
+    corpus = spark.read.parquet(src)  # the footer-inference job runs here
+    idx = str(tmp_path / "idx")
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    m = B.build_index(spark, corpus, idx, num_buckets=8)
+    j1 = dag.nextJobId()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    status = sc.statusTracker()
+    stages = {s for j in range(j0, j1) for s in status.getJobInfo(j).stageIds}
+    tasks = sum(status.getStageInfo(s).numTasks for s in stages)
+    assert j1 - j0 <= FANNED_OUT_JOBS - 3
+    assert tasks < FANNED_OUT_TASKS
+
+    ckpt = B.BuildCheckpoints(idx)
+    sized = B.sized_parallelism(spark, len(small_rows))
+    for stage in ("docs", "postings", "termstats"):
+        assert ckpt.read(stage)["tasks"] == sized, stage
+
+    for sub, key in (
+        (B.DOCS_DIR, "doc_pt"),
+        (B.POSTINGS_DIR, "bucket"),
+        (B.TERMSTATS_DIR, "bucket"),
+    ):
+        dirs = glob.glob(os.path.join(idx, sub, f"{key}=*"))
+        assert len(dirs) == 8, sub
+        for d in dirs:
+            files = glob.glob(os.path.join(d, "*.parquet"))
+            assert len(files) == 1, d
+            if sub == B.POSTINGS_DIR:
+                t = pq.read_table(files[0], columns=["term", "doc_id"])
+                keys = list(zip(t["term"].to_pylist(), t["doc_id"].to_pylist()))
+                assert keys == sorted(keys), d
+
+    assert m.docs_schema == DOCS_SCHEMA
+    assert B.read_table(spark, idx, B.DOCS_DIR, m).columns[-1] == "doc_pt"

@@ -6,7 +6,9 @@ at 100 TB (SURVEY.md §4.3):
 * parquet predicate pushdown + column pruning (PushedFilters / ReadSchema),
 * broadcast of the tiny query-terms/stats/top-k sides,
 * distributed top-k via TakeOrderedAndProject,
-* whole-stage codegen coverage.
+* whole-stage codegen coverage,
+* the build's write plans: the content crosses one shuffle, and the
+  tokenizer reads the docs base with no shuffle in front of it.
 
 Writes PLANS.md at the repo root.  Usage: python tools/plan_audit.py
 """
@@ -21,6 +23,76 @@ import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _write_plans(spark) -> dict[str, str]:
+    """Output path → the final formatted physical plan of every file write
+    this session ran, read from the SQL status store (AQE records each
+    execution's final plan there)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = {}
+    for i in range(execs.size()):
+        plan = execs.apply(i).physicalPlanDescription()
+        m = re.search(
+            r"^\(\d+\) Execute InsertIntoHadoopFsRelationCommand\n"
+            r"Input: \[\]\nArguments: file:([^,]+),",
+            plan,
+            re.M,
+        )
+        if m:
+            out[m.group(1)] = plan
+    return out
+
+
+def _final_tree(plan: str) -> list[str]:
+    """The node lines of an adaptive plan's top-level final plan."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    start = next(
+        (i + 1 for i, ln in enumerate(tree) if ln == "+- == Final Plan =="), 0
+    )
+    end = next(
+        (i for i, ln in enumerate(tree) if ln == "+- == Initial Plan =="),
+        len(tree),
+    )
+    return tree[start:end]
+
+
+def _content_exchanges(plan: str) -> int:
+    """Shuffle Exchanges of the final plan whose input carries ``content``."""
+    n = 0
+    for ln in _final_tree(plan):
+        m = re.search(r"\bExchange \((\d+)\)", ln)
+        if m and "BroadcastExchange" not in ln:
+            detail = re.search(
+                rf"^\({m.group(1)}\) Exchange\nInput \[\d+\]: (.*)$",
+                plan,
+                re.M,
+            )
+            n += bool(detail and "content#" in detail.group(1))
+    return n
+
+
+def _depth(node_line: str) -> int:
+    """Column at which a plan-tree line's node name starts."""
+    return len(node_line) - len(node_line.lstrip(" :|+-"))
+
+
+def _tokenizer_reads_scan(plan: str) -> bool:
+    """The MapInArrow subtree of the final plan holds a parquet scan and
+    no Exchange."""
+    tree = _final_tree(plan)
+    for i, ln in enumerate(tree):
+        if "MapInArrow" in ln:
+            sub = []
+            for nxt in tree[i + 1:]:
+                if _depth(nxt) <= _depth(ln):
+                    break
+                sub.append(nxt)
+            return any("Scan parquet" in x for x in sub) and not any(
+                re.search(r"\bExchange\b", x) for x in sub
+            )
+    return False
 
 
 def main() -> None:
@@ -41,9 +113,25 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     idx_dir = tempfile.mkdtemp(prefix="bm25_plan_audit_")
-    df = spark.createDataFrame(C.generate_rows(300, seed=13), C.CORPUS_SCHEMA)
+    # the corpus as one parquet file, the shape of a small ingested table:
+    # a single input split, which the build must not shuffle twice to spread
+    src_dir = tempfile.mkdtemp(prefix="bm25_plan_corpus_")
+    src = os.path.join(src_dir, "corpus.parquet")
+    spark.createDataFrame(
+        C.generate_rows(300, seed=13), C.CORPUS_SCHEMA
+    ).coalesce(1).write.parquet(src)
+    df = spark.read.parquet(src)
     B.build_index(spark, df, idx_dir, num_buckets=8)
     index = LoadedIndex.open(spark, idx_dir)
+    writes = _write_plans(spark)
+    docs_wplan = writes.get(os.path.join(idx_dir, B.DOCS_DIR), "")
+    post_wplan = writes.get(os.path.join(idx_dir, B.POSTINGS_DIR), "")
+    build_checks = {
+        "build moves content through one shuffle (one Exchange carrying "
+        "content in the docs write)": _content_exchanges(docs_wplan) == 1,
+        "tokenizer reads the docs base directly (no Exchange between the "
+        "docs scan and MapInArrow)": _tokenizer_reads_scan(post_wplan),
+    }
 
     q = score_query(index, "kubernetes networking", 10, include_content=False)
     q.collect()  # execute so AQE finalizes the plan (codegen markers appear)
@@ -535,6 +623,7 @@ def main() -> None:
         lines.append(f"| {name} | {'✅' if passed else '❌'} |")
         ok = ok and passed
     for title, cks in (
+        ("Index build (300 docs from one parquet file, num_buckets=8)", build_checks),
         ("ANN probes (materialized SRP + IVF indexes)", ann_checks),
         ("Dedup hot paths (banded MinHash + n-gram Jaccard, sf0.001)", dedup_checks),
         ("LSM live view (post-append-update scorer plan)", lsm_checks),
@@ -549,11 +638,23 @@ def main() -> None:
             lines.append(f"| {name} | {'✅' if passed else '❌'} |")
             ok = ok and passed
     checks = {
-        **checks, **batch_checks, **ann_checks, **dedup_checks,
+        **checks, **batch_checks, **build_checks, **ann_checks, **dedup_checks,
         **lsm_checks, **upsert_checks, **sem_checks, **dpp_checks,
         **wand_content_checks, **hot_checks,
     }
     lines += [
+        "",
+        "## Build: docs write (final plan)",
+        "",
+        "```",
+        docs_wplan.strip(),
+        "```",
+        "",
+        "## Build: postings write, through the tokenizer (final plan)",
+        "",
+        "```",
+        post_wplan.strip(),
+        "```",
         "",
         "## ANN SRP probe `explain(\"formatted\")`",
         "",
@@ -635,6 +736,7 @@ def main() -> None:
     import shutil
 
     shutil.rmtree(idx_dir, ignore_errors=True)
+    shutil.rmtree(src_dir, ignore_errors=True)
     shutil.rmtree(hot_dir, ignore_errors=True)
     spark.stop()
 
