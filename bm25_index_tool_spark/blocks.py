@@ -237,7 +237,6 @@ def build_blocks(
         .partitionBy("shard")
         .parquet(blocks_path)
     )
-    _ensure_readable_blocks(spark, blocks_path)
 
     n_blocks = int(obs.get["n"])
     # longest posting list — the engine auto-selection stat (wand.py
@@ -387,22 +386,12 @@ def update_blocks(
     )
     result = encoded.mapInArrow(_encode_with_shard, SHARDED_BLOCKS_SCHEMA)
     result.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    n_new_changed = (
-        spark.read.schema(SHARDED_BLOCKS_SCHEMA).parquet(tmp).count()
-        if any(d.startswith("shard=") for d in os.listdir(tmp))
-        else 0
-    )
+    n_new_changed = spark.read.schema(SHARDED_BLOCKS_SCHEMA).parquet(tmp).count()
     # swap changed shard dirs — every shard in tmp is in `changed` by
     # construction (tmp holds old_changed minus removed, plus delta, and
-    # `changed` was derived from the same doc_id→shard expression)
-    if n_new_changed:
-        # a previously-emptied store is a flat schema'd-empty parquet
-        # table; placing shard dirs next to those flat files would make a
-        # mixed layout spark can't read — clear the (empty) flat files
-        for n in os.listdir(blocks_path):
-            fp = os.path.join(blocks_path, n)
-            if os.path.isfile(fp):
-                os.remove(fp)
+    # `changed` was derived from the same doc_id→shard expression).  An
+    # emptied store keeps no shard dir; read with its declared schema it is
+    # an empty table.
     for v in sorted(set(changed)):
         live = os.path.join(blocks_path, f"shard={v}")
         fresh = os.path.join(tmp, f"shard={v}")
@@ -411,8 +400,6 @@ def update_blocks(
         if os.path.exists(fresh):
             os.replace(fresh, live)
     shutil.rmtree(tmp, ignore_errors=True)
-    # an update that emptied every shard must leave a READABLE store
-    _ensure_readable_blocks(spark, blocks_path)
 
     meta["n_blocks"] = meta["n_blocks"] - n_old_changed + n_new_changed
     # refresh max_df (the choose_engine auto-selection stat) from the
@@ -424,22 +411,6 @@ def update_blocks(
     with open(meta_path, "w") as f:
         _json.dump(meta, f)
     return meta
-
-
-def _ensure_readable_blocks(spark, blocks_path: str) -> None:
-    """A partitioned write of an EMPTY relation leaves only _SUCCESS —
-    unreadable by spark.read.parquet.  An index
-    emptied by a full delete, or built over zero postings, must still
-    have a readable block store: replace the bare dir with a schema'd
-    empty plain-parquet table."""
-    import os
-
-    if any(n.startswith("shard=") for n in os.listdir(blocks_path)):
-        return
-    if any(n.endswith(".parquet") for n in os.listdir(blocks_path)):
-        return  # already a plain (possibly empty) parquet table
-    empty = spark.createDataFrame([], SHARDED_BLOCKS_SCHEMA)
-    empty.write.mode("overwrite").parquet(blocks_path)
 
 
 def _encode_with_shard(batches):

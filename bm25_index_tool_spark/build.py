@@ -17,11 +17,11 @@ idiomatic Spark dataflow:
       → per-stage checkpoints with per-bucket lineage/metrics (resumable)
 
 Skew note: the postings aggregation keys on (term, doc_id) — cardinality is
-per-(term,doc) so hot terms do NOT skew the agg.  The bucketed write uses
-``repartition(bucket, term)`` + ``sortWithinPartitions``; hot buckets are
-bounded by num_buckets choice, and AQE handles residual imbalance.  For the
-block-format path, postings of terms with df > salt_threshold are split
-into doc_id-sharded salted runs (blocks.py).
+per-(term,doc) so hot terms do NOT skew the agg.  The bucketed write
+(``write_table``) uses ``repartition(bucket)`` + ``sortWithinPartitions``;
+hot buckets are bounded by num_buckets choice, and AQE handles residual
+imbalance.  For the block-format path, postings of terms with df >
+salt_threshold are split into doc_id-sharded salted runs (blocks.py).
 """
 
 from __future__ import annotations
@@ -36,13 +36,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from bm25_index_tool_spark.tokenize import token_count_unicode61, tokenizer_for
+from bm25_index_tool_spark.tokenize import tokenizer_for
 
 INDEX_FORMAT_VERSION = 2
 DEFAULT_NUM_BUCKETS = 32
-BROADCAST_IDS_THRESHOLD = int(
-    os.environ.get("BM25_BROADCAST_IDS_THRESHOLD", "5000000")
-)
+BROADCAST_IDS_THRESHOLD = 5_000_000
 
 DOCS_DIR = "docs"
 POSTINGS_DIR = "postings"
@@ -57,6 +55,18 @@ MANIFEST = "manifest.json"
 # (IndexManifest.docs_schema).
 POSTINGS_SCHEMA = "doc_id BIGINT, term STRING, tf INT, dl INT, bucket INT"
 TERMSTATS_SCHEMA = "term STRING, df BIGINT, bucket INT"
+
+# THE layout of each table, base and segment alike: its partition column
+# and its sort keys, which lead with that column.  A partitioned base write
+# then inserts no second sort, and a flat segment file keeps tight row-group
+# min/max on it, so a query's bucket IN (...) prunes either form.  Docs are
+# not sorted by doc_id: lookups prune by doc_pt, and the content sort read
+# slower in the build.
+LAYOUTS = {
+    POSTINGS_DIR: ("bucket", ("bucket", "term", "doc_id")),
+    TERMSTATS_DIR: ("bucket", ("bucket", "term")),
+    DOCS_DIR: ("doc_pt", ("doc_pt",)),
+}
 
 
 @dataclass
@@ -146,6 +156,22 @@ def save_manifest(index_dir: str, manifest: IndexManifest) -> IndexManifest:
             os.fsync(f.fileno())
         os.replace(tmp, path)
     return manifest
+
+
+def write_table(
+    df: DataFrame, path: str, table: str, tasks: int, *, partitioned: bool = True
+) -> None:
+    """THE writer of the postings, termstats and docs tables (``table`` is
+    one of ``LAYOUTS``): ``tasks`` hash partitions on the partition column,
+    each sorted by the layout keys.  A base table is directory-partitioned;
+    with ``tasks`` ≤ the number of partition values each dir is written by
+    one task and holds one file.  A segment (``partitioned=False``) is flat:
+    one sorted file per task, the partition column a data column.  An empty
+    relation leaves a dir with only ``_SUCCESS``, which every reader, as it
+    declares its schema, reads as an empty table."""
+    part, keys = LAYOUTS[table]
+    w = df.repartition(tasks, part).sortWithinPartitions(*keys).write
+    (w.partitionBy(part) if partitioned else w).mode("overwrite").parquet(path)
 
 
 def read_table(
@@ -535,7 +561,7 @@ def _build(
         load_manifest(index_dir)  # a resume refuses another format up front
     os.makedirs(index_dir, exist_ok=True)
     ckpt = BuildCheckpoints(index_dir)
-    tok = tokenizer_for(tokenizer_profile)
+    tokenizer_for(tokenizer_profile)  # refuses an unknown profile, pre-write
 
     docs_path = os.path.join(index_dir, DOCS_DIR)
     postings_path = os.path.join(index_dir, POSTINGS_DIR)
@@ -572,38 +598,28 @@ def _build(
         # eagerly; everything after is the derived-column + write job
         ids_sec = round(time.monotonic() - t_ids0, 4)
         tasks = _tasks(n_ids)
-        # The content crosses the network once: the doc_pt exchange, sized
-        # to the corpus.  The content-derived columns are computed after it,
-        # so a low-split source (one parquet file, a driver-created frame)
-        # still hashes in `tasks` tasks.  doc_pt as int, the type a
-        # partitioned read gives it, so the declared schema also fits the
-        # flat table of an empty corpus; it stays the last column.
+        # The content crosses the network once: the writer's doc_pt
+        # exchange, sized to the corpus.  doc_pt as int, the type a
+        # partitioned read gives it; it stays the last column.
         out = docs_derived_columns(
             ids.withColumn(
                 "doc_pt", F.pmod(F.col("doc_id"), F.lit(num_buckets)).cast("int")
-            ).repartition(tasks, "doc_pt")
+            )
         )
         out = out.select(*[c for c in out.columns if c != "doc_pt"], "doc_pt")
         # Observation: row count rides along with the write — no read-back
         # job and no up-front emptiness probe (isEmpty would re-run the id
-        # assignment).  A dynamic partitionBy write of an empty relation
-        # leaves an unreadable dir; detect that from the observed count
-        # afterwards and replace with a schema'd empty plain parquet.
+        # assignment).
         from pyspark.sql import Observation
 
         obs = Observation("docs_metrics")
-        out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # no sortWithinPartitions here: sorting full content rows costs real
-        # CPU+spill and nothing reads docs in doc_id order (lookups prune by
-        # doc_pt; top-k joins broadcast)
-        out.write.mode("overwrite").partitionBy("doc_pt").parquet(docs_path)
+        write_table(
+            out.observe(obs, F.count(F.lit(1)).alias("rows")),
+            docs_path, DOCS_DIR, tasks,
+        )
         rows = obs.get["rows"]
         for _p in _id_cache:  # docs parquet is written; key cache done
             _p.unpersist()
-        if rows == 0:
-            spark.createDataFrame([], out.schema).write.mode(
-                "overwrite"
-            ).parquet(docs_path)
         schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in out.schema
         )
@@ -629,28 +645,11 @@ def _build(
     # doc lives in one row, so (doc_id, term, tf) leaves the map already
     # aggregated — no JVM explode, no 10^2-tokens-per-doc shuffle blow-up.
     # (The pandas-UDF tokenizer remains the semantic reference; differential
-    # equality is asserted in tests/test_arrow_tokenize.py.)  Both built-in
-    # profiles (unicode61, code) take the Arrow path; unknown future
-    # profiles keep the general pandas-UDF fallback.
-    from bm25_index_tool_spark.arrow_tokenize import ARROW_PROFILES
-
-    if tokenizer_profile in ARROW_PROFILES:
-        # dl arrives denormalized from the Arrow worker (each doc is one
-        # input row → its total token count is complete in-batch): postings
-        # need NO doc_id shuffle at all downstream of the tokenizer.
-        tfs = doc_term_freqs(docs, _fts_document(), profile=tokenizer_profile)
-    else:
-        from pyspark.sql.window import Window
-
-        tfs = (
-            docs.select("doc_id", F.explode(tok(_fts_document())).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").cast("int").alias("tf"))
-            .withColumn(
-                "dl",
-                F.sum("tf").over(Window.partitionBy("doc_id")).cast("int"),
-            )
-        )
+    # equality is asserted in tests/test_arrow_tokenize.py.)  Every profile
+    # tokenizer_for accepts has an Arrow path.  dl arrives denormalized from
+    # the Arrow worker (each doc is one input row → its total token count is
+    # complete in-batch): postings need NO doc_id shuffle downstream of it.
+    tfs = doc_term_freqs(docs, _fts_document(), profile=tokenizer_profile)
 
     def _postings() -> dict:
         # dl is already denormalized in tfs (computed inside the tokenize
@@ -661,24 +660,8 @@ def _build(
         post = tfs.withColumn(
             "bucket", F.pmod(F.hash("term"), F.lit(num_buckets))
         )
-        if num_docs == 0:
-            # dynamic partitionBy writes no files for an empty relation,
-            # leaving an unreadable dir — write a schema'd empty parquet
-            post.write.mode("overwrite").parquet(postings_path)
-            return {"rows": 0, "per_bucket_rows": {}, "tasks": tasks}
         t_w0 = time.monotonic()
-        (
-            # "bucket" sort prefix: satisfies the dynamic-partition writer's
-            # required ordering (partition cols first), so the writer adds
-            # NO second sort — one sort pass instead of two over the full
-            # postings relation.  Within each bucket= dir the file order is
-            # (term, doc_id).
-            post.repartition(tasks, "bucket")
-            .sortWithinPartitions("bucket", "term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(postings_path)
-        )
+        write_table(post, postings_path, POSTINGS_DIR, tasks)
         write_sec = round(time.monotonic() - t_w0, 4)
         # partition-column-only scan: row counts come from parquet metadata
         per_bucket = {
@@ -715,24 +698,14 @@ def _build(
             )
             .withColumn("bucket", F.pmod(F.hash("term"), F.lit(num_buckets)))
         )
-        if num_docs == 0:
-            stats.select("term", "df", "bucket").write.mode(
-                "overwrite"
-            ).parquet(termstats_path)
-            return {"rows": 0, "total_tokens": 0, "tasks": tasks}
         obs = Observation("termstats_metrics")
-        (
-            stats.repartition(tasks, "bucket")
-            .sortWithinPartitions("bucket", "term")
-            .observe(
+        write_table(
+            stats.observe(
                 obs,
                 F.count(F.lit(1)).alias("rows"),
                 F.sum("_ttf").alias("total_tokens"),
-            )
-            .select("term", "df", "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(termstats_path)
+            ).select("term", "df", "bucket"),
+            termstats_path, TERMSTATS_DIR, tasks,
         )
         got = obs.get
         return {

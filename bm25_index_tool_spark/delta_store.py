@@ -19,24 +19,28 @@ deletes; Delta/Iceberg/Hudi MOR):
     termstats = Σ df over (base ∪ df-adjustment segments), df > 0
   The query's bucket IN (...) predicate pushes through the union and the
   broadcast anti-join, so query plans keep their shape;
-* **segment layout**: the base tables stay directory-partitioned
+* **one layout, one writer**: every postings, termstats and docs write —
+  build, append, tiered merge, compaction — goes through
+  ``build.write_table`` with the table's one layout (``build.LAYOUTS``):
+  postings sorted by (bucket, term, doc_id), termstats by (bucket, term),
+  docs by doc_pt.  The base tables are directory-partitioned
   (``bucket=``/``doc_pt=``, pruned by PartitionFilters and, on docs, by
   dynamic partition pruning).  A segment table is flat: one sorted parquet
   file per write task, with ``bucket``/``doc_pt`` as ordinary data columns
-  sorted first — postings by (bucket, term, doc_id), termstats by
-  (bucket, term), docs by (doc_pt, doc_id) — so the same predicate prunes
-  segment row groups by their min/max statistics (PushedFilters).  Per-file
-  writer cost, not data volume, dominates a small update: partitioned, a
-  300-doc segment was 96 files in 32 dirs per table, and every tiered
-  merge rewrote all of them.  Segments, like the base tables, are read
-  with declared schemas (no footer-inference job);
+  sorted first, so the same predicate prunes segment row groups by their
+  min/max statistics (PushedFilters).  Per-file writer cost, not data
+  volume, dominates a small update: partitioned, a 300-doc segment was 96
+  files in 32 dirs per table, and every tiered merge rewrote all of them.
+  Every table is read with its declared schema (no footer-inference job),
+  so an empty table is a dir with no data file — no writer writes an
+  empty-table stand-in;
 * write IO is ∝ delta: tokenize added∪modified, RE-tokenize the removed
   docs' old content (delta-sized) to derive the negative df adjustments
   and removed token counts — never a postings-table scan;
 * read amplification is bounded by **compaction** (`compact_index`): fold
   segments + tombstones back into fresh base tables (a partitioned write
-  of the live view — the same job shape as a build's write stages, minus
-  tokenization).  `incremental.apply_update` auto-compacts past
+  of the live view — the build's write stages with the build's fan-out,
+  minus tokenization).  `incremental.apply_update` auto-compacts past
   ``auto_compact_segments`` outstanding segments.
 
 Crash safety: a segment becomes visible via a SINGLE ``os.replace`` of its
@@ -519,26 +523,6 @@ def recover_segments_if_needed(spark: SparkSession, index_dir: str) -> bool:
     return True
 
 
-# sort keys of the flat segment files: the bucket/doc_pt prefix keeps each
-# row group's min/max tight, so a query's bucket IN (...) skips the rest
-_POSTINGS_SORT = ("bucket", "term", "doc_id")
-_TERMSTATS_SORT = ("bucket", "term")
-_DOCS_SORT = ("doc_pt", "doc_id")
-
-
-def _write_flat(df: DataFrame, path: str, n_tasks: int, sort_cols) -> None:
-    """THE segment writer: one sorted part file per task and no partition
-    subdirs (see the module docstring's segment layout).  Without sort
-    keys (tombstones, vector tables): a few unsorted files."""
-    if sort_cols:
-        df = df.repartition(n_tasks, sort_cols[0]).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        df = df.coalesce(4)
-    df.write.mode("overwrite").parquet(path)
-
-
 def _tokenize_rows(
     spark, rows: DataFrame, profile: str, n_rows: int | None = None
 ) -> DataFrame:
@@ -546,27 +530,13 @@ def _tokenize_rows(
     the index's tokenizer profile — identical pipeline to the build.
     ``n_rows``, when the caller already knows the delta size (diff counts),
     sizes the tokenize fan-out to the delta instead of the cluster."""
-    from bm25_index_tool_spark.arrow_tokenize import ARROW_PROFILES
+    from bm25_index_tool_spark.arrow_tokenize import doc_term_freqs
 
-    parallelism = B.sized_parallelism(spark, n_rows)
-    repart = rows.repartition(parallelism, "doc_id")
-    if profile in ARROW_PROFILES:
-        from bm25_index_tool_spark.arrow_tokenize import doc_term_freqs
-
-        return doc_term_freqs(repart, B._fts_document(), profile=profile)
-    from pyspark.sql.window import Window
-
-    from bm25_index_tool_spark.tokenize import tokenizer_for
-
-    tok = tokenizer_for(profile)
-    return (
-        repart.select("doc_id", F.explode(tok(B._fts_document())).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("int").alias("tf"))
-        .withColumn(
-            "dl", F.sum("tf").over(Window.partitionBy("doc_id")).cast("int")
-        )
-    )
+    # unlike the build's docs base, the inputs here are filtered wide scans:
+    # this shuffle sizes them before the Python workers run (without it a
+    # 40-doc update ran 2 more jobs and took ~1 s longer)
+    repart = rows.repartition(B.sized_parallelism(spark, n_rows), "doc_id")
+    return doc_term_freqs(repart, B._fts_document(), profile=profile)
 
 
 def full_diff_frame(cur: DataFrame, stored: DataFrame) -> DataFrame:
@@ -838,11 +808,14 @@ def apply_update_append(
     # of sorted files, one per task).  Large deltas still spread.
     n_stage_tasks = B.sized_parallelism(spark, n_delta, 50_000)
 
-    def _stage(df: DataFrame, table_dir: str, sort_cols: tuple) -> None:
+    def _stage(df: DataFrame, table_dir: str, table: str | None) -> None:
         final = _seg_path(index_dir, table_dir, seg)
         staged = final + ".staging"
         os.makedirs(os.path.join(index_dir, table_dir), exist_ok=True)
-        _write_flat(df, staged, n_stage_tasks, sort_cols)
+        if table:
+            B.write_table(df, staged, table, n_stage_tasks, partitioned=False)
+        else:  # tombstones: a few unsorted files
+            df.coalesce(4).write.mode("overwrite").parquet(staged)
         moves.append((staged, final))
 
     # doc_pt in the base's partition type (int): a bigint here would widen
@@ -857,13 +830,13 @@ def apply_update_append(
     # r03 #2); a delete-free batch skips the tombstone write entirely
     stage_jobs = [
         (delta_post.select("term", "doc_id", "tf", "dl", "bucket"),
-         POSTINGS_SEG_DIR, _POSTINGS_SORT),
+         POSTINGS_SEG_DIR, B.POSTINGS_DIR),
         (df_adjust.select("term", "df_delta", "bucket"),
-         TERMSTATS_SEG_DIR, _TERMSTATS_SORT),
-        (delta_docs.select(*docs.columns), DOCS_SEG_DIR, _DOCS_SORT),
+         TERMSTATS_SEG_DIR, B.TERMSTATS_DIR),
+        (delta_docs.select(*docs.columns), DOCS_SEG_DIR, B.DOCS_DIR),
     ]
     if counts["modified"] + counts["deleted"] > 0:
-        stage_jobs.append((removed_ids, TOMBSTONES_DIR, ()))
+        stage_jobs.append((removed_ids, TOMBSTONES_DIR, None))
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(stage_jobs)) as pool:
@@ -1020,10 +993,13 @@ def merge_segments(
                             pass
     n_merge_tasks = max(1, min(nb, folded_bytes // (128 << 20) + 1))
 
-    def _stage(df, table_dir: str, sort_cols=()):
+    def _stage(df, table_dir: str, table: str | None = None):
         final = _seg_path(index_dir, table_dir, upto)
         tmp = final + ".staging"
-        _write_flat(df, tmp, n_merge_tasks, sort_cols)
+        if table:
+            B.write_table(df, tmp, table, n_merge_tasks, partitioned=False)
+        else:  # tombstones, vector tables: a few unsorted files
+            df.coalesce(4).write.mode("overwrite").parquet(tmp)
         moves.append((tmp, final))
 
     stage_jobs: list[tuple] = []
@@ -1033,7 +1009,7 @@ def merge_segments(
     )
     if post is not None:
         stage_jobs.append((
-            _anti_tombstones(post, ts), POSTINGS_SEG_DIR, _POSTINGS_SORT,
+            _anti_tombstones(post, ts), POSTINGS_SEG_DIR, B.POSTINGS_DIR,
         ))
     tseg = _read_all_segments(
         spark, index_dir, TERMSTATS_SEG_DIR, upto=upto,
@@ -1045,14 +1021,14 @@ def merge_segments(
             .agg(F.sum("df_delta").alias("df_delta"))
             .where(F.col("df_delta") != 0)
             .select("term", "df_delta", "bucket"),
-            TERMSTATS_SEG_DIR, _TERMSTATS_SORT,
+            TERMSTATS_SEG_DIR, B.TERMSTATS_DIR,
         ))
     dseg = _read_all_segments(
         spark, index_dir, DOCS_SEG_DIR, upto=upto,
         schema=manifest.docs_schema,
     )
     if dseg is not None:
-        stage_jobs.append((_anti_tombstones(dseg, ts), DOCS_SEG_DIR, _DOCS_SORT))
+        stage_jobs.append((_anti_tombstones(dseg, ts), DOCS_SEG_DIR, B.DOCS_DIR))
     if ts is not None:
         keep_ts = ts.select("doc_id")
         if dseg is not None:
@@ -1147,91 +1123,46 @@ def merge_segments(
 @_locked_writer
 def compact_index(spark: SparkSession, index_dir: str) -> None:
     """Materialize the live views as new base tables and drop the segment
-    dirs — the same partitioned-write job shapes as the full build's write
-    stages, minus tokenization.  Bounded-frequency background work that
-    restores zero read amplification; crash-safe via the segment journal
-    (whole-directory staging + replace)."""
+    dirs — the full build's write stages, sized by the build's fan-out
+    rule to the live doc count, minus tokenization.  Bounded-frequency
+    background work that restores zero read amplification; crash-safe via
+    the segment journal (whole-directory staging + replace)."""
     index_dir = os.path.abspath(index_dir)  # journaled paths must resolve
     recover_segments_if_needed(spark, index_dir)
     if not has_segments(index_dir):
         return
     manifest = B.load_manifest(index_dir)
-    nb = manifest.num_buckets
-    postings_path = os.path.join(index_dir, B.POSTINGS_DIR)
-    termstats_path = os.path.join(index_dir, B.TERMSTATS_DIR)
-    docs_path = os.path.join(index_dir, B.DOCS_DIR)
-
-    def _live(sub, view):
-        return view(spark, index_dir, B.read_table(spark, index_dir, sub, manifest))
-
-    post = _live(B.POSTINGS_DIR, postings_view)
-    ts = _live(B.TERMSTATS_DIR, termstats_view)
-    docs = _live(B.DOCS_DIR, docs_view)
-
-    tmp_post = postings_path + ".compact-tmp"
-    tmp_ts = termstats_path + ".compact-tmp"
-    tmp_docs = docs_path + ".compact-tmp"
+    # the build's fan-out rule: sized to the live corpus, one task per dir
+    # at most
+    tasks = min(
+        manifest.num_buckets, B.sized_parallelism(spark, manifest.num_docs)
+    )
+    frames = {
+        sub: view(spark, index_dir, B.read_table(spark, index_dir, sub, manifest))
+        for sub, view in (
+            (B.POSTINGS_DIR, postings_view),
+            (B.TERMSTATS_DIR, termstats_view),
+            (B.DOCS_DIR, docs_view),
+        )
+    }
+    moves = [
+        (os.path.join(index_dir, sub) + ".compact-tmp",
+         os.path.join(index_dir, sub))
+        for sub in frames
+    ]
 
     # the three base rewrites read disjoint inputs (live views over
     # committed files) — run them as concurrent Spark jobs (guide §2.6:
     # later jobs back-fill executors freed by the earlier ones' tails)
-    def _w_post():
-        (
-            # part-col sort prefix: no writer-inserted second sort
-            post.repartition(nb, "bucket")
-            .sortWithinPartitions("bucket", "term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp_post)
-        )
-
-    def _w_ts():
-        (
-            ts.repartition(nb, "bucket")
-            .sortWithinPartitions("bucket", "term")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp_ts)
-        )
-
-    def _w_docs():
-        (
-            docs.repartition(nb, "doc_pt")
-            .sortWithinPartitions("doc_pt", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("doc_pt")
-            .parquet(tmp_docs)
-        )
-
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(w) for w in (_w_post, _w_ts, _w_docs)]
+        futs = [
+            pool.submit(B.write_table, df, tmp, sub, tasks)
+            for (sub, df), (tmp, _) in zip(frames.items(), moves)
+        ]
         for f in futs:
             f.result()
-    # a fully-emptied table writes zero partition dirs → unreadable; leave
-    # a schema'd empty plain parquet instead (same convention as the build)
-    for tmp, df, part_col in (
-        (tmp_post, post, "bucket"),
-        (tmp_ts, ts, "bucket"),
-        (tmp_docs, docs, "doc_pt"),
-    ):
-        if not any(n.startswith(f"{part_col}=") for n in os.listdir(tmp)):
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-    # JOURNAL then commit: every tmp dir is complete before the journal
-    # exists, so recovery can always roll FORWARD (replace any table whose
-    # tmp still exists, then drop all segment dirs).  Without the journal a
-    # crash between replaces would leave a compacted base unioned with its
-    # own segments — duplicate rows — which is why the segment dirs are
-    # only removed once every base is swapped.
-    moves = [
-        (tmp_post, postings_path),
-        (tmp_ts, termstats_path),
-        (tmp_docs, docs_path),
-    ]
-
     # vector store: fold refresh segments + path tombstones the same way
     vec_path = os.path.join(index_dir, "vector")
     if os.path.isdir(vec_path) and (
@@ -1247,6 +1178,12 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
             tmp_vec, V._load_vector_meta(index_dir), manifest.generation
         )
         moves.append((tmp_vec, vec_path))
+    # JOURNAL then commit: every tmp dir is complete before the journal
+    # exists, so recovery can always roll FORWARD (replace any table whose
+    # tmp still exists, then drop all segment dirs).  Without the journal a
+    # crash between replaces would leave a compacted base unioned with its
+    # own segments — duplicate rows — which is why the segment dirs are
+    # only removed once every base is swapped.
     jpath = os.path.join(index_dir, SEG_JOURNAL)
     with open(jpath + ".tmp", "w") as f:
         json.dump({"kind": "compact", "moves": moves}, f)

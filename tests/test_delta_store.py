@@ -25,6 +25,7 @@ from bm25_index_tool_spark import corpus as C
 from bm25_index_tool_spark import delta_store as DS
 from bm25_index_tool_spark.client import BM25SparkClient
 from tests.oracle import FTS5Oracle
+from tests.test_edge_cases import flat_stand_ins
 
 N0 = 50
 
@@ -214,14 +215,14 @@ def _crash_at_publish(monkeypatch, skip: int, table: str = ""):
 def _crash_after_staged_docs_write(monkeypatch):
     """The docs segment write completes, then raises — before the journal
     exists, with staged dirs left on disk."""
-    real_write = DS._write_flat
+    real_write = B.write_table
 
-    def boom(df, path, n_tasks, sort_cols):
-        real_write(df, path, n_tasks, sort_cols)
+    def boom(df, path, table, tasks, **kw):
+        real_write(df, path, table, tasks, **kw)
         if f"{os.sep}{DS.DOCS_SEG_DIR}{os.sep}" in path:
             raise _Boom("injected crash after a staged write")
 
-    monkeypatch.setattr(DS, "_write_flat", boom)
+    monkeypatch.setattr(B, "write_table", boom)
 
 
 def _crash_in_update_blocks(monkeypatch):
@@ -642,7 +643,7 @@ def test_append_full_delete_empties_index(spark, tmp_path):
     client = BM25SparkClient(spark, str(tmp_path / "root"))
     client.create_index(
         "a", spark.createDataFrame(_base_rows()[:12], C.CORPUS_SCHEMA),
-        num_buckets=4,
+        num_buckets=4, build_block_engine=True,
     )
     empty = spark.createDataFrame([], C.CORPUS_SCHEMA)
     m = client.update_index("a", empty)
@@ -653,7 +654,12 @@ def test_append_full_delete_empties_index(spark, tmp_path):
     assert idx.termstats().count() == 0
     assert client.search("a", "apple", top_k=5, use_cache=False) == []
     client.compact_index("a")
-    assert client._require("a").postings().count() == 0
+    assert flat_stand_ins(client._index_dir("a")) == []
+    idx = client._require("a")
+    assert idx.postings().count() == 0
+    assert idx.docs().count() == 0
+    assert idx.termstats().count() == 0
+    assert client.search("a", "apple", engine="blocks", use_cache=False) == []
 
 
 def _waves(rows, n):
@@ -1297,3 +1303,79 @@ def test_segments_are_flat_sorted_files_pruned_by_pushed_filters(
         assert "In(bucket" in pushed or "EqualTo(bucket" in pushed, b
     for b in base_scans:
         assert "bucket" in _plan_line(b, "PartitionFilters"), b
+
+
+
+def _write_stage_tasks(spark, paths) -> dict[str, int]:
+    """Output path → task count of the write stage, for each of ``paths``
+    this session wrote: the result stage of the last job of its SQL
+    execution (AQE runs each shuffle's map side as a job of its own)."""
+    import re
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    status = sc.statusTracker()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = {}
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        m = re.search(
+            r"InsertIntoHadoopFsRelationCommand\nInput: \[\]\n"
+            r"Arguments: file:([^,]+),",
+            ex.physicalPlanDescription(),
+        )
+        if m and m.group(1) in paths:
+            jobs = ex.jobs().keySet().mkString(",").split(",")
+            stage = max(status.getJobInfo(max(map(int, jobs))).stageIds)
+            out[m.group(1)] = status.getStageInfo(stage).numTasks
+    return out
+
+
+def test_compaction_fans_out_to_the_data(spark, tmp_path):
+    """A full compaction sizes its postings, termstats and docs writes by
+    the build's rule, min(num_buckets, sized_parallelism(num_docs)), not to
+    num_buckets, and still writes one sorted file per partition dir."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    client = BM25SparkClient(spark, str(tmp_path / "root"))
+    rows = C.generate_rows(300, seed=71)
+    client.create_index(
+        "c", spark.createDataFrame(rows, C.CORPUS_SCHEMA), num_buckets=32
+    )
+    idx_dir = client._index_dir("c")
+    cur = rows
+    for k in (1, 2):
+        cur = [
+            (r[0], r[1], r[2], r[3], r[4] + f" fanmark{k}") if i % 25 == k else r
+            for i, r in enumerate(cur)
+        ]
+        client.update_index("c", spark.createDataFrame(cur, C.CORPUS_SCHEMA))
+    assert client.compact_index("c") == 2
+
+    tmps = [
+        os.path.join(idx_dir, sub) + ".compact-tmp"
+        for sub in (B.POSTINGS_DIR, B.TERMSTATS_DIR, B.DOCS_DIR)
+    ]
+    sized = B.sized_parallelism(spark, 300)
+    assert sized < 32
+    assert _write_stage_tasks(spark, tmps) == {p: sized for p in tmps}
+
+    for sub, key in (
+        (B.DOCS_DIR, "doc_pt"),
+        (B.POSTINGS_DIR, "bucket"),
+        (B.TERMSTATS_DIR, "bucket"),
+    ):
+        dirs = glob.glob(os.path.join(idx_dir, sub, f"{key}=*"))
+        assert len(dirs) == 32, sub
+        for d in dirs:
+            files = glob.glob(os.path.join(d, "*.parquet"))
+            assert len(files) == 1, d
+            if sub == B.POSTINGS_DIR:
+                t = pq.read_table(files[0], columns=["term", "doc_id"])
+                keys = list(zip(t["term"].to_pylist(), t["doc_id"].to_pylist()))
+                assert keys == sorted(keys), d
+    _assert_oracle_identical(
+        client, "c", cur, QUERIES + ["fanmark1", "fanmark2 data"]
+    )

@@ -8,7 +8,8 @@ at 100 TB (SURVEY.md §4.3):
 * distributed top-k via TakeOrderedAndProject,
 * whole-stage codegen coverage,
 * the build's write plans: the content crosses one shuffle, and the
-  tokenizer reads the docs base with no shuffle in front of it.
+  tokenizer reads the docs base with no shuffle in front of it,
+* compaction's write plans: the build's layout and fan-out.
 
 Writes PLANS.md at the repo root.  Usage: python tools/plan_audit.py
 """
@@ -93,6 +94,35 @@ def _tokenizer_reads_scan(plan: str) -> bool:
                 re.search(r"\bExchange\b", x) for x in sub
             )
     return False
+
+
+def _layout_write(plan: str, part: str, keys, k: int) -> bool:
+    """The final write plan repartitions by ``part`` into ``k`` partitions
+    (Spark plans one as SinglePartition) and holds one Sort, on the layout
+    ``keys``: the partitioned writer inserted no second Sort."""
+    tree = _final_tree(plan)
+
+    def args(pattern: str) -> list[str]:
+        ids = [m.group(1) for ln in tree if (m := re.search(pattern, ln))]
+        return [
+            m.group(1)
+            for i in ids
+            if (m := re.search(
+                rf"^\({i}\) .*\n(?:Input.*\n)?Arguments: (.*)$", plan, re.M
+            ))
+        ]
+
+    want = "SinglePartition" if k == 1 else rf"hashpartitioning\({part}#\d+, {k}\)"
+    repartitioned = any(
+        re.match(rf"{want}, REPARTITION_BY_NUM", a)
+        for a in args(r"\bExchange \((\d+)\)")
+    )
+    sorts = args(r"\bSort \((\d+)\)")
+    return (
+        repartitioned
+        and len(sorts) == 1
+        and re.findall(r"(\w+)#\d+L? ASC", sorts[0]) == list(keys)
+    )
 
 
 def main() -> None:
@@ -418,6 +448,36 @@ def main() -> None:
         ),
     }
 
+    # ---- compaction: the build's layout and fan-out ----------------------
+    # a second append, then a full fold of both segments: each base rewrite
+    # repartitions by its partition column to the build's task count,
+    # min(num_buckets, sized_parallelism(num_docs)), and sorts once, by its
+    # layout keys, so the partitioned writer adds no second Sort
+    lsm_client.update_index(
+        "lsm",
+        spark.createDataFrame(
+            [
+                (r[0], r[1], r[2], r[3], r[4] + " lsmedit2") if i % 7 == 0 else r
+                for i, r in enumerate(lsm_cur)
+            ],
+            C.CORPUS_SCHEMA,
+        ),
+    )
+    lsm_client.compact_index("lsm")
+    compact_k = min(8, B.sized_parallelism(spark, len(lsm_rows)))
+    compact_writes = _write_plans(spark)
+    compact_plans = {
+        sub: compact_writes.get(os.path.join(lsm_dir, sub) + ".compact-tmp", "")
+        for sub in B.LAYOUTS
+    }
+    compact_checks = {
+        f"compaction {sub} write: repartition({compact_k}, {part}) and one "
+        f"Sort on ({', '.join(keys)})": _layout_write(
+            compact_plans[sub], part, keys, compact_k
+        )
+        for sub, (part, keys) in B.LAYOUTS.items()
+    }
+
     # ---- semantic ANN probe over the vector store ------------------------
     # build_vector_ann partitions the chunk table by IVF cell; a probe
     # after an append update must (a) prune to the nprobe cell partitions,
@@ -628,6 +688,7 @@ def main() -> None:
         ("Dedup hot paths (banded MinHash + n-gram Jaccard, sf0.001)", dedup_checks),
         ("LSM live view (post-append-update scorer plan)", lsm_checks),
         ("Streaming upsert diff (foreachBatch merge, mode=upsert)", upsert_checks),
+        ("Full compaction (80 docs, num_buckets=8, two segments)", compact_checks),
         ("Semantic ANN probe (vector_ann, post-append-update)", sem_checks),
         ("Winners-fetch dynamic partition pruning (VERDICT r04 #5)", dpp_checks),
         ("Blocks engine content join (VERDICT r04 #3)", wand_content_checks),
@@ -639,7 +700,8 @@ def main() -> None:
             ok = ok and passed
     checks = {
         **checks, **batch_checks, **build_checks, **ann_checks, **dedup_checks,
-        **lsm_checks, **upsert_checks, **sem_checks, **dpp_checks,
+        **lsm_checks, **upsert_checks, **compact_checks, **sem_checks,
+        **dpp_checks,
         **wand_content_checks, **hot_checks,
     }
     lines += [
@@ -654,6 +716,12 @@ def main() -> None:
         "",
         "```",
         post_wplan.strip(),
+        "```",
+        "",
+        "## Compaction: postings write (final plan)",
+        "",
+        "```",
+        compact_plans[B.POSTINGS_DIR].strip(),
         "```",
         "",
         "## ANN SRP probe `explain(\"formatted\")`",
